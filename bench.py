@@ -415,12 +415,14 @@ def main() -> None:
         official_sf = os.path.realpath(SF_DIR) == os.path.realpath(
             "/root/testdata/sf0.1"
         )
-        detail_name = "BASELINE_DETAIL.json" if baseline else "BENCH_DETAIL.json"
+        # both suffixes when both differ (BENCH_DETAIL_sf1_c8.json): an
+        # sf-probe run at a low core count must not clobber the _c{N} record
+        detail_name = "BASELINE_DETAIL" if baseline else "BENCH_DETAIL"
+        if not official_sf:
+            detail_name += "_" + (os.path.basename(os.path.normpath(SF_DIR)) or "probe")
         if not default_cpus:
-            detail_name = detail_name.replace(".json", f"_c{int(CPUS)}.json")
-        elif not official_sf:
-            tag = os.path.basename(os.path.normpath(SF_DIR)) or "probe"
-            detail_name = detail_name.replace(".json", f"_{tag}.json")
+            detail_name += f"_c{int(CPUS)}"
+        detail_name += ".json"
         try:
             with open(os.path.join(repo, detail_name), "w") as f:
                 json.dump(detail, f, indent=1)

@@ -35,10 +35,7 @@ from symat_hbase_tools_spark.sources.catalog import (
     overwrite_table_in_place,
     resolve_table,
 )
-
-
-def _load_cells(spark, table: str):
-    return spark.read.parquet(resolve_table(table))
+from symat_hbase_tools_spark.sources.io import read_cells
 
 
 def _parse_bool(v) -> bool:
@@ -409,11 +406,11 @@ def main(argv: list[str] | None = None) -> int:
             ts = None
             if _parse_bool(args.override):
                 ts = args.timestamp if args.timestamp is not None else int(time.time() * 1000)
-            src = _load_cells(spark, args.sourceTable)
+            src = read_cells(spark, resolve_table(args.sourceTable))
             dst = (
                 src
                 if args.destinationTable == args.sourceTable
-                else _load_cells(spark, args.destinationTable)
+                else read_cells(spark, resolve_table(args.destinationTable))
             )
             new_dest, n = copy_row(src, dst, key, ts)
             if n == 0:
@@ -446,8 +443,8 @@ def main(argv: list[str] | None = None) -> int:
                 if args.repairTimestamp is not None
                 else int(time.time() * 1000)
             )
-            auth = _load_cells(spark, args.authoritativeTable)
-            replica = _load_cells(spark, args.replicaTable)
+            auth = read_cells(spark, resolve_table(args.authoritativeTable))
+            replica = read_cells(spark, resolve_table(args.replicaTable))
             repaired, changeset = repair(auth, replica, ts)
             from symat_hbase_tools_spark.sources.bloom import with_row_bloom
 
@@ -461,20 +458,18 @@ def main(argv: list[str] | None = None) -> int:
             return 0 if n_changes == 0 else 2
         if args.tool == "compact":
             from symat_hbase_tools_spark.operators.compaction import (
-                compaction_report,
-                major_compact,
+                major_compact_counted,
             )
-
-            cells = _load_cells(spark, args.table)
             from symat_hbase_tools_spark.sources.bloom import with_row_bloom
 
-            with_row_bloom(major_compact(cells).write.mode("overwrite")).parquet(
-                args.output
+            compacted, counters = major_compact_counted(
+                read_cells(spark, resolve_table(args.table))
             )
-            r = compaction_report(cells).collect()[0]
+            with_row_bloom(compacted.write.mode("overwrite")).parquet(args.output)
+            r = counters.get
             print(
                 f"CELLS_BEFORE={r['cells_before']} CELLS_AFTER={r['cells_after']} "
-                f"RECLAIMED={r['reclaimed']}"
+                f"RECLAIMED={r['cells_before'] - r['cells_after']}"
             )
             return 0
         if args.tool == "sql":
@@ -903,7 +898,7 @@ def main(argv: list[str] | None = None) -> int:
             if args.targetBytes < 1:
                 print("error: --targetBytes must be >= 1", file=sys.stderr)
                 return 1
-            cells = _load_cells(spark, args.table)
+            cells = read_cells(spark, resolve_table(args.table))
             report = split_points(cells, target_bytes=args.targetBytes).cache()
             # order by region_seq (the byte-tape order = HBase key order);
             # sorting the RENDERED strings would misplace escaped keys
@@ -939,7 +934,7 @@ def main(argv: list[str] | None = None) -> int:
                 df.write.mode("overwrite").parquet(args.output)
                 print(f"wrote {args.output}")
             return 0
-        cells = _load_cells(spark, args.table)
+        cells = read_cells(spark, resolve_table(args.table))
         report, counters = audit(cells)
         if _parse_bool(args.traceCells):
             report.show(100, truncate=False)

@@ -17,14 +17,21 @@ Scale shapes:
     a maintenance pass, not a read-path view.
   * expire_ttl — a narrow ts filter; pushes to the scan (parquet row-group
     stats prune whole files of expired data), no shuffle at all.
+
+Counters: ``cli compact`` prints CELLS_BEFORE/CELLS_AFTER/RECLAIMED from
+the job that writes the compacted table (``major_compact_counted``), the
+way CorruptRowsMR publishes its counters from the probe job itself — one
+scan, not the three a write plus ``compaction_report`` would take.
+``compaction_report`` stays the lazy query form of the same counters.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from symat_hbase_tools_spark.operators.kv import visible_cells
+from symat_hbase_tools_spark.operators.kv import latest_cells, visible_cells
+from symat_hbase_tools_spark.sources.io import read_cells
 
 
 def major_compact(cells: DataFrame) -> DataFrame:
@@ -32,6 +39,27 @@ def major_compact(cells: DataFrame) -> DataFrame:
     latest live Put per (row, family, qualifier) survives; shadowed
     versions, delete markers, and the data they masked are all dropped."""
     return visible_cells(cells)
+
+
+def major_compact_counted(cells: DataFrame) -> tuple[DataFrame, Observation]:
+    """``major_compact`` plus an Observation that the action running it
+    fills with ``cells_before`` and ``cells_after`` (read ``.get`` after
+    the action).
+
+    The counters are observed after the aggregate's shuffle, in the result
+    stage: Spark may apply a map stage's accumulator updates twice when it
+    re-runs that stage, a result stage's only once per partition.
+    ``cells_before`` sums the per-coordinate version counts the aggregate
+    carries; ``cells_after`` counts the coordinates whose latest cell is a
+    Put.
+    """
+    counters = Observation()
+    latest = latest_cells(cells, with_versions=True).observe(
+        counters,
+        F.coalesce(F.sum("n_versions"), F.lit(0)).alias("cells_before"),
+        F.count_if(F.col("type") == "Put").alias("cells_after"),
+    )
+    return latest.filter(F.col("type") == "Put").drop("n_versions"), counters
 
 
 def compaction_report(cells: DataFrame) -> DataFrame:
@@ -86,7 +114,7 @@ def compact_files(
     """
     import math
 
-    df = spark.read.parquet(src_path)
+    df = read_cells(spark, src_path)
     # Hadoop FS listing works for any scheme (local, HDFS, s3a, ...)
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()

@@ -86,7 +86,7 @@ def snapshot_as_of(cells: DataFrame, as_of_ts: int) -> DataFrame:
     return visible_cells(cells.filter(F.col("ts") <= int(as_of_ts)))
 
 
-def latest_cells(cells: DataFrame) -> DataFrame:
+def latest_cells(cells: DataFrame, with_versions: bool = False) -> DataFrame:
     """Latest-version-wins view over a versioned cells table.
 
     Implemented as ONE ``max_by(struct(ts,type,value), ordering)`` aggregate.
@@ -107,6 +107,9 @@ def latest_cells(cells: DataFrame) -> DataFrame:
     break on unsigned value bytes — the same total order the packed
     encoding produced, kept for determinism (``latest_cells_packed`` below
     is the parity witness).
+
+    ``with_versions`` adds ``n_versions``: how many cells (Put versions and
+    delete markers) the coordinate held, counted by the same aggregate.
     """
     ordering = F.struct(
         (
@@ -115,17 +118,19 @@ def latest_cells(cells: DataFrame) -> DataFrame:
         ).alias("k"),
         F.coalesce(F.col("value"), F.lit(b"")).alias("v"),
     )
-    won = cells.groupBy("row", "family", "qualifier").agg(
-        F.max_by(F.struct("ts", "type", "value"), ordering).alias("w")
-    )
-    return won.select(
+    aggs = [F.max_by(F.struct("ts", "type", "value"), ordering).alias("w")]
+    out = [
         "row",
         "family",
         "qualifier",
         F.col("w.ts").alias("ts"),
         F.col("w.type").alias("type"),
         F.col("w.value").alias("value"),
-    )
+    ]
+    if with_versions:
+        aggs.append(F.count(F.lit(1)).alias("n_versions"))
+        out.append("n_versions")
+    return cells.groupBy("row", "family", "qualifier").agg(*aggs).select(*out)
 
 
 def latest_cells_packed(cells: DataFrame) -> DataFrame:

@@ -6,6 +6,14 @@ columnar/row formats. Binary columns need care in text formats — CSV/JSON
 get the HBase-shell escaped rendering (functions/bytes_binary), so exported
 files are also human-readable the way HBase shell prints keys.
 
+Read contract for parquet cells tables (``read_cells``): the reader gets
+the fixed ``CELLS_SCHEMA``, so opening a table runs no Spark job (without a
+schema, Spark 4.1 launches a schema-merge job on every open, even with
+mergeSchema off). A pinned schema would read any other parquet table as
+all-NULL columns without error, so the driver first reads the footer of one
+data file and checks its columns against ``CELLS_SCHEMA`` — a missing, extra
+or mistyped column raises before any plan is built.
+
 Format guidance at scale (docstrings are the contract, tests enforce
 round-trips):
   * parquet — the default: columnar, predicate pushdown, column pruning.
@@ -17,6 +25,9 @@ for family-pruned reads.
 
 from __future__ import annotations
 
+import functools
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -24,6 +35,7 @@ from symat_hbase_tools_spark.functions.bytes_binary import (
     to_bytes_binary_col,
     to_string_binary_col,
 )
+from symat_hbase_tools_spark.sources.cells import CELLS_SCHEMA
 
 _BINARY_COLS = ("row", "qualifier", "value")
 
@@ -58,9 +70,80 @@ def write_cells(
         raise ValueError(f"unsupported format: {fmt}")
 
 
+#: footer key under which Spark's parquet writer stores the row schema (JSON)
+_SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
+
+
+@functools.lru_cache(maxsize=1)
+def _jvm_classes(jvm):
+    """JVM class handles the footer check uses, resolved once per gateway:
+    each package segment of ``jvm.org.apache...`` is one py4j round trip."""
+    return (
+        jvm.org.apache.hadoop.fs.Path,
+        jvm.org.apache.parquet.hadoop.ParquetFileReader,
+        jvm.org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter,
+        jvm.org.apache.spark.sql.internal.SQLConf,
+    )
+
+
+def _check_cells_footer(spark: SparkSession, path: str) -> None:
+    """Raise ``ValueError`` naming every column of the parquet table at
+    ``path`` that is missing from, extra to, or typed differently than
+    ``CELLS_SCHEMA``.
+
+    Reads one data file's footer on the driver through the Hadoop
+    FileSystem API (any scheme: local, hdfs://, s3a://). The schema is the
+    one Spark itself would infer: the writer's row metadata, else the
+    parquet schema converted by Spark's converter. Partition columns of a
+    ``<dir>/<col>=<value>/`` layout count as present. A path with no data
+    file is left to the reader (a missing path raises there; an empty
+    directory is an empty table).
+    """
+    Path, Reader, Converter, SQLConf = _jvm_classes(spark._jvm)
+    conf = spark._jsc.hadoopConfiguration()
+    root = Path(path)
+    fs = root.getFileSystem(conf)
+    pattern = path
+    for depth in range(len(CELLS_SCHEMA.fields)):  # one level per partition column
+        hits = fs.globStatus(Path(f"{pattern}/*.parquet"))
+        if len(hits):
+            status = hits[0]
+            break
+        pattern += "/*=*"
+    else:
+        if not fs.isFile(root):
+            return
+        status, depth = fs.getFileStatus(root), 0
+    meta = Reader.readFooter(conf, status).getFileMetaData()
+    row_json = meta.getKeyValueMetaData().get(_SPARK_ROW_METADATA)
+    if row_json is None:
+        row_json = Converter(SQLConf.get()).convert(meta.getSchema()).json()
+    found = {f["name"]: f["type"] for f in json.loads(row_json)["fields"]}
+    if depth:
+        part_dirs = status.getPath().toString().split("/")[-depth - 1 : -1]
+        # the reader types a partition column from the pinned schema
+        found.update((d.split("=", 1)[0], None) for d in part_dirs)
+    want = {f.name: f.dataType.jsonValue() for f in CELLS_SCHEMA.fields}
+    problems = [f"missing column {c!r}" for c in want if c not in found]
+    problems += [f"extra column {c!r}" for c in found if c not in want]
+    problems += [
+        f"column {c!r} is {t}, expected {want[c]}"
+        for c, t in found.items()
+        if c in want and t is not None and t != want[c]
+    ]
+    if problems:
+        raise ValueError(f"{path} is not a cells table: " + "; ".join(problems))
+
+
 def read_cells(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    if fmt in ("parquet", "orc"):
-        return spark.read.format(fmt).load(path)
+    """Open a cells table. Parquet gets the fixed ``CELLS_SCHEMA`` after
+    the footer check (module docstring): no Spark job runs. ORC keeps
+    Spark's schema inference."""
+    if fmt == "parquet":
+        _check_cells_footer(spark, path)
+        return spark.read.schema(CELLS_SCHEMA).parquet(path)
+    if fmt == "orc":
+        return spark.read.orc(path)
     schema = "row string, family string, qualifier string, ts long, type string, value string"
     if fmt == "json":
         return _unescape_binary(spark.read.schema(schema).json(path))

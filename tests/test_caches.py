@@ -51,19 +51,22 @@ def test_plan_cache_bounded(spark, tmp_path):
     entry._PLAN_CACHE.clear()
 
 
-def test_bench_headline_names_resolve():
-    """Every bench.py HEADLINE name must be a registered query (a typo here
-    would fail the per-round bench artifact, not CI, without this guard) and
-    oracle-paired (the embedded DuckDB control times the same names)."""
+def _load_bench():
     import importlib.util
-    import os
 
     spec = importlib.util.spec_from_file_location(
         "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
     )
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
+    return bench
 
+
+def test_bench_headline_names_resolve():
+    """Every bench.py HEADLINE name must be a registered query (a typo here
+    would fail the per-round bench artifact, not CI, without this guard) and
+    oracle-paired (the embedded DuckDB control times the same names)."""
+    bench = _load_bench()
     from symat_hbase_tools_spark.entry import ORACLE_SQL, QUERIES
 
     missing = [n for n in bench.HEADLINE if n not in QUERIES]
@@ -71,6 +74,18 @@ def test_bench_headline_names_resolve():
     unpaired = [n for n in bench.HEADLINE if n not in ORACLE_SQL]
     assert unpaired == [], unpaired
     assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)
+
+
+def test_bench_summary_keep_names_resolve():
+    """Every bench.py SUMMARY_KEEP name must be a registered query, listed
+    once: the fixed truncation order silently skips a typo or a retired
+    name, and a duplicate shifts every later name's priority."""
+    bench = _load_bench()
+    from symat_hbase_tools_spark.entry import QUERIES
+
+    missing = [n for n in bench.SUMMARY_KEEP if n not in QUERIES]
+    assert missing == [], missing
+    assert len(set(bench.SUMMARY_KEEP)) == len(bench.SUMMARY_KEEP)
 
 
 def test_dedup_pin_hygiene_bounded(spark):

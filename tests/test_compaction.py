@@ -91,3 +91,31 @@ def test_compact_files_coalesces_and_sorts(spark, customer, tmp_path):
     )
     collected = [bytes(r["row"]) for r in one_file.select("row").collect()]
     assert collected == sorted(collected)
+
+
+def test_cli_compact_counters_come_from_the_write(spark, customer, tmp_path, capsys):
+    """``cli compact`` prints the counters ``compaction_report`` computes,
+    observed by the write job itself, and writes ``major_compact``."""
+    import re
+
+    from symat_hbase_tools_spark.cli import main
+    from symat_hbase_tools_spark.sources.io import read_cells
+
+    src, out = str(tmp_path / "versioned"), str(tmp_path / "compacted")
+    # multi-file: shadowed versions and delete markers spread over 4 files
+    customer_cells_versioned_with_deletes(customer).repartition(4).write.parquet(src)
+    cells = read_cells(spark, src)
+    assert main(["compact", "--table", src, "--output", out]) == 0
+    printed = dict(
+        re.findall(r"(CELLS_BEFORE|CELLS_AFTER|RECLAIMED)=(\d+)", capsys.readouterr().out)
+    )
+    r = compaction_report(cells).collect()[0]
+    assert printed == {
+        "CELLS_BEFORE": str(r["cells_before"]),
+        "CELLS_AFTER": str(r["cells_after"]),
+        "RECLAIMED": str(r["reclaimed"]),
+    }
+    assert r["reclaimed"] > 0
+    written = read_cells(spark, out)
+    assert written.exceptAll(major_compact(cells)).count() == 0
+    assert major_compact(cells).exceptAll(written).count() == 0

@@ -146,3 +146,121 @@ def test_scratch_paths_are_process_scoped(spark):
     # the regionstore landed INSIDE the scratch, not at a fixed path
     stores = [p for p in os.listdir(root) if p.startswith("regionstore_")]
     assert stores, os.listdir(root)
+
+
+def _jobs_run(spark, action):
+    """(``action()``, the Spark jobs it launched), counted through a job
+    group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = action()
+    finally:
+        sc._jsc.clearJobGroup()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_cells_runs_no_job(spark, customer, tmp_path):
+    """Opening a cells table runs no Spark job (the schema is fixed and
+    checked against one footer on the driver); a point Get is one job."""
+    from symat_hbase_tools_spark.operators import kv
+    from symat_hbase_tools_spark.operators.bulkload import bulk_load_cells
+
+    path = str(tmp_path / "bulk")
+    bulk_load_cells(customer_cells(customer), path, 4)
+    cells, jobs = _jobs_run(spark, lambda: cio.read_cells(spark, path))
+    assert jobs == 0
+    get = kv.point_get(cells, b"cust#00000007")
+    table, jobs = _jobs_run(spark, get.toArrow)
+    assert jobs == 1
+    assert table.num_rows == 4
+
+
+def test_read_cells_checks_tables_of_other_writers(spark, tmp_path):
+    """A footer without Spark's row metadata (here written by pyarrow) is
+    checked through the parquet schema: cells pass, a mistyped ts fails."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def write(name, ts_type):
+        d = tmp_path / name
+        d.mkdir()
+        pq.write_table(
+            pa.table({
+                "row": pa.array([b"k"], pa.binary()),
+                "family": ["cf"],
+                "qualifier": pa.array([b"q"], pa.binary()),
+                "ts": pa.array([1], ts_type),
+                "type": ["Put"],
+                "value": pa.array([b"v"], pa.binary()),
+            }),
+            str(d / "part-0.parquet"),
+        )
+        return str(d)
+
+    back = cio.read_cells(spark, write("cells", pa.int64()))
+    assert cells_set(back) == {(b"k", "cf", b"q", 1, "Put", b"v")}
+    with pytest.raises(ValueError, match="'ts'"):
+        cio.read_cells(spark, write("ts_int", pa.int32()))
+
+
+@pytest.fixture(scope="module")
+def wrong_tables(spark, customer, tmp_path_factory):
+    """{offending column: table dir}: a ``spark.range`` table and a cells
+    table whose ``ts`` is int."""
+    root = tmp_path_factory.mktemp("wrong_tables")
+    spark.range(10).write.parquet(str(root / "range"))
+    customer_cells(customer).withColumn(
+        "ts", (F.col("ts") - CELL_TS).cast("int")
+    ).write.parquet(str(root / "ts_int"))
+    return {"id": str(root / "range"), "ts": str(root / "ts_int")}
+
+
+@pytest.mark.parametrize("column", ["id", "ts"])
+def test_read_cells_rejects_non_cells_table(spark, wrong_tables, column):
+    """A pinned schema would read these as all-NULL columns; the footer
+    check raises and names the column instead."""
+    with pytest.raises(ValueError, match=f"'{column}'"):
+        cio.read_cells(spark, wrong_tables[column])
+
+
+@pytest.mark.parametrize("column", ["id", "ts"])
+def test_cli_rejects_non_cells_table(spark, wrong_tables, tmp_path, capsys, column):
+    import os
+
+    from symat_hbase_tools_spark.cli import main
+
+    table = wrong_tables[column]
+    out = str(tmp_path / "out")
+
+    def files():
+        return {
+            f: os.stat(os.path.join(table, f)).st_mtime_ns for f in os.listdir(table)
+        }
+
+    before = files()
+    argvs = [
+        ["copy-row", "--sourceTable", table, "--destTable", table,
+         "--rowKeyByteString", "cust#00000007", "--override", "true",
+         "--timestampToUse", "1786000000000"],
+        ["corrupt-rows", "--table", table, "--output", out],
+        ["compact", "--table", table, "--output", out],
+        ["repair", "--authoritativeTable", table, "--replicaTable", table,
+         "--output", out],
+        ["split-points", "--table", table, "--targetBytes", "1000"],
+    ]
+    for argv in argvs:
+        assert main(argv) != 0, argv[0]
+        err = capsys.readouterr().err
+        assert "is not a cells table" in err and f"'{column}'" in err, argv[0]
+    # the failed in-place copy-row left the table as it was
+    assert files() == before
+    parent = os.path.dirname(table)
+    name = os.path.basename(table)
+    assert [
+        s for s in os.listdir(parent)
+        if s.startswith((f"{name}.inflight-", f"{name}.replaced-"))
+    ] == []
