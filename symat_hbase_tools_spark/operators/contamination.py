@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from symat_hbase_tools_spark.functions.text import shingle_hashes
-from symat_hbase_tools_spark.operators.dedup import _doc_shingles, _pin
+from symat_hbase_tools_spark.operators.dedup import _doc_shingles
+from symat_hbase_tools_spark.plans.serve_cache import pin
 
 
 def benchmark_contamination(
@@ -180,7 +181,7 @@ def contamination_overlap_census(
     # by the HOF plan gate — it had been masked by a leaked minhash cache
     # entry for exactly this subplan, which the round-16 pin hygiene
     # stopped leaking).
-    hs = _pin(
+    hs = pin(
         _doc_shingles(spark, sf_dir, n).select(
             "doc_id", shingle_hashes(F.col("sh")).alias("hs")
         ),
@@ -247,8 +248,6 @@ def benchmark_contamination_fuzzy(
     training doc with its best-matching benchmark doc (max jaccard,
     bench_doc tie-break), jaccard >= threshold.
     """
-    from pyspark import StorageLevel
-
     from symat_hbase_tools_spark.operators.dedup import (
         NUM_BANDS,
         NUM_HASHES,
@@ -256,14 +255,14 @@ def benchmark_contamination_fuzzy(
     )
 
     rows_per_band = NUM_HASHES // NUM_BANDS
-    # persist + filter-above-the-boundary: the minhash_lsh_pairs idiom
+    # pin + filter-above-the-boundary: the minhash_lsh_pairs idiom
     # (the pushed-down size filter would re-inline the shingle HOF)
-    hashed = (
-        _doc_shingles(spark, sf_dir, n)
-        .select("doc_id", shingle_hashes(F.col("sh")).alias("hs"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-        .filter(F.size("hs") > 0)
-    )
+    hashed = pin(
+        _doc_shingles(spark, sf_dir, n).select(
+            "doc_id", shingle_hashes(F.col("sh")).alias("hs")
+        ),
+        "contamination_fuzzy_hashed",
+    ).filter(F.size("hs") > 0)
     sig = _minhash_sig_from_hashed(hashed, NUM_HASHES)
     bands = F.array(
         *[

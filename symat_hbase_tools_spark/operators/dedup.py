@@ -84,37 +84,7 @@ def bow_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from symat_hbase_tools_spark.plans.partitioning import scan_fanout as _scan_fanout
-
-#: persisted intermediates outstanding from PREVIOUS dedup-operator calls
-#: (serve-many hygiene, plans/serve_cache.py — the _INTERVAL_CACHES pattern),
-#: keyed by PIN SITE: each pinning helper releases its own slot's previous
-#: pin immediately before pinning the new one, so a long-lived session holds
-#: at most one outstanding table per pin site. Release lives at the PIN SITE,
-#: never at an operator entry point (round-16 lesson, caught by the HOF plan
-#: gate): Spark's CacheManager matches cache entries by analyzed plan, and
-#: several operators pin the SAME shared subplan (_doc_shingles serves
-#: incremental_dedup AND the contamination family; _window_hashes_of serves
-#: the whole span family) — an entry-point release therefore removed the
-#: InMemoryRelation pushdown barrier from another operator's plan, and
-#: Catalyst re-inlined the interpreted shingle HOF into a Filter (the
-#: round-9 double-eval class). Release-then-repin at the pin site is
-#: self-healing: when the released entry's plan is shared, the immediate
-#: re-pin restores the cache entry before any other plan can be analyzed.
-_DEDUP_CACHES: dict = {}
-
-
-def _pin(df: DataFrame, slot: str) -> DataFrame:
-    """Release ``slot``'s previous pin, then persist(MEMORY_AND_DISK) and
-    register the new one (see _DEDUP_CACHES)."""
-    from pyspark import StorageLevel
-
-    from symat_hbase_tools_spark.plans.serve_cache import release_all
-
-    caches = _DEDUP_CACHES.setdefault(slot, [])
-    release_all(caches)
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    caches.append(df)
-    return df
+from symat_hbase_tools_spark.plans.serve_cache import pin
 
 
 def _doc_shingles(
@@ -141,7 +111,7 @@ def _doc_shingles(
         "doc_id", shingles_from_words(F.col("words"), n=n).alias("sh")
     )
     if persist:
-        out = _pin(out, "doc_shingles")
+        out = pin(out, "doc_shingles")
     return out
 
 
@@ -207,7 +177,7 @@ def _intersection_pairs(
     # hot census + anti-join left side reading the UPSTREAM shingle-array
     # cache, which cost a second corpus-sized cache; this shape needs only
     # the 16 B/row exploded table. 10x-probe evidence in OPTIMIZATION_r16.md.
-    sh = _pin(sh, "intersection_pairs")
+    sh = pin(sh, "intersection_pairs")
     if max_shingle_df is not None:
         hot = sh.groupBy("s").count().filter(F.col("count") > max_shingle_df)
         sh = sh.join(F.broadcast(hot.select("s")), "s", "left_anti")
@@ -470,7 +440,7 @@ def minhash_lsh_pairs(
     # runs TWICE per row (measured 0.3 -> 5.4 s at sf0.1, round 9). The
     # InMemoryRelation is a pushdown barrier, so the filter is one cheap
     # size() over cached arrays.
-    hashed = _pin(
+    hashed = pin(
         _doc_shingles(spark, sf_dir, n).select(
             "doc_id", shingle_hashes(F.col("sh")).alias("hs")
         ),
@@ -626,7 +596,7 @@ def dup_span_census(
     # the work is inherently O(tokens * k) characters either way; xxhash64
     # keeps the grouping key fixed-width (the hash never leaves the plan,
     # so it need not match the oracle's md5 — only group identically).
-    wins = _pin(
+    wins = pin(
         words.select(
             "doc_id",
             F.explode(
@@ -699,7 +669,7 @@ def _window_hashes_of(docs: DataFrame, k: int, persist: bool = False) -> DataFra
         ).alias("p0", "h"),
     ).select("doc_id", (F.col("p0") + 1).alias("pos"), "h")
     if persist:
-        out = _pin(out, "window_hashes")
+        out = pin(out, "window_hashes")
     return out
 
 
@@ -1224,7 +1194,7 @@ def simhash_portable_pairs(
 
     # persist: one 24-byte row per doc, referenced by BOTH sides of the
     # band self-join — without it the shingle+md5+vote pipeline runs twice
-    fps = _pin(
+    fps = pin(
         docs.mapInPandas(
             fp_kernel, schema="doc_id long, fp_lo long, fp_hi long"
         ),
@@ -1668,7 +1638,7 @@ def prefix_filter_pairs(
         # forced prefix route on a cold corpus (route="prefix" — tests pin
         # this to keep the no-demotion canonical order covered): hash order,
         # built map-only per row — no exchange before the prefix join
-        per_doc = _pin(
+        per_doc = pin(
             _doc_shingles(spark, sf_dir, n)
             .select(
                 "doc_id",
@@ -1691,7 +1661,7 @@ def prefix_filter_pairs(
                 "hot", F.lit(1)
             )
         )
-        per_doc = _pin(
+        per_doc = pin(
             sh.join(hot_df, "s", "left")
             .groupBy("doc_id")
             .agg(

@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from symat_hbase_tools_spark.plans.serve_cache import pin
 from symat_hbase_tools_spark.sources.tables import load_table
 
 CHECKSUM_MOD = 997
@@ -351,19 +352,6 @@ def payload_dedup(records: DataFrame) -> DataFrame:
 PHASH_ROWS = 8
 PHASH_COLS = 9
 
-#: fingerprint-table caches outstanding from near_dup_pairs calls; each
-#: new call releases the previous call's (bounded at one call's worth)
-_PHASH_FP_CACHES: list = []
-
-
-def _release_phash_caches() -> None:
-    """Serve-many hygiene: drop the previous call's persisted fingerprint
-    table before pinning a new one (plans/serve_cache.py)."""
-    from symat_hbase_tools_spark.plans.serve_cache import release_all
-
-    release_all(_PHASH_FP_CACHES)
-
-
 def perceptual_hashes(records: DataFrame) -> DataFrame:
     """(doc_id, payload) -> (doc_id, fp) 64-bit dHash over the byte raster.
 
@@ -413,18 +401,11 @@ def near_dup_pairs(records: DataFrame, max_hamming: int = 3) -> DataFrame:
     4x16-bit band candidate generator (dedup.banded_hamming_pairs — one
     24-byte row per doc per band, band-key self-join, distinct + popcount
     filter). 100 TB posture identical to SimHash's."""
-    from pyspark import StorageLevel
-
     from symat_hbase_tools_spark.operators.dedup import banded_hamming_pairs
 
-    # persist: one 16-byte row per doc feeds BOTH sides of the band join;
-    # without it the payload scan + hash kernel runs twice. Serve-many
-    # hygiene (the IVF probe-table discipline): release the previous
-    # call's cache first so repeated calls in a long-lived session never
-    # accumulate pinned fingerprint tables.
-    _release_phash_caches()
-    fps = perceptual_hashes(records).persist(StorageLevel.MEMORY_AND_DISK)
-    _PHASH_FP_CACHES.append(fps)
+    # pin: one 16-byte row per doc feeds BOTH sides of the band join;
+    # without it the payload scan + hash kernel runs twice
+    fps = pin(perceptual_hashes(records), "phash_fps")
     return banded_hamming_pairs(fps, max_hamming=max_hamming)
 
 

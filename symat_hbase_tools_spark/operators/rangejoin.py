@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from symat_hbase_tools_spark.operators.relational import SESSION_GAP_US
 from symat_hbase_tools_spark.plans.ranking import ordered_prefix_sum
+from symat_hbase_tools_spark.plans.serve_cache import pin
 from symat_hbase_tools_spark.sources.tables import load_table
 
 #: default grid width for the micro-epoch axis: 6 hours. Session intervals
@@ -37,20 +38,6 @@ from symat_hbase_tools_spark.sources.tables import load_table
 #: rows per interval while the bucket key stays selective; residual bucket
 #: skew (everyone's Monday morning) is AQE skew-join territory.
 DEFAULT_BUCKET_US = 6 * 3600 * 1_000_000
-
-
-#: interval-table caches outstanding from events_session_window_hits
-#: calls; each new call releases the previous call's (bounded at one)
-_INTERVAL_CACHES: list = []
-
-
-def _release_interval_caches() -> None:
-    """Serve-many hygiene (the IVF probe-table discipline): drop the
-    previous call's persisted interval table before pinning a new one
-    (plans/serve_cache.py)."""
-    from symat_hbase_tools_spark.plans.serve_cache import release_all
-
-    release_all(_INTERVAL_CACHES)
 
 
 #: replication ceiling for the WORST interval under an autotuned grid:
@@ -111,11 +98,7 @@ def range_bucket_join(
     if bucket_width is None:
         sl = intervals.storageLevel
         if not (sl.useMemory or sl.useDisk):
-            from pyspark import StorageLevel
-
-            _release_interval_caches()
-            intervals = intervals.persist(StorageLevel.MEMORY_AND_DISK)
-            _INTERVAL_CACHES.append(intervals)
+            intervals = pin(intervals, "session_intervals")
         bucket_width = (
             autotune_bucket_width(intervals, lo_col, hi_col)
             or DEFAULT_BUCKET_US
@@ -193,8 +176,6 @@ def events_session_window_hits(
     then a partial-aggregated count per purchase. The DuckDB oracle runs
     the naive inequality join (its IEJoin handles small scales); the
     engine never does."""
-    from pyspark import StorageLevel
-
     events = load_table(spark, sf_dir, "events")
     purchases = events.filter(F.col("event_type") == "purchase").select(
         "event_id", F.unix_micros(F.col("ts")).alias("t_us")
@@ -207,12 +188,9 @@ def events_session_window_hits(
     )
     if bucket_width is None:
         # the interval table feeds BOTH the autotune census and the join;
-        # persist so the sessionization shuffle runs once, with the
-        # serve-many release discipline (previous call's cache dropped —
-        # same hygiene as the IVF probe tables)
-        _release_interval_caches()
-        ivals = ivals.persist(StorageLevel.MEMORY_AND_DISK)
-        _INTERVAL_CACHES.append(ivals)
+        # pin so the sessionization shuffle runs once (one slot shared
+        # with range_bucket_join's autotune pin)
+        ivals = pin(ivals, "session_intervals")
     hits = range_bucket_join(
         purchases, ivals, "t_us", "start_us", "end_us", bucket_width
     )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from symat_hbase_tools_spark.functions.vectors import as_double, cosine
+from symat_hbase_tools_spark.plans.serve_cache import pin
 from symat_hbase_tools_spark.sources.tables import load_table
 
 DIM = 64
@@ -1836,20 +1837,6 @@ def ivf_index_rebalance(
     ivf_index_write_stats(spark, index_dir, n_assign=n_assign)
 
 
-#: probe-table caches outstanding from ann_ivf_query / ann_ivfpq_query
-#: calls; each new call releases the previous call's cache (bounded at
-#: one call's worth)
-_IVF_PROBE_CACHES: list = []
-
-
-def _release_probe_caches() -> None:
-    """Serve-many hygiene shared by the persisted IVF and IVF-PQ query
-    paths: release the PREVIOUS call's probe cache before persisting a
-    new one (plans/serve_cache.py has the rationale)."""
-    from symat_hbase_tools_spark.plans.serve_cache import release_all
-
-    release_all(_IVF_PROBE_CACHES)
-
 #: per-process memo of the index relations (the DataFrame handle, NOT the
 #: data): re-issuing spark.read.parquet per query re-runs the parallel
 #: leaf-file LISTING job — at 1414 cell directories that is a 1414-task
@@ -1934,10 +1921,6 @@ def _ivf_query_impl(
                 out["ql"] = pdf["ql"].repeat(n_probe)
             yield pd.DataFrame(out)
 
-    from pyspark import StorageLevel
-
-    _release_probe_caches()
-
     # persist: the probe table is referenced TWICE (the probed-cell
     # collect below and the cogroup) — without it the query scan + probe
     # kernel run twice per call, and a NONDETERMINISTIC queries plan
@@ -1957,12 +1940,10 @@ def _ivf_query_impl(
         probe_schema = (
             "query_id long, qe array<double>, cell int, ql long"
         )
-    q = (
-        q_src.select(*q_cols)
-        .mapInPandas(probes_for, schema=probe_schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    q = pin(
+        q_src.select(*q_cols).mapInPandas(probes_for, schema=probe_schema),
+        "ivf_probe",
     )
-    _IVF_PROBE_CACHES.append(q)
     # O(n_cells) driver state — the probed-cell list prunes index
     # directories at scan time (static partition pruning; cogroup cannot
     # trigger DPP the way the old join could, so prune explicitly)
@@ -3590,21 +3571,14 @@ def ann_ivfpq_query(
                 }
             )
 
-    from pyspark import StorageLevel
-
-    # same serve-many hygiene as ann_ivf_query: drop the previous
-    # call's persisted probe table before pinning a new one
-    _release_probe_caches()
-
-    q = (
+    # one probe slot shared with ann_ivf_query: one outstanding table
+    q = pin(
         queries.select(
             F.col("vec_id").alias("query_id"),
             as_double(F.col("embedding")).alias("qe"),
-        )
-        .mapInPandas(probes_for, schema="query_id long, qe array<double>, cell int")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ).mapInPandas(probes_for, schema="query_id long, qe array<double>, cell int"),
+        "ivf_probe",
     )
-    _IVF_PROBE_CACHES.append(q)
     probed = [r["cell"] for r in q.select("cell").distinct().collect()]
     codes_rel = _ivf_relation(spark, index_dir, "pq_codes").filter(
         F.col("cell").isin(probed)
@@ -3821,18 +3795,13 @@ def ann_ivfbq_query(
                 }
             )
 
-    from pyspark import StorageLevel
-
-    _release_probe_caches()
-    q = (
+    q = pin(
         queries.select(
             F.col("vec_id").alias("query_id"),
             as_double(F.col("embedding")).alias("qe"),
-        )
-        .mapInPandas(probes_for, schema="query_id long, qe array<double>, cell int")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ).mapInPandas(probes_for, schema="query_id long, qe array<double>, cell int"),
+        "ivf_probe",
     )
-    _IVF_PROBE_CACHES.append(q)
     probed = [r["cell"] for r in q.select("cell").distinct().collect()]
     codes_rel = _ivf_relation(spark, index_dir, "bq_codes").filter(
         F.col("cell").isin(probed)

@@ -21,28 +21,8 @@ from symat_hbase_tools_spark.functions.text import (
     token_count,
     tokens,
 )
+from symat_hbase_tools_spark.plans.serve_cache import pin
 from symat_hbase_tools_spark.sources.tables import load_table
-
-#: persisted intermediates outstanding from previous text-operator calls
-#: (serve-many hygiene, plans/serve_cache.py — the _INTERVAL_CACHES pattern),
-#: keyed by PIN SITE; release happens at the pin site right before the new
-#: pin — see dedup._DEDUP_CACHES for the round-16 shared-plan lesson.
-_TEXT_CACHES: dict = {}
-
-
-def _pin(df: DataFrame, slot: str) -> DataFrame:
-    """Release ``slot``'s previous pin, then persist(MEMORY_AND_DISK) and
-    register the new one (see _TEXT_CACHES)."""
-    from pyspark import StorageLevel
-
-    from symat_hbase_tools_spark.plans.serve_cache import release_all
-
-    caches = _TEXT_CACHES.setdefault(slot, [])
-    release_all(caches)
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    caches.append(df)
-    return df
-
 
 def lang_id_expr(text: F.Column) -> F.Column:
     """Rule-based language ID: Unicode-script presence, then stopword cues.
@@ -506,7 +486,7 @@ def bm25_search(
     # in pipeline.py); a corpus-sized token-array pin measured the same win,
     # so the tiny doclen cache is kept (guide §5: cache competes with
     # execution memory).
-    doclen = _pin(
+    doclen = pin(
         docs.select("doc_id", token_count(F.col("text")).alias("dl")),
         "bm25_doclen",
     )
@@ -851,11 +831,6 @@ def curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: persisted ranged tables outstanding from token_budget_select calls;
-#: each new call releases the previous call's cache (bounded at one)
-_TBS_PERSIST_CACHE: list = []
-
-
 def token_budget_select(
     spark: SparkSession,
     sf_dir: str,
@@ -892,19 +867,6 @@ def token_budget_select(
     Driver state O(partitions); identical result on 1 or 1000 executors
     because step 1 pins the order.
     """
-    from pyspark import StorageLevel
-
-    # serve-many hygiene (the _IVF_PROBE_CACHES pattern): release the
-    # previous call's persisted ranged table — bench repeats and the CLI
-    # action's multiple references would otherwise pin one dead cached
-    # copy of the scored corpus per call for the life of the session
-    while _TBS_PERSIST_CACHE:
-        prev = _TBS_PERSIST_CACHE.pop()
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:
-            pass
-
     q = quality_classifier(spark, sf_dir)
     order = [F.col("score").desc(), F.col("doc_id").asc()]
     ranged = q.repartitionByRange(*order).withColumn(
@@ -915,12 +877,14 @@ def token_budget_select(
         .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    local = (
-        ranged.withColumn("_rn", F.row_number().over(w))
-        .withColumn("_cum_local", F.sum("n_tokens").over(w))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # pinned: bench repeats and the CLI action's multiple references would
+    # otherwise leave one dead cached copy of the scored corpus per call
+    local = pin(
+        ranged.withColumn("_rn", F.row_number().over(w)).withColumn(
+            "_cum_local", F.sum("n_tokens").over(w)
+        ),
+        "token_budget_ranked",
     )
-    _TBS_PERSIST_CACHE.append(local)
     counts = local.groupBy("_pid").agg(
         F.count(F.lit(1)).alias("_cnt"), F.sum("n_tokens").alias("_tok")
     )

@@ -24,30 +24,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from symat_hbase_tools_spark.operators.relational import money_sum
+from symat_hbase_tools_spark.plans.serve_cache import pin
 from symat_hbase_tools_spark.sources.tables import load_table
-
-#: persisted intermediates outstanding from previous timeseries-operator
-#: calls (serve-many hygiene, plans/serve_cache.py — the _INTERVAL_CACHES
-#: pattern), keyed by PIN SITE: the pinning site releases its own previous
-#: pin right before pinning anew, bounding outstanding cache at one table
-#: per site. Release lives at the pin site, never at an operator entry —
-#: see dedup._DEDUP_CACHES for the round-16 shared-plan lesson.
-_TS_CACHES: dict = {}
-
-
-def _pin(df: DataFrame, slot: str) -> DataFrame:
-    """Release ``slot``'s previous pin, then persist(MEMORY_AND_DISK) and
-    register the new one (see _TS_CACHES)."""
-    from pyspark import StorageLevel
-
-    from symat_hbase_tools_spark.plans.serve_cache import release_all
-
-    caches = _TS_CACHES.setdefault(slot, [])
-    release_all(caches)
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    caches.append(df)
-    return df
-
 
 #: funnel stage sequence (strictly-increasing event times between stages)
 FUNNEL_STAGES = ("view", "click", "purchase")
@@ -163,7 +141,7 @@ def events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # O(hours x types) rows, orders of magnitude below the events table;
     # probe-scale timing is neutral (the sf1 events scan costs ~20 ms) —
     # the win is the dominant-term scan count at real scale, 3 -> 1.
-    hourly = _pin(
+    hourly = pin(
         events.groupBy(hour.alias("hour_epoch"), F.col("event_type")).agg(
             F.count(F.lit(1)).alias("n"),
             F.max_by("value", ord_key).alias("close"),
@@ -719,7 +697,7 @@ def events_type_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the filled series is BOTH self-join sides; Spark does not
     # dedupe common subplans (round-3 advisory — without this the events
     # scan + hourly aggregate + spine + fill window run twice per action)
-    filled = _pin(
+    filled = pin(
         events_gap_fill(spark, sf_dir).select(
             "hour_epoch", "event_type", F.col("n_events").alias("n")
         ),

@@ -51,6 +51,21 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _driver_memory() -> str:
+    """$SPARK_DRIVER_MEMORY, else a third of physical memory capped at 48g:
+    an unbounded heap on a small host lets a long local run's JVM grow past
+    the machine and get OOM-killed."""
+    mem = os.environ.get("SPARK_DRIVER_MEMORY")
+    if mem:
+        return mem
+    try:
+        with open("/proc/meminfo") as f:
+            total_mb = int(f.readline().split()[1]) // 1024
+    except (OSError, ValueError, IndexError):
+        return "48g"
+    return f"{min(48 * 1024, total_mb // 3)}m"
+
+
 def get_spark(
     app_name: str = "symat-hbase-tools-spark",
     cpus: str | int | None = None,
@@ -71,7 +86,7 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

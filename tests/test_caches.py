@@ -12,8 +12,8 @@ from symat_hbase_tools_spark import entry
 from tests.conftest import SF_DIR
 
 
-def _copy_sf(tmp_path):
-    d = str(tmp_path / "sf")
+def _copy_sf(tmp_path, name="sf"):
+    d = str(tmp_path / name)
     os.makedirs(d)
     for f in os.listdir(SF_DIR):
         if f.endswith(".parquet"):
@@ -93,14 +93,16 @@ def test_dedup_pin_hygiene_bounded(spark):
     most ONE outstanding pinned table per pin site — previous calls' pins
     are released at the site before the new pin (plans/serve_cache.py)."""
     from symat_hbase_tools_spark.operators import dedup
+    from symat_hbase_tools_spark.plans.serve_cache import outstanding
 
     for _ in range(3):
         dedup.ngram_jaccard_pairs(spark, SF_DIR).collect()
         dedup.containment_pairs(spark, SF_DIR).collect()
-    assert dedup._DEDUP_CACHES, "expected pinned slots to be registered"
-    for slot, caches in dedup._DEDUP_CACHES.items():
-        assert len(caches) <= 1, (
-            f"slot {slot!r} accumulated {len(caches)} pins — release-"
+    pins = outstanding()
+    assert "intersection_pairs" in pins, "expected pinned slots to be registered"
+    for slot, n in pins.items():
+        assert n <= 1, (
+            f"slot {slot!r} accumulated {n} pins — release-"
             "before-pin hygiene broken"
         )
 
@@ -123,3 +125,108 @@ def test_shared_plan_pin_release_keeps_pushdown_barrier(spark):
     dedup.incremental_dedup(spark, SF_DIR).collect()
     assert_no_hof_in_filters(df)
     assert df.count() > 0
+
+
+def _has_cached_data(df) -> bool:
+    return "InMemoryRelation" in df._jdf.queryExecution().withCachedData().toString()
+
+
+def test_pin_refcount_keeps_shared_plan_cached(spark):
+    """Spark's CacheManager keys entries by analyzed plan, so two sites that
+    pin the same plan share ONE entry: re-pinning one site must not drop the
+    entry the other site still holds (that would strip its pushdown
+    barrier). The last holder's release unpersists it."""
+    from symat_hbase_tools_spark.plans.serve_cache import outstanding, pin
+
+    def shared():
+        return spark.range(50).selectExpr("id * 7 AS x")
+
+    # (plans are checked only after the re-pin: a DataFrame memoizes its
+    # cache-substituted plan the first time it is planned)
+    pin(shared(), "refcount_test_a")
+    b = pin(shared(), "refcount_test_b")
+    pin(spark.range(3), "refcount_test_a")
+    assert _has_cached_data(b), "re-pinning site A dropped site B's entry"
+    assert _has_cached_data(shared())
+    assert b.count() == 50
+    # B is now the last holder: re-pinning it releases the shared entry
+    pin(spark.range(4), "refcount_test_b")
+    assert not _has_cached_data(shared())
+    pins = outstanding()
+    assert pins["refcount_test_a"] == pins["refcount_test_b"] == 1
+
+
+def test_serve_many_pins_bounded_across_families(spark, tmp_path):
+    """Every pin family stays bounded in a long-lived session: three rounds
+    of one pinning operator per module, each result collected, hold at most
+    one pin per site, and the SparkContext's persistent RDDs do not grow
+    between the second and the third round. Each round reads its own copy
+    of the tables, so every call pins a NEW plan (re-persisting an
+    identical plan is a CacheManager no-op and could not show a leak)."""
+    from symat_hbase_tools_spark.operators import (
+        contamination,
+        dedup,
+        multimodal,
+        rangejoin,
+        text_analysis,
+        timeseries,
+    )
+    from symat_hbase_tools_spark.plans.serve_cache import outstanding
+
+    ops = [
+        dedup.ngram_jaccard_pairs,
+        timeseries.events_gap_fill,
+        text_analysis.bm25_search,
+        text_analysis.token_budget_select,
+        multimodal.multimodal_near_dup,
+        rangejoin.events_session_window_hits,
+        contamination.benchmark_contamination_fuzzy,
+    ]
+    persistent = []
+    for r in range(3):
+        sf = _copy_sf(tmp_path, f"sf{r}")
+        for op in ops:
+            op(spark, sf).collect()
+        persistent.append(spark.sparkContext._jsc.getPersistentRDDs().size())
+    pins = outstanding()
+    for site in (
+        "intersection_pairs",
+        "gapfill_hourly",
+        "bm25_doclen",
+        "token_budget_ranked",
+        "phash_fps",
+        "session_intervals",
+        "contamination_fuzzy_hashed",
+    ):
+        assert pins.get(site) == 1, (site, pins)
+    assert all(n <= 1 for n in pins.values()), pins
+    assert persistent[2] <= persistent[1], persistent
+
+
+def test_no_hand_rolled_pin_registries():
+    """One pin facility: outside plans/serve_cache.py no module may define
+    its own ``_pin``, call ``release_all``, or keep a module-level
+    ``*_CACHES`` / ``*_PERSIST_CACHE`` persist registry."""
+    import re
+
+    import symat_hbase_tools_spark
+
+    root = os.path.dirname(symat_hbase_tools_spark.__file__)
+    allowed = os.path.join(root, "plans", "serve_cache.py")
+    banned = re.compile(
+        r"^[ \t]*def _pin\(|\brelease_all\b|^\w*(_CACHES|_PERSIST_CACHE)\s*[:=]",
+        re.M,
+    )
+    offenders = []
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            if not f.endswith(".py") or path == allowed:
+                continue
+            with open(path) as fh:
+                src = fh.read()
+            offenders += [
+                f"{os.path.relpath(path, root)}: {m.group(0).strip()}"
+                for m in banned.finditer(src)
+            ]
+    assert offenders == [], offenders

@@ -527,6 +527,7 @@ def test_ivf_caches_survive_session_identity_changes(spark, tmp_path):
     import os
 
     import symat_hbase_tools_spark.operators.similarity as S
+    from symat_hbase_tools_spark.plans.serve_cache import outstanding, pin
     from symat_hbase_tools_spark.sources.tables import load_table
 
     idx = str(tmp_path / "idx")
@@ -534,10 +535,19 @@ def test_ivf_caches_survive_session_identity_changes(spark, tmp_path):
     queries = load_table(spark, SF_DIR, "embeddings").orderBy("vec_id").limit(5)
 
     class DeadProbeCache:
+        released = False
+
+        def persist(self, level):
+            return self
+
+        def semanticHash(self):
+            return -1
+
         def unpersist(self, blocking=False):
+            DeadProbeCache.released = True
             raise RuntimeError("Cannot call methods on a stopped SparkContext")
 
-    S._IVF_PROBE_CACHES.append(DeadProbeCache())
+    pin(DeadProbeCache(), "ivf_probe")
     cent_path = os.path.abspath(os.path.join(idx, "centroids"))
     dead_key = ("application_from_a_stopped_session", cent_path)
     S._IVF_RELATION_CACHE[dead_key] = object()  # not a usable DataFrame
@@ -545,9 +555,9 @@ def test_ivf_caches_survive_session_identity_changes(spark, tmp_path):
     got = S.ann_ivf_query(spark, idx, queries, k=3, n_probe=2).collect()
 
     assert len(got) > 0
-    assert not S._IVF_PROBE_CACHES or all(
-        not isinstance(c, DeadProbeCache) for c in S._IVF_PROBE_CACHES
-    )
+    # the dead entry was released from the probe slot (its throw swallowed)
+    assert DeadProbeCache.released
+    assert outstanding()["ivf_probe"] == 1
     assert dead_key not in S._IVF_RELATION_CACHE
     live_key = (spark.sparkContext.applicationId, cent_path)
     assert live_key in S._IVF_RELATION_CACHE
@@ -1359,6 +1369,7 @@ def test_serve_many_probe_cache_bounded_across_both_paths(spark, tmp_path):
     tables — each call releases the previous call's cache (bounded at ONE
     outstanding entry), whichever path persisted it."""
     import symat_hbase_tools_spark.operators.similarity as S
+    from symat_hbase_tools_spark.plans.serve_cache import outstanding
     from symat_hbase_tools_spark.sources.tables import load_table
 
     idx = str(tmp_path / "idx")
@@ -1370,7 +1381,7 @@ def test_serve_many_probe_cache_bounded_across_both_paths(spark, tmp_path):
         fn = S.ann_ivf_query if i % 2 == 0 else S.ann_ivfpq_query
         rows = fn(spark, idx, queries, k=3, n_probe=2).collect()
         assert len(rows) > 0
-        assert len(S._IVF_PROBE_CACHES) <= 1, (i, S._IVF_PROBE_CACHES)
+        assert outstanding().get("ivf_probe", 0) <= 1, (i, outstanding())
 
 
 def test_binary_quantize_packing_matches_numpy(spark):
