@@ -155,27 +155,34 @@ def brute_topk(
     row count pass ``n_queries`` so routing layers don't run a second
     count job (round-5 advisory: the auto-routed ann path counted twice).
     """
-    from functools import reduce
-
     if n_queries is None:
         n_queries = e.count()
-    if n_queries > max_broadcast_queries:
-        id_col = e.columns[0]
-        n_chunks = -(-n_queries // max_broadcast_queries)  # ceil
-        chunks = [
-            _brute_topk_one_chunk(
-                spark,
-                e.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_chunks)) == i),
-                e,
-                k=k,
-                n_cand=n_queries,
-                label_mask=label_mask,
-            )
-            for i in range(n_chunks)
-        ]
-        return reduce(lambda a, b: a.unionByName(b), chunks)
-    return _brute_topk_one_chunk(
-        spark, e, e, k=k, n_cand=n_queries, label_mask=label_mask
+    return _hash_chunked(
+        e,
+        n_queries,
+        max_broadcast_queries,
+        lambda queries: _brute_topk_one_chunk(
+            spark, queries, e, k=k, n_cand=n_queries, label_mask=label_mask
+        ),
+    )
+
+
+def _hash_chunked(queries: DataFrame, n: int, cap: int, run) -> DataFrame:
+    """``run(queries)``, or — when the ``n`` query rows exceed ``cap`` —
+    the union of ``run`` over ``ceil(n / cap)`` deterministic
+    ``pmod(xxhash64(id), n_chunks)`` chunks of the query side (id = its
+    first column). The broadcast-query scans use it to keep each driver
+    collect and broadcast near ``cap`` rows; chunks partition the query
+    ids, so no cross-chunk merge is needed."""
+    from functools import reduce
+
+    if n <= cap:
+        return run(queries)
+    n_chunks = -(-n // cap)  # ceil
+    chunk = F.pmod(F.xxhash64(F.col(queries.columns[0])), F.lit(n_chunks))
+    return reduce(
+        lambda a, b: a.unionByName(b),
+        [run(queries.filter(chunk == i)) for i in range(n_chunks)],
     )
 
 
@@ -196,7 +203,6 @@ def _brute_topk_one_chunk(
     kernel for both searches so memory-bound/tie-break fixes can never
     drift between them."""
     import numpy as np
-    import pandas as pd
 
     e = candidates
     q_pdf = queries.toPandas().sort_values("vec_id")
@@ -217,33 +223,20 @@ def _brute_topk_one_chunk(
             c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
             # the sims matrix is (n_queries x batch) — at 200k broadcast
             # queries and a 10k-row Arrow batch that is 16 GB and kills the
-            # worker. Slice the QUERY axis so each allocation stays under
-            # ~256 MB; slices partition the query ids, so per-slice top-k
-            # rows just concatenate (no cross-slice merge needed).
-            q_step = max(1, (1 << 25) // max(1, len(c_ids)))
-            for lo in range(0, len(ids), q_step):
-                ids_s = ids[lo : lo + q_step]
-                sims = qm[lo : lo + q_step] @ c_mat.T  # (slice, batch)
-                # self-matches out
-                sims[ids_s[:, None] == c_ids[None, :]] = -np.inf
-                if label_mask:
-                    # positives out (self shares its own label anyway)
-                    lab_s = labels[lo : lo + q_step]
-                    sims[lab_s[:, None] == c_labels[None, :]] = -np.inf
-                kk = min(k, sims.shape[1])
-                # fully vectorized top-k (no per-query Python loop — at 10^6
-                # broadcast queries the loop itself would dominate); the
-                # shared helper widens past boundary ties so the local
-                # truncation is deterministic by (-sim, neighbor_id).
-                top, nbr = _topk_rows(sims, c_ids, kk)
-                keep = np.isfinite(top).ravel()  # drops masked self-matches
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(ids_s, kk)[keep],
-                        "neighbor_id": nbr.ravel()[keep],
-                        "sim_raw": top.ravel()[keep],
-                    }
-                )
+            # worker; _sliced_topk slices the QUERY axis, and its
+            # vectorized top-k has no per-query Python loop (at 10^6
+            # broadcast queries the loop itself would dominate)
+            yield _sliced_topk(
+                ids,
+                c_ids,
+                k,
+                lambda lo, hi: qm[lo:hi] @ c_mat.T,
+                "sim_raw",
+                # positives out (self shares its own label anyway)
+                (lambda lo, hi: labels[lo:hi, None] == c_labels[None, :])
+                if label_mask
+                else None,
+            )
 
     # task count sized to the MATMUL FLOPs, not input bytes: each candidate
     # row costs n_queries x dim mults, so a 10 MB candidate file can still
@@ -260,12 +253,7 @@ def _brute_topk_one_chunk(
     sims = e.repartition(parts).mapInPandas(
         topk_per_batch, schema="query_id long, neighbor_id long, sim_raw double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim_raw"), "neighbor_id")
-    return (
-        sims.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim_raw", 6).alias("sim"))
-    )
+    return _rounded(_top_per_query(sims, "sim_raw", k))
 
 
 def embedding_hard_negatives(
@@ -662,13 +650,7 @@ def lsh_topk_df(
     )
     # the same (query, neighbor) pair surfaces from every colliding probe
     # with an IDENTICAL exact sim — dedup on ids alone is sound
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim_raw"), "neighbor_id")
-    return (
-        local.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim_raw", 6).alias("sim"))
-    )
+    return _rounded(_top_per_query(local, "sim_raw", k, dedup=True))
 
 
 #: query-directed hamming-2 multiprobe: flip PAIRS among this many
@@ -948,31 +930,26 @@ def _sqdist_to_centers(X, C):
     (batch, cells, dim) temporary — 7.2 GB per 10k-row batch at 1414
     cells — and turned the 2M index build into a memory-bound crawl
     (measured round 7); the gemm form is one BLAS call and a rank-1 add."""
-    import numpy as np
-
     return -2.0 * (X @ C.T) + (C**2).sum(1)[None, :]
 
 
-def _cell_assign(
-    df: DataFrame, bc, n_assign: int, extra_cols: dict[str, str] | None = None
-) -> DataFrame:
-    """Arrow-batched spilled assignment: each (vec_id, emb) row lands in its
-    ``n_assign`` nearest codebook cells (broadcast centroid matrix ``bc``).
-    Narrow map stage — one gemm per Arrow batch; the input is fanned OUT to
-    its bytes-proportional task count first (a 550 MB single-file corpus
-    otherwise funnels the whole kernel through 2-4 parquet splits — the 2M
-    index build measured 22 min on 2 effective tasks; fanout never
-    coalesces, so a many-split 100 TB source is untouched).
-
-    extra_cols ({name: sql_type}) ride through untouched (repeated per
-    spilled copy) — the label-bearing index carries its label this way."""
+def _nearest_cells(df: DataFrame, bc, n: int) -> DataFrame:
+    """Expand every row to its ``n`` nearest cells of the broadcast
+    centroid matrix ``bc`` — the one probe/assignment kernel of the IVF
+    family. ``df``'s first two columns are (id, vector); the output
+    repeats each row ``n`` times with an int ``cell`` column inserted
+    after the vector, any further columns riding through. Narrow
+    mapInPandas stage: one gemm (``_sqdist_to_centers``) and a stable
+    argsort per Arrow batch, so ties between equidistant cells break by
+    cell id everywhere."""
     import numpy as np
 
-    from symat_hbase_tools_spark.plans.partitioning import fanout as _fanout
-
-    extra_cols = extra_cols or {}
-    df = _fanout(
-        df.sparkSession, df.select("vec_id", "emb", *extra_cols.keys())
+    head, rest = df.columns[:2], df.columns[2:]
+    types = {f.name: f.dataType.simpleString() for f in df.schema}
+    schema = ", ".join(
+        [f"{c} {types[c]}" for c in head]
+        + ["cell int"]
+        + [f"{c} {types[c]}" for c in rest]
     )
 
     def gen(batches):
@@ -982,22 +959,139 @@ def _cell_assign(
         for pdf in batches:
             if pdf.empty:
                 continue
-            E = np.array(pdf["emb"].tolist(), dtype=np.float64)
+            E = np.array(pdf[head[1]].tolist(), dtype=np.float64)
             d = _sqdist_to_centers(E, C)
-            cells = np.argsort(d, axis=1, kind="stable")[:, :n_assign]
-            out = {
-                "vec_id": pdf["vec_id"].repeat(n_assign),
-                "emb": pdf["emb"].repeat(n_assign),
-                "cell": cells.ravel(),
-            }
-            for c in extra_cols:
-                out[c] = pdf[c].repeat(n_assign)
+            cells = np.argsort(d, axis=1, kind="stable")[:, :n]
+            out = {c: pdf[c].repeat(n) for c in head}
+            out["cell"] = cells.ravel()
+            for c in rest:
+                out[c] = pdf[c].repeat(n)
             yield pd.DataFrame(out)
 
-    schema = "vec_id long, emb array<double>, cell int"
-    if extra_cols:
-        schema += ", " + ", ".join(f"{c} {t}" for c, t in extra_cols.items())
     return df.mapInPandas(gen, schema=schema)
+
+
+def _cell_assign(
+    df: DataFrame, bc, n_assign: int, extra_cols: dict[str, str] | None = None
+) -> DataFrame:
+    """Spilled assignment: each (vec_id, emb) row lands in its
+    ``n_assign`` nearest codebook cells (``_nearest_cells``). The input is
+    fanned OUT to its bytes-proportional task count first (a 550 MB
+    single-file corpus otherwise funnels the whole kernel through 2-4
+    parquet splits — the 2M index build measured 22 min on 2 effective
+    tasks; fanout never coalesces, so a many-split 100 TB source is
+    untouched).
+
+    extra_cols ({name: sql_type}) ride through untouched (repeated per
+    spilled copy) — the label-bearing index carries its label this way."""
+    from symat_hbase_tools_spark.plans.partitioning import fanout as _fanout
+
+    extra = [F.col(c).cast(t).alias(c) for c, t in (extra_cols or {}).items()]
+    df = _fanout(df.sparkSession, df.select("vec_id", "emb", *extra))
+    return _nearest_cells(df, bc, n_assign)
+
+
+def _ivf_session(
+    spark: SparkSession,
+    sf_dir: str,
+    n_cells: int | None,
+    n_probe: int | None,
+    n_assign: int,
+    seed: int,
+):
+    """Probe stage of the in-session IVF tiers (``ann_ivf_topk``,
+    ``ann_ivfpq_topk``, ``ann_ivfbq_topk``), which all run one pipeline:
+
+      1. probe — a seeded k-means coarse codebook (cached, ~sqrt(n)
+         cells) is broadcast; every vector is assigned to its
+         ``n_assign`` nearest cells (spilled assignment) and every query
+         probes its ``n_probe`` nearest cells;
+      2. cogroup on cell id — both sides shuffle once on the cell;
+      3. codec kernel — per cell, every probing query is scored against
+         the cell's members: exact cosine on raw vectors
+         (``_cell_topk_kernel``), PQ-ADC on codes
+         (``_pq_cell_kernel_factory``) or asymmetric sign-bit scoring on
+         packed words (``_bq_cell_kernel_factory``), each keeping a
+         per-query local top list by (-score, neighbor_id);
+      4. shortlist merge — ``_top_per_query`` drops the duplicates spilled
+         assignment creates and keeps each query's global top: k for the
+         exact kernel, the per-cell depth x max(1, n_probe // 2) for the
+         compressed codecs;
+      5. exact refine — the compressed codecs re-rank the merged
+         shortlist against the raw vectors (``_exact_cosine_rerank``).
+
+    The persisted-index tiers run the same pipeline off disk
+    (``_ivf_index_probe``).
+
+    Returns (base, assigned, q, n_probe): the (vec_id, emb) corpus, its
+    spilled (vec_id, emb, cell) assignment and the (query_id, qe, cell)
+    probe rows. n_cells defaults to ~sqrt(n) and n_probe to a constant
+    FRACTION (~1/3) of the cells, so the candidate set per query grows as
+    sqrt(n) while recall stays roughly flat."""
+    base = _emb(spark, sf_dir)
+    if n_cells is None:
+        n_cells = _adaptive_cells(base.count())
+    if n_probe is None:
+        # probe a constant FRACTION of cells (~1/3), not a constant count:
+        # with n_cells ~ sqrt(n), a fixed n_probe makes recall decay as the
+        # corpus grows. History: 1/8 measured recall@5 0.53/0.50; 1/4
+        # reached 0.95 with n_assign=3 on the ml-kmeans codebook; the
+        # round-6 numpy-Lloyd codebook has a slightly different boundary
+        # structure (same inertia class, lower IVF recall at 1/4:
+        # 0.88-0.90) — 1/3 restores the margin for 4/3 the candidate
+        # volume: measured recall@5 0.949 (sf0.001) / 0.956 (sf0.01) /
+        # 0.997 (sf0.1) vs the 0.9 IVF_RECALL_FLOOR. Lesson recorded in
+        # NEXT: k-means INERTIA does not track IVF recall — probe/spill
+        # fractions are the honest levers, not restarts.
+        n_probe = max(3, n_cells // 3)
+    centers, with_vec = _codebook_cached(spark, sf_dir, n_cells, seed)
+    bc = spark.sparkContext.broadcast(centers)
+    assigned = _cell_assign(with_vec, bc, n_assign)
+    q = _nearest_cells(
+        base.select(F.col("vec_id").alias("query_id"), F.col("emb").alias("qe")),
+        bc,
+        n_probe,
+    )
+    return base, assigned, q, n_probe
+
+
+def _ivf_search(
+    q: DataFrame, members: DataFrame, kernel, score_col: str, depth: int
+) -> DataFrame:
+    """Cogroup the probe rows ``q`` with the cell ``members`` on cell id,
+    score each cell with ``kernel`` and merge the per-cell lists into each
+    query's top ``depth`` (``_top_per_query``). See ``_ivf_session`` for
+    the whole pipeline."""
+    local = (
+        q.groupby("cell")
+        .cogroup(members.groupby("cell"))
+        .applyInPandas(
+            kernel, schema=f"query_id long, neighbor_id long, {score_col} double"
+        )
+    )
+    return _top_per_query(local, score_col, depth, dedup=True)
+
+
+def _top_per_query(
+    df: DataFrame, score_col: str, depth: int, dedup: bool = False
+) -> DataFrame:
+    """Each query's top ``depth`` rows by (-score, neighbor_id) — the one
+    deterministic merge window of every scan in this module. dedup=True
+    first drops repeated (query, neighbor) pairs (spilled assignment puts
+    one member in several probed cells)."""
+    if dedup:
+        df = df.dropDuplicates(["query_id", "neighbor_id"])
+    w = Window.partitionBy("query_id").orderBy(F.desc(score_col), "neighbor_id")
+    return (
+        df.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= depth)
+        .select("query_id", "neighbor_id", score_col)
+    )
+
+
+def _rounded(df: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, sim) with sim_raw rounded to 6 places."""
+    return df.select("query_id", "neighbor_id", F.round("sim_raw", 6).alias("sim"))
 
 
 def ann_ivf_topk(
@@ -1009,15 +1103,10 @@ def ann_ivf_topk(
     n_assign: int = 3,
     seed: int = 42,
 ) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: k-means coarse quantizer.
-
-    Classic IVF: fit a small k-means codebook (seeded — deterministic),
-    assign every vector to its ``n_assign`` nearest centroids ("cells"),
-    then for each query probe the n_probe nearest cells and exact-re-rank
-    only their members. Expected candidate fraction ~ n_assign *
-    n_probe/n_cells. n_cells defaults adaptively to ~sqrt(n) so the
-    candidate set per query stays ~n_probe*sqrt(n) instead of growing
-    linearly with the corpus.
+    """IVF (inverted-file) approximate top-k: the shared IVF pipeline
+    (``_ivf_session``) with the EXACT cell kernel — each query scores
+    only the raw members of its n_probe nearest cells, no refine needed.
+    Expected candidate fraction ~ n_assign * n_probe / n_cells.
 
     Spilled assignment (ScaNN/SOAR-style): the recall killer in
     single-assignment IVF is the cell-boundary effect — a true neighbor
@@ -1029,81 +1118,16 @@ def ann_ivf_topk(
     fraction, which reaches 0.94 only at cells/3 and 0.99 at cells/2 for
     4.6x the wall time).
 
-    Scale shape: the codebook is tiny and broadcast; assignment is an
-    Arrow-batched argpartition over n_cells centroids (narrow map — same
-    kernel as the query-probe side); the search join shuffles on cell id
-    only. The codebook trains on a portable-hash-capped sample
-    (MAX_KMEANS_TRAIN_ROWS) so training cost is constant in corpus size.
+    The cell-local matmul (round 5) replaced a probe-to-member join that
+    shipped both embedding arrays on every candidate pair (~1 KB x
+    candidate volume of shuffle; at n=200k it never finished): the merge
+    now handles ~n x n_probe x k 24-byte rows.
     """
-    import numpy as np
-
-    base = _emb(spark, sf_dir)
-    if n_cells is None:
-        n_cells = _adaptive_cells(base.count())
-    if n_probe is None:
-        # probe a constant FRACTION of cells (~1/3), not a constant count:
-        # with n_cells ~ sqrt(n), a fixed n_probe makes recall decay as the
-        # corpus grows; a fixed fraction keeps recall roughly flat while
-        # candidate work per query still scales as sqrt(n). History: 1/8
-        # measured recall@5 0.53/0.50; 1/4 reached 0.95 with n_assign=3 on
-        # the ml-kmeans codebook; the round-6 numpy-Lloyd codebook has a
-        # slightly different boundary structure (same inertia class, lower
-        # IVF recall at 1/4: 0.88-0.90) — 1/3 restores the margin for 4/3
-        # the candidate volume: measured recall@5 0.949 (sf0.001) / 0.956
-        # (sf0.01) / 0.997 (sf0.1) vs the 0.9 IVF_RECALL_FLOOR. Lesson
-        # recorded in NEXT: k-means INERTIA does not track IVF recall —
-        # probe/spill fractions are the honest levers, not restarts.
-        n_probe = max(3, n_cells // 3)
-    centers, with_vec = _codebook_cached(spark, sf_dir, n_cells, seed)
-
-    bc = spark.sparkContext.broadcast(centers)
-    assigned = _cell_assign(with_vec, bc, n_assign)
-
-    def query_probes(batches):
-        import pandas as pd
-
-        C = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            Q = np.array(pdf["emb"].tolist(), dtype=np.float64)
-            d = _sqdist_to_centers(Q, C)
-            probes = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["vec_id"].repeat(n_probe),
-                    "qe": pdf["emb"].repeat(n_probe),
-                    "cell": probes.ravel(),
-                }
-            )
-
-    q = base.mapInPandas(
-        query_probes, schema="query_id long, qe array<double>, cell int"
-    )
-    # CELL-LOCAL MATMUL (round-5, same rewrite as lsh_topk_df): the old
-    # plan joined probes to members and shipped both embedding arrays on
-    # every candidate-pair row through the join and a dropDuplicates —
-    # ~1 KB x candidate volume of shuffle; at n=200k it never finished.
-    # Now each side shuffles once on cell id, one BLAS matmul per cell
-    # emits per-query local top-k id/sim rows, and the merge handles
-    # ~n x n_probe x k 24-byte rows.
+    _, assigned, q, _ = _ivf_session(spark, sf_dir, n_cells, n_probe, n_assign, seed)
     c = assigned.select(
         F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("ce"), "cell"
     )
-    local = (
-        q.groupby("cell")
-        .cogroup(c.groupby("cell"))
-        .applyInPandas(
-            _cell_topk_kernel(k), schema="query_id long, neighbor_id long, sim_raw double"
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim_raw"), "neighbor_id")
-    return (
-        local.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim_raw", 6).alias("sim"))
-    )
+    return _rounded(_ivf_search(q, c, _cell_topk_kernel(k), "sim_raw", k))
 
 
 #: ceiling on the elements of any one (queries-slice x candidates) sims
@@ -1116,11 +1140,60 @@ def ann_ivf_topk(
 KERNEL_SLICE_ELEMS = 1 << 25
 
 
+def _sliced_topk(q_ids, c_ids, r: int, score, score_col: str, mask=None):
+    """Per-query top ``r`` of a (queries x candidates) score matrix by
+    (-score, neighbor_id), with self-matches (query id == candidate id)
+    and, when ``mask(lo, hi)`` is given, its True pairs excluded.
+    ``score(lo, hi)`` scores query rows [lo, hi) against every candidate.
+
+    The QUERY axis is sliced so no score/mask allocation exceeds
+    KERNEL_SLICE_ELEMS (read at call time) — the bounded-memory rule
+    (round-5 lesson: a 16 GB sims alloc killed workers at 200k). Slices
+    partition the query ids, so per-slice rows just concatenate and the
+    output is bit-identical to the unsliced form. The local truncation is
+    deterministic (``_topk_rows``): a boundary tie dropped HERE could
+    never be recovered by the global window tie-break (round-5
+    advisory)."""
+    import numpy as np
+    import pandas as pd
+
+    q_step = max(1, KERNEL_SLICE_ELEMS // max(1, len(c_ids)))
+    out_q, out_n, out_s = [], [], []
+    for lo in range(0, len(q_ids), q_step):
+        hi = lo + q_step
+        ids_s = q_ids[lo:hi]
+        sims = score(lo, hi)
+        sims[ids_s[:, None] == c_ids[None, :]] = -np.inf
+        if mask is not None:
+            sims[mask(lo, hi)] = -np.inf
+        rr = min(r, sims.shape[1])
+        top, nbr = _topk_rows(sims, c_ids, rr)
+        keep = np.isfinite(top).ravel()
+        out_q.append(np.repeat(ids_s, rr)[keep])
+        out_n.append(nbr.ravel()[keep])
+        out_s.append(top.ravel()[keep])
+    return pd.DataFrame(
+        {
+            "query_id": np.concatenate(out_q),
+            "neighbor_id": np.concatenate(out_n),
+            score_col: np.concatenate(out_s),
+        }
+    )
+
+
+def _empty_pairs(score_col: str):
+    """The typed empty result of a cell kernel (a cell no query probed,
+    or a probed cell with no members)."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        {"query_id": [], "neighbor_id": [], score_col: []}
+    ).astype({"query_id": "int64", "neighbor_id": "int64", score_col: "float64"})
+
+
 def _cell_topk_kernel(k: int, label_mask: bool = False):
-    """Cogroup kernel: exact cosine of every query in the group against
-    every member, per-query local top-k out. Shared by the IVF search and
-    (structurally) the LSH bucket kernel — kept separate because the LSH
-    side closes over differently-named columns.
+    """Exact cell kernel: cosine of every query in the cell against every
+    raw member (``qe``/``ce`` vectors), per-query local top-k out.
 
     label_mask=True (round 8, hard-negative mining): the group frames
     carry ``ql``/``cl`` label columns and same-label pairs are masked to
@@ -1129,61 +1202,187 @@ def _cell_topk_kernel(k: int, label_mask: bool = False):
     a label filter) multiplies the merge volume m-fold and still loses
     recall whenever a query's m*k nearest are all same-label; masking
     inside the kernel costs one numpy comparison per pair that the
-    matmul already paid for.
-
-    Round 9: the QUERY axis is sliced so no sims/mask allocation exceeds
-    KERNEL_SLICE_ELEMS — the same bounded-memory discipline as the brute
-    kernel's q_step (round-5 lesson: a 16 GB sims alloc killed workers at
-    200k). Slices partition the query ids, so per-slice top-k rows just
-    concatenate; results are bit-identical to the unsliced form (tested
-    at a forced slice width)."""
+    matmul already paid for."""
     import numpy as np
-    import pandas as pd
 
     def kernel(qpdf, cpdf):
         if qpdf.empty or cpdf.empty:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "sim_raw": []}
-            ).astype(
-                {"query_id": "int64", "neighbor_id": "int64", "sim_raw": "float64"}
-            )
-        q_ids = qpdf["query_id"].to_numpy()
-        c_ids = cpdf["neighbor_id"].to_numpy()
+            return _empty_pairs("sim_raw")
         qm = np.array(qpdf["qe"].tolist(), dtype=np.float64)
         cm = np.array(cpdf["ce"].tolist(), dtype=np.float64)
         qm /= np.linalg.norm(qm, axis=1, keepdims=True)
         cm /= np.linalg.norm(cm, axis=1, keepdims=True)
+        mask = None
         if label_mask:
             q_lab = qpdf["ql"].to_numpy()
             c_lab = cpdf["cl"].to_numpy()
-        q_step = max(1, KERNEL_SLICE_ELEMS // max(1, len(c_ids)))
-        outs = []
-        for lo in range(0, len(q_ids), q_step):
-            hi = lo + q_step
-            ids_s = q_ids[lo:hi]
-            sims = qm[lo:hi] @ cm.T
-            sims[ids_s[:, None] == c_ids[None, :]] = -np.inf
-            if label_mask:
-                sims[q_lab[lo:hi, None] == c_lab[None, :]] = -np.inf
-            kk = min(k, sims.shape[1])
-            # deterministic local truncation by (-sim, neighbor_id) —
-            # matches the brute kernel; a boundary tie dropped HERE could
-            # never be recovered by the global window tie-break (round-5
-            # advisory).
-            top, nbr = _topk_rows(sims, c_ids, kk)
-            keep = np.isfinite(top).ravel()
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.repeat(ids_s, kk)[keep],
-                        "neighbor_id": nbr.ravel()[keep],
-                        "sim_raw": top.ravel()[keep],
-                    }
-                )
-            )
-        return outs[0] if len(outs) == 1 else pd.concat(outs, ignore_index=True)
+            mask = lambda lo, hi: q_lab[lo:hi, None] == c_lab[None, :]  # noqa: E731
+        return _sliced_topk(
+            qpdf["query_id"].to_numpy(),
+            cpdf["neighbor_id"].to_numpy(),
+            k,
+            lambda lo, hi: qm[lo:hi] @ cm.T,
+            "sim_raw",
+            mask,
+        )
 
     return kernel
+
+
+def _pq_cell_kernel_factory(r_cell: int, bc_books):
+    """PQ-ADC cell kernel: each query's (m x n_codes) lookup table of
+    exact subspace distances (``_pq_lut``, on the L2-normalized query)
+    gathered against the cell members' PQ ``codes`` — m table gathers
+    and adds per candidate, no multiplies, and the member payload is m
+    ints instead of d doubles. Emits each query's top ``r_cell`` by
+    (-distance, vec_id) as ``neg_d2``. ``bc_books`` is the broadcast
+    (m, n_codes, d/m) codebook array. The tables are rebuilt per probed
+    cell: m*n_codes*d/m flops per query-probe, amortized over the cell's
+    members."""
+    import numpy as np
+
+    def kernel(qg, cg):
+        if qg.empty or cg.empty:
+            return _empty_pairs("neg_d2")
+        books = bc_books.value
+        Q = np.array(qg["qe"].tolist(), dtype=np.float64)
+        Q = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+        codes = np.array(cg["codes"].tolist(), dtype=np.int64)
+        return _sliced_topk(
+            qg["query_id"].to_numpy(),
+            cg["vec_id"].to_numpy(),
+            r_cell,
+            lambda lo, hi: _pq_neg_d2(_pq_lut(Q[lo:hi], books), codes),
+            "neg_d2",
+        )
+
+    return kernel
+
+
+def _bq_cell_kernel_factory(r_cell: int):
+    """BQ cell kernel: unpack the members' two packed sign-bit words to a
+    (members, 64) {-1,+1} matrix and score the normalized queries against
+    it (asymmetric q . sign(c)); emits each query's top ``r_cell`` by
+    (-score, vec_id) as ``s_bq``."""
+    import numpy as np
+
+    def kernel(qg, cg):
+        if qg.empty or cg.empty:
+            return _empty_pairs("s_bq")
+        Q = np.array(qg["qe"].tolist(), dtype=np.float64)
+        Q = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+        j32 = np.arange(32, dtype=np.uint64)
+        w0 = cg["w0"].to_numpy().astype(np.uint64)
+        w1 = cg["w1"].to_numpy().astype(np.uint64)
+        bits = np.concatenate(
+            [
+                (w0[:, None] >> j32[None, :]) & 1,
+                (w1[:, None] >> j32[None, :]) & 1,
+            ],
+            axis=1,
+        )
+        Bpm = bits.astype(np.float64) * 2.0 - 1.0
+        return _sliced_topk(
+            qg["query_id"].to_numpy(),
+            cg["vec_id"].to_numpy(),
+            r_cell,
+            lambda lo, hi: Q[lo:hi] @ Bpm.T,
+            "s_bq",
+        )
+
+    return kernel
+
+
+def _pq_encode(E, books):
+    """PQ-encode the rows of ``E`` against the (m, n_codes, d/m) codebooks:
+    returns (codes (n, m) int32, each row's squared subspace distance to
+    its chosen codeword (n, m))."""
+    import numpy as np
+
+    m, _, ds = books.shape
+    codes = np.empty((len(E), m), dtype=np.int32)
+    d2 = np.empty((len(E), m), dtype=np.float64)
+    rows = np.arange(len(E))
+    for j in range(m):
+        S = E[:, j * ds : (j + 1) * ds]
+        # (n, k) distances via the broadcast form — S and books[j] are
+        # small (<=16 dims x 64 codes), no 256 MB slicing needed
+        dist = ((S[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
+        cj = dist.argmin(axis=1)
+        codes[:, j] = cj
+        d2[:, j] = dist[rows, cj]
+    return codes, d2
+
+
+def _pq_lut(Q, books):
+    """Per-query ADC lookup tables: (queries, m, n_codes) exact squared
+    subspace distances to every codeword. The code count comes from the
+    fitted codebooks, which ``_kmeans_pp_lloyd`` clamps to the training
+    sample size on a small corpus."""
+    import numpy as np
+
+    m, n_codes, ds = books.shape
+    L = np.empty((len(Q), m, n_codes), dtype=np.float64)
+    for j in range(m):
+        Sq = Q[:, j * ds : (j + 1) * ds]
+        L[:, j, :] = ((Sq[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
+    return L
+
+
+def _pq_neg_d2(L, codes):
+    """ADC score: minus the summed table distances of every (query,
+    candidate) pair — m gathers and adds per pair."""
+    import numpy as np
+
+    d2 = np.zeros((L.shape[0], len(codes)))
+    for j in range(L.shape[1]):
+        d2 += L[:, j, :][:, codes[:, j]]
+    return -d2
+
+
+def _bq_pack(E):
+    """Pack the sign bits of 64-dim rows into two int64 words: bit j of
+    word w is set iff dim 32w+j > 0 (sign(raw) == sign(normalized) for a
+    nonzero norm, so no normalization is needed)."""
+    import numpy as np
+
+    bits = E > 0
+    j32 = np.arange(32, dtype=np.uint64)
+    w0 = (bits[:, :32].astype(np.uint64) << j32[None, :]).sum(axis=1)
+    w1 = (bits[:, 32:64].astype(np.uint64) << j32[None, :]).sum(axis=1)
+    return w0.astype(np.int64), w1.astype(np.int64)
+
+
+def _encode_rows(df: DataFrame, bc_books=None) -> DataFrame:
+    """Narrow Arrow map replacing each row's raw ``emb`` with its
+    compressed form: PQ ``codes array<int>`` of the L2-normalized vector
+    when ``bc_books`` (broadcast codebooks) is given, else the two packed
+    sign-bit words ``w0``/``w1``. Every other column rides through, in
+    order, ahead of the codes."""
+    import numpy as np
+
+    keep = [c for c in df.columns if c != "emb"]
+    types = {f.name: f.dataType.simpleString() for f in df.schema}
+    schema = ", ".join(f"{c} {types[c]}" for c in keep)
+    schema += ", codes array<int>" if bc_books is not None else ", w0 long, w1 long"
+
+    def gen(batches):
+        import pandas as pd
+
+        books = None if bc_books is None else bc_books.value
+        for b in batches:
+            if b.empty:
+                continue
+            E = np.array(b["emb"].tolist(), dtype=np.float64)
+            out = {c: b[c] for c in keep}
+            if books is None:
+                out["w0"], out["w1"] = _bq_pack(E)
+            else:
+                E = E / np.linalg.norm(E, axis=1, keepdims=True)
+                out["codes"] = list(_pq_encode(E, books)[0])
+            yield pd.DataFrame(out)
+
+    return df.mapInPandas(gen, schema=schema)
 
 
 def embedding_near_dup_pairs(
@@ -1452,6 +1651,27 @@ def embedding_semantic_dedup_check(spark: SparkSession, sf_dir: str) -> DataFram
 # -- persistent IVF index (build once / query many) --------------------------
 
 
+def _write_centroids(spark: SparkSession, centers, path: str) -> None:
+    """Persist a codebook as (cell, centroid) rows. len(centers), not the
+    requested n_cells: _kmeans_pp_lloyd clamps k to the (sampled) corpus
+    size, so a small corpus degrades to fewer cells instead of a pandas
+    length-mismatch crash."""
+    import pandas as pd
+
+    spark.createDataFrame(
+        pd.DataFrame({"cell": range(len(centers)), "centroid": centers.tolist()})
+    ).coalesce(1).write.mode("overwrite").parquet(path)
+
+
+def _index_centroids(spark: SparkSession, index_dir: str):
+    """The persisted codebook, collected in cell order and broadcast."""
+    import numpy as np
+
+    cent = _ivf_relation(spark, index_dir, "centroids").orderBy("cell").collect()
+    C = np.array([r["centroid"] for r in cent], dtype=np.float64)
+    return spark.sparkContext.broadcast(C)
+
+
 def build_ivf_index(
     spark: SparkSession,
     sf_dir: str,
@@ -1483,17 +1703,8 @@ def build_ivf_index(
     mining straight off the index — no join back to the corpus at query
     time. Label-less sources build the old schema unchanged.
     """
-    import numpy as np
-    import pandas as pd
-
-    base = _emb(spark, sf_dir)
     centers, with_vec = _codebook_cached(spark, sf_dir, n_cells, seed)
-    spark.createDataFrame(
-        # len(centers), not n_cells: _kmeans_pp_lloyd clamps k to the
-        # (sampled) corpus size, so a small corpus degrades to fewer cells
-        # instead of a pandas length-mismatch crash
-        pd.DataFrame({"cell": range(len(centers)), "centroid": centers.tolist()})
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/centroids")
+    _write_centroids(spark, centers, f"{index_dir}/centroids")
     bc = spark.sparkContext.broadcast(centers)
     raw = load_table(spark, sf_dir, "embeddings")
     # Store the label alongside each assignment row ONLY when it is
@@ -1569,11 +1780,7 @@ def ivf_index_append(
     vectors get equal boundary-spill recall treatment (n_assign=1 is
     plain frozen-codebook argmin — the parity-tested default).
     """
-    import numpy as np
-
-    cent = _ivf_relation(spark, index_dir, "centroids").orderBy("cell").collect()
-    C = np.array([r["centroid"] for r in cent], dtype=np.float64)
-    bc = spark.sparkContext.broadcast(C)
+    bc = _index_centroids(spark, index_dir)
     # align the label column with the EXISTING index schema: a
     # label-bearing index appends labels (null when the batch lacks
     # them — those rows serve plain queries but are invisible to
@@ -1657,11 +1864,7 @@ def _ivf_percell_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     Arrow-batched pass computing each stored vector's L2 distance to its
     own cell's centroid (broadcast codebook), partially aggregated per
     batch so the shuffle carries one row per (task, cell)."""
-    import numpy as np
-
-    cent = _ivf_relation(spark, index_dir, "centroids").orderBy("cell").collect()
-    C = np.array([r["centroid"] for r in cent], dtype=np.float64)
-    bc = spark.sparkContext.broadcast(C)
+    bc = _index_centroids(spark, index_dir)
 
     def gen(batches):
         import numpy as np
@@ -1795,13 +1998,8 @@ def ivf_index_rebalance(
         vecs.select("vec_id", "emb"), int(n_cells), seed
     )
     import numpy as np
-    import pandas as pd
 
-    spark.createDataFrame(
-        pd.DataFrame(
-            {"cell": range(len(centers)), "centroid": centers.tolist()}
-        )
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/centroids__new")
+    _write_centroids(spark, centers, f"{index_dir}/centroids__new")
     bc = spark.sparkContext.broadcast(np.asarray(centers))
     extra = (
         {"label": asg.schema["label"].dataType.simpleString()}
@@ -1877,6 +2075,103 @@ def _invalidate_ivf_relations(index_dir: str) -> None:
         _IVF_RELATION_CACHE.pop(key, None)
 
 
+def _ivf_index_probe(
+    spark: SparkSession,
+    index_dir: str,
+    queries: DataFrame,
+    n_probe: int,
+    layer: str = "assignments",
+    label_mask: bool = False,
+):
+    """Probe stage of the persisted-index tiers (``ann_ivf_query``,
+    ``ann_ivf_query_negatives``, ``ann_ivfpq_query``, ``ann_ivfbq_query``):
+    the same pipeline as in session (see ``_ivf_session``), with the
+    codebook, assignments and code layers read from ``index_dir``.
+
+    The centroids (tiny) are collected and broadcast and each query's
+    ``n_probe`` nearest cells computed in mapInPandas. The probe table is
+    pinned: it is referenced TWICE (the probed-cell collect and the
+    cogroup) — without the pin the query scan + probe kernel run twice
+    per call, and a NONDETERMINISTIC queries plan (.limit/.sample) could
+    probe one set of cells and then cogroup a different set of query rows
+    whose cells were pruned away. The distinct probed cells (O(n_cells)
+    driver rows, bounded by the codebook size, never by data) become a
+    static ``isin`` filter on ``layer``'s partition column, so only the
+    probed ``cell=N/`` directories are ever opened (cogroup cannot
+    trigger DPP the way a join could, so prune explicitly).
+
+    ``layer`` is the cell tree the codec kernel scans: ``assignments``
+    (raw vectors), ``pq_codes`` or ``bq_codes``; a code layer that is
+    missing, or STALE (raw appends since it was encoded leave it smaller
+    than assignments), is refused with the re-encode instruction instead
+    of silently missing the appended vectors. label_mask=True is the
+    hard-negative variant: queries with a null label are dropped, the
+    query label rides the probe rows as ``ql`` and the index label the
+    members as ``cl`` (null-label members excluded — the labeled-only
+    mining contract), both cast to long: int32 narrowing could throw
+    (ANSI) or wrap, and wrapped labels collide, silently masking valid
+    negatives.
+
+    Returns (q, members, probed): the pinned (query_id, qe, cell[, ql])
+    probe rows, ``layer`` pruned to the probed cells, and the probed
+    cell list."""
+    import os
+
+    if layer != "assignments":
+        tag, add = layer[:2].upper(), f"ivf_index_add_{layer[:2]}"
+        if not os.path.isdir(os.path.join(index_dir, layer)):
+            raise ValueError(
+                f"index at {index_dir} has no {tag} layer; run {add} first"
+            )
+        n_assigned = _ivf_relation(spark, index_dir, "assignments").count()
+        n_encoded = _ivf_relation(spark, index_dir, layer).count()
+        if n_assigned != n_encoded:
+            raise ValueError(
+                f"{tag} layer is STALE ({n_encoded} encoded of {n_assigned} "
+                f"indexed rows — vectors were appended after {add}); "
+                f"re-run {add} to re-encode"
+            )
+    bc = _index_centroids(spark, index_dir)
+    q_cols = [
+        F.col("vec_id").alias("query_id"),
+        as_double(F.col("embedding")).alias("qe"),
+    ]
+    if label_mask:
+        queries = queries.filter(F.col("label").isNotNull())
+        q_cols.append(F.col("label").cast("long").alias("ql"))
+    q = pin(_nearest_cells(queries.select(*q_cols), bc, n_probe), "ivf_probe")
+    probed = [r["cell"] for r in q.select("cell").distinct().collect()]
+    members = _ivf_relation(spark, index_dir, layer).filter(
+        F.col("cell").isin(probed)
+    )
+    if label_mask:
+        members = members.filter(F.col("label").isNotNull()).withColumn(
+            "cl", F.col("label").cast("long")
+        )
+    return q, members, probed
+
+
+def _ivf_index_refine(
+    spark: SparkSession,
+    index_dir: str,
+    queries: DataFrame,
+    probed: list,
+    shortlist: DataFrame,
+    k: int,
+) -> DataFrame:
+    """Exact refine of a persisted code layer's shortlist: neighbor
+    vectors come from the PRUNED raw cells (the only read of the raw
+    tree), query vectors ride from the input."""
+    raw = (
+        _ivf_relation(spark, index_dir, "assignments")
+        .filter(F.col("cell").isin(probed))
+        .select("vec_id", "emb")
+        .dropDuplicates(["vec_id"])
+    )
+    qv = queries.select("vec_id", as_double(F.col("embedding")))
+    return _exact_cosine_rerank(shortlist, qv, raw, k)
+
+
 def _ivf_query_impl(
     spark: SparkSession,
     index_dir: str,
@@ -1885,96 +2180,20 @@ def _ivf_query_impl(
     n_probe: int,
     label_mask: bool,
 ) -> DataFrame:
-    """Shared persisted-IVF search plan (see ann_ivf_query for the full
-    shape description). label_mask=True is the hard-negative variant:
-    the query label rides the probe table as ``ql``, the index label
-    rides the assignment rows as ``cl`` (null-label rows excluded —
-    the labeled-only mining contract), and _cell_topk_kernel masks
-    same-label pairs before each cell's local top-k. One implementation
-    so cache-hygiene/pruning fixes can never drift between the two
-    entry points (the round-8 session-identity fix had to be applied
-    twice before this unification)."""
-    import numpy as np
-
-    cent = (
-        _ivf_relation(spark, index_dir, "centroids").orderBy("cell").collect()
+    """The exact persisted-IVF search behind ``ann_ivf_query`` and
+    ``ann_ivf_query_negatives``: the shared probe stage over the raw
+    ``assignments`` tree and the exact cell kernel (label-masked for
+    mining)."""
+    q, members, _ = _ivf_index_probe(
+        spark, index_dir, queries, n_probe, label_mask=label_mask
     )
-    C = np.array([r["centroid"] for r in cent], dtype=np.float64)
-    bc = spark.sparkContext.broadcast(C)
-
-    def probes_for(batches):
-        import pandas as pd
-
-        cmat = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            Q = np.array(pdf["qe"].tolist(), dtype=np.float64)
-            d = _sqdist_to_centers(Q, cmat)
-            probes = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
-            out = {
-                "query_id": pdf["query_id"].repeat(n_probe),
-                "qe": pdf["qe"].repeat(n_probe),
-                "cell": probes.ravel(),
-            }
-            if label_mask:
-                out["ql"] = pdf["ql"].repeat(n_probe)
-            yield pd.DataFrame(out)
-
-    # persist: the probe table is referenced TWICE (the probed-cell
-    # collect below and the cogroup) — without it the query scan + probe
-    # kernel run twice per call, and a NONDETERMINISTIC queries plan
-    # (.limit/.sample) could probe one set of cells and then cogroup a
-    # different set of query rows whose cells were pruned away
-    q_cols = [
-        F.col("vec_id").alias("query_id"),
-        as_double(F.col("embedding")).alias("qe"),
-    ]
-    q_src = queries
-    probe_schema = "query_id long, qe array<double>, cell int"
-    if label_mask:
-        q_src = queries.filter(F.col("label").isNotNull())
-        # long end-to-end: int32 narrowing could throw (ANSI) or wrap —
-        # and wrapped labels collide, silently masking valid negatives
-        q_cols.append(F.col("label").cast("long").alias("ql"))
-        probe_schema = (
-            "query_id long, qe array<double>, cell int, ql long"
-        )
-    q = pin(
-        q_src.select(*q_cols).mapInPandas(probes_for, schema=probe_schema),
-        "ivf_probe",
-    )
-    # O(n_cells) driver state — the probed-cell list prunes index
-    # directories at scan time (static partition pruning; cogroup cannot
-    # trigger DPP the way the old join could, so prune explicitly)
-    probed = [r["cell"] for r in q.select("cell").distinct().collect()]
-    assigned = _ivf_relation(spark, index_dir, "assignments").filter(
-        F.col("cell").isin(probed)
-    )
-    a_cols = [
+    cols = [
         F.col("vec_id").alias("neighbor_id"),
         F.col("emb").alias("ce"),
-        F.col("cell"),
-    ]
-    if label_mask:
-        assigned = assigned.filter(F.col("label").isNotNull())
-        a_cols.append(F.col("label").cast("long").alias("cl"))
-    assigned = assigned.select(*a_cols)
-    local = (
-        q.groupby("cell")
-        .cogroup(assigned.groupby("cell"))
-        .applyInPandas(
-            _cell_topk_kernel(k, label_mask=label_mask),
-            schema="query_id long, neighbor_id long, sim_raw double",
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim_raw"), "neighbor_id")
-    return (
-        local.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim_raw", 6).alias("sim"))
-    )
+        "cell",
+    ] + (["cl"] if label_mask else [])
+    kernel = _cell_topk_kernel(k, label_mask=label_mask)
+    return _rounded(_ivf_search(q, members.select(*cols), kernel, "sim_raw", k))
 
 
 def ann_ivf_query(
@@ -1984,24 +2203,12 @@ def ann_ivf_query(
     k: int = 5,
     n_probe: int = 3,
 ) -> DataFrame:
-    """Top-k search against a PERSISTED IVF index.
-
-    Centroids (tiny) are collected and broadcast; each query computes its
-    n_probe nearest cells driver-free in mapInPandas. The distinct probed
-    cells (O(n_cells) driver rows, bounded by the codebook size, never by
-    data) become a static ``isin`` filter on the assignment table's
-    partition column, so only probed ``cell=N/`` directories are even
-    opened — for a bounded query set against a big index, most of the
-    index is never read.
-
-    Search itself is the CELL-LOCAL MATMUL shape (same round-5/6 rewrite
-    as ann_ivf_topk/lsh_topk_df): the old plan here joined probes to
-    members and shipped both 64-dim arrays on every candidate-pair row
-    through the join and a dropDuplicates — ~1 KB x candidate volume of
-    shuffle bytes. Now each side shuffles once on cell id, one BLAS
-    matmul per cell emits per-query local top-k (id, id, sim) rows with
-    the deterministic (-sim, neighbor_id) tie-break, and the global merge
-    handles ~n_queries x n_probe x k 24-byte rows.
+    """Top-k search against a PERSISTED IVF index: the exact cell kernel
+    over the probed ``assignments/cell=N/`` directories only (the shared
+    probe stage: ``_ivf_index_probe``) — for a bounded query set against
+    a big index, most of the index is never read. Each side shuffles once
+    on cell id and the global merge handles ~n_queries x n_probe x k
+    24-byte rows.
     """
     return _ivf_query_impl(
         spark, index_dir, queries, k=k, n_probe=n_probe, label_mask=False
@@ -2549,11 +2756,10 @@ def embedding_pq_fit(
     import numpy as np
 
     base = _emb(spark, sf_dir)
-    codebooks, d, _n = _pq_fit_codebooks(base, m, k, seed, normalize=False)
-    ds = d // m
+    codebooks, _d, _n = _pq_fit_codebooks(base, m, k, seed, normalize=False)
     bc = spark.sparkContext.broadcast(codebooks)
 
-    def encode(batches):
+    def census_rows(batches):
         import pandas as pd
 
         C = bc.value
@@ -2561,49 +2767,41 @@ def embedding_pq_fit(
             if b.empty:
                 continue
             E = np.array(b["emb"].tolist(), dtype=np.float64)
-            subs, codes, d2s = [], [], []
-            for j in range(m):
-                S = E[:, j * ds : (j + 1) * ds]
-                # (n, k) distances via the expansion trick — S and C[j] are
-                # small (<=16 dims x 16 codes), no 256 MB slicing needed
-                dist = ((S[:, None, :] - C[j][None, :, :]) ** 2).sum(axis=2)
-                cj = dist.argmin(axis=1)
-                subs.append(np.full(len(S), j, dtype=np.int32))
-                codes.append(cj.astype(np.int32))
-                # freeze each squared distance to the exact 1e-9 integer
-                # grid: the census sum is then an order-free BIGINT sum —
-                # partitioning/batching cannot move the rounded mean by an
-                # ulp (the module's exact-integer-sum discipline)
-                d2_grid = np.round(
-                    dist[np.arange(len(S)), cj] * 1e9
-                ).astype(np.int64)
-                # overflow headroom: the per-cell BIGINT sum is exact only
-                # while sum(d2_1e9) < 2^63. Guard per item against the
-                # documented corpus bound — if every item in a cell hit
-                # this magnitude the cell would need > PQ_CENSUS_MAX_CELL
-                # members to overflow. Unnormalized embeddings with huge
-                # magnitudes trip this loudly instead of silently
-                # corrupting mean_sq_dist; remedy: normalize the vectors
-                # or census on a coarser grid.
-                worst = int(np.abs(d2_grid).max()) if len(d2_grid) else 0
-                if worst > (2**63 - 1) // PQ_CENSUS_MAX_CELL:
-                    raise ValueError(
-                        "embedding_pq_fit: subspace squared distance "
-                        f"{worst / 1e9:.3e} exceeds the int64 census "
-                        f"headroom for {PQ_CENSUS_MAX_CELL:.0e} members "
-                        "per cell — normalize the embeddings or use a "
-                        "coarser grid"
-                    )
-                d2s.append(d2_grid)
+            codes, d2 = _pq_encode(E, C)
+            # freeze each squared distance to the exact 1e-9 integer grid:
+            # the census sum is then an order-free BIGINT sum —
+            # partitioning/batching cannot move the rounded mean by an ulp
+            # (the module's exact-integer-sum discipline)
+            d2_grid = np.round(d2 * 1e9).astype(np.int64)
+            # overflow headroom: the per-cell BIGINT sum is exact only
+            # while sum(d2_1e9) < 2^63. Guard per item against the
+            # documented corpus bound — if every item in a cell hit this
+            # magnitude the cell would need > PQ_CENSUS_MAX_CELL members
+            # to overflow. Unnormalized embeddings with huge magnitudes
+            # trip this loudly instead of silently corrupting
+            # mean_sq_dist; remedy: normalize the vectors or census on a
+            # coarser grid.
+            worst = int(np.abs(d2_grid).max()) if d2_grid.size else 0
+            if worst > (2**63 - 1) // PQ_CENSUS_MAX_CELL:
+                raise ValueError(
+                    "embedding_pq_fit: subspace squared distance "
+                    f"{worst / 1e9:.3e} exceeds the int64 census "
+                    f"headroom for {PQ_CENSUS_MAX_CELL:.0e} members "
+                    "per cell — normalize the embeddings or use a "
+                    "coarser grid"
+                )
+            # subspace-major rows, as (subspace, code, d2) per item
             yield pd.DataFrame(
                 {
-                    "subspace": np.concatenate(subs),
-                    "code": np.concatenate(codes),
-                    "d2_1e9": np.concatenate(d2s),
+                    "subspace": np.repeat(
+                        np.arange(m, dtype=np.int32), len(E)
+                    ),
+                    "code": codes.T.ravel(),
+                    "d2_1e9": d2_grid.T.ravel(),
                 }
             )
 
-    enc = base.mapInPandas(encode, schema="subspace int, code int, d2_1e9 long")
+    enc = base.mapInPandas(census_rows, schema="subspace int, code int, d2_1e9 long")
     return enc.groupBy("subspace", "code").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.round(
@@ -2732,23 +2930,19 @@ def ann_pq_topk(
          candidate distance = m table gathers + adds, no multiplies;
          per-batch shortlist of shortlist_mult*k by (distance,
          neighbor_id) — deterministic;
-      4. EXACT re-rank of the shortlist: join the shortlist pairs back to
-         the raw vectors and compute true cosine JVM-side (zip_with dot,
-         fixed evaluation order), window per query to the final k.
+      4. EXACT re-rank of the shortlist (``_exact_cosine_rerank``).
 
     Scale shape: the fit is driver-side on a capped sample; the encode and
-    the ADC scan are narrow Arrow-batched maps (no shuffle; query LUTs
-    vectors broadcast; hash-chunked so each task's LUT stays under
-    TARGET_PQ_LUT_BYTES, the brute_topk-style gate); the shortlist merge window and the re-rank join
-    handle O(n_queries x shortlist) rows only. Rows-only in the registry —
+    the ADC scan are narrow Arrow-batched maps (no shuffle; query vectors
+    broadcast, hash-chunked by ``_hash_chunked`` so each task's LUT stays
+    under TARGET_PQ_LUT_BYTES); the shortlist merge window and the
+    re-rank join handle O(n_queries x shortlist) rows only. Rows-only in the registry —
     recall is floor-asserted by the oracle-paired ``ann_pq_recall_check``.
     """
     import numpy as np
-    from functools import reduce
 
     base = _emb(spark, sf_dir)
-    books, d, n = _pq_fit_codebooks(base, m, n_codes, seed, normalize=True)
-    ds = d // m
+    books, _, n = _pq_fit_codebooks(base, m, n_codes, seed, normalize=True)
     bc_books = spark.sparkContext.broadcast(books)
     # ADAPTIVE shortlist: a fixed depth loses recall as the corpus grows
     # (measured at the 10x probe: 80-deep read recall@5 0.880 — under the
@@ -2756,29 +2950,8 @@ def ann_pq_topk(
     # corpus-proportional shortlist (~1%) to hold recall; real deployments
     # bound this with IVF cell pruning (ann_ivf_topk), which is exactly
     # why flat-PQ serving pairs with a coarse quantizer at scale.
-    R_depth = max(int(shortlist_mult) * int(k), n // 100)
-
-    def encode(batches):
-        import pandas as pd
-
-        C = bc_books.value
-        for b in batches:
-            if b.empty:
-                continue
-            E = np.array(b["emb"].tolist(), dtype=np.float64)
-            E = E / np.linalg.norm(E, axis=1, keepdims=True)
-            codes = np.empty((len(E), m), dtype=np.int32)
-            for j in range(m):
-                S = E[:, j * ds : (j + 1) * ds]
-                dist = ((S[:, None, :] - C[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = dist.argmin(axis=1)
-            yield pd.DataFrame(
-                {"vec_id": b["vec_id"], "codes": list(codes)}
-            )
-
-    enc = base.mapInPandas(encode, schema="vec_id long, codes array<int>")
-
-    R = R_depth
+    R = max(int(shortlist_mult) * int(k), n // 100)
+    enc = _encode_rows(base, bc_books)
 
     def adc_chunk(queries: DataFrame) -> DataFrame:
         # broadcast the normalized query VECTORS (d*8 bytes/query), not
@@ -2795,80 +2968,46 @@ def ann_pq_topk(
         bc = spark.sparkContext.broadcast((q_ids, Q))
 
         def scan(batches):
-            import pandas as pd
-
             ids, Qm = bc.value
-            C = bc_books.value
             # per-query exact subspace distance tables, built ONCE per
             # task: (chunk, m, n_codes) <= TARGET_PQ_LUT_BYTES by the
             # chunk-size derivation
-            L = np.empty((len(Qm), m, n_codes), dtype=np.float64)
-            for j in range(m):
-                Sq = Qm[:, j * ds : (j + 1) * ds]
-                L[:, j, :] = ((Sq[:, None, :] - C[j][None, :, :]) ** 2).sum(
-                    axis=2
-                )
+            L = _pq_lut(Qm, bc_books.value)
             for b in batches:
                 if b.empty:
                     continue
-                c_ids = b["vec_id"].to_numpy()
                 codes = np.array(b["codes"].tolist(), dtype=np.int64)
-                q_step = max(1, (1 << 25) // max(1, len(c_ids)))
-                for lo in range(0, len(ids), q_step):
-                    ids_s = ids[lo : lo + q_step]
-                    Ls = L[lo : lo + q_step]
-                    d2 = np.zeros((len(ids_s), len(c_ids)))
-                    for j in range(m):
-                        d2 += Ls[:, j, :][:, codes[:, j]]
-                    sims = -d2
-                    sims[ids_s[:, None] == c_ids[None, :]] = -np.inf
-                    rr = min(R, sims.shape[1])
-                    top, nbr = _topk_rows(sims, c_ids, rr)
-                    keep = np.isfinite(top).ravel()
-                    yield pd.DataFrame(
-                        {
-                            "query_id": np.repeat(ids_s, rr)[keep],
-                            "neighbor_id": nbr.ravel()[keep],
-                            "neg_d2": top.ravel()[keep],
-                        }
-                    )
+                yield _sliced_topk(
+                    ids,
+                    b["vec_id"].to_numpy(),
+                    R,
+                    lambda lo, hi: _pq_neg_d2(L[lo:hi], codes),
+                    "neg_d2",
+                )
 
         return enc.mapInPandas(
             scan, schema="query_id long, neighbor_id long, neg_d2 double"
         )
 
-    max_chunk_queries = max(1, TARGET_PQ_LUT_BYTES // (m * n_codes * 8))
-    if n > max_chunk_queries:
-        n_chunks = -(-n // max_chunk_queries)
-        parts = [
-            adc_chunk(
-                base.filter(F.pmod(F.xxhash64("vec_id"), F.lit(n_chunks)) == i)
-            )
-            for i in range(n_chunks)
-        ]
-        scored = reduce(lambda a, b: a.unionByName(b), parts)
-    else:
-        scored = adc_chunk(base)
-
-    wS = Window.partitionBy("query_id").orderBy(F.desc("neg_d2"), "neighbor_id")
-    shortlist = (
-        scored.withColumn("rk", F.row_number().over(wS))
-        .filter(F.col("rk") <= R)
-        .select("query_id", "neighbor_id")
+    scored = _hash_chunked(
+        base, n, max(1, TARGET_PQ_LUT_BYTES // (m * n_codes * 8)), adc_chunk
     )
-    return _exact_cosine_rerank(shortlist, base, k)
+    shortlist = _top_per_query(scored, "neg_d2", R)
+    return _exact_cosine_rerank(shortlist, base, base, k)
 
 
-def _exact_cosine_rerank(shortlist: DataFrame, base: DataFrame, k: int) -> DataFrame:
-    """Exact JVM-side cosine re-rank of (query_id, neighbor_id) shortlist
-    pairs against the RAW vectors — the "refine" stage shared by the
-    flat-PQ and IVF-PQ serving paths. zip_with dot in fixed evaluation
-    order (deterministic), window top-k per query over the bounded
-    shortlist rows only."""
-    qv = base.select(F.col("vec_id").alias("query_id"), F.col("emb").alias("qe"))
-    nv = base.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("ne")
-    )
+def _exact_cosine_rerank(
+    shortlist: DataFrame, queries: DataFrame, neighbors: DataFrame, k: int
+) -> DataFrame:
+    """Exact refine stage of the compressed tiers: JVM-side cosine of each
+    (query_id, neighbor_id) shortlist pair against the RAW vectors, then
+    each query's top k. ``queries`` and ``neighbors`` are (id, vector)
+    frames — the same corpus in session, the query input and the pruned
+    raw cells on a persisted index. zip_with dot in fixed evaluation
+    order (deterministic); the window runs over the bounded shortlist
+    rows only."""
+    qv = queries.toDF("query_id", "qe")
+    nv = neighbors.toDF("neighbor_id", "ne")
     dot = F.aggregate(
         F.zip_with("qe", "ne", lambda x, y: x * y),
         F.lit(0.0),
@@ -2878,7 +3017,8 @@ def _exact_cosine_rerank(shortlist: DataFrame, base: DataFrame, k: int) -> DataF
         F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x)
     )
     ranked = (
-        shortlist.join(qv, "query_id")
+        shortlist.select("query_id", "neighbor_id")
+        .join(qv, "query_id")
         .join(nv, "neighbor_id")
         .select(
             "query_id",
@@ -2886,12 +3026,7 @@ def _exact_cosine_rerank(shortlist: DataFrame, base: DataFrame, k: int) -> DataF
             (dot / (nrm(F.col("qe")) * nrm(F.col("ne")))).alias("sim_raw"),
         )
     )
-    wF = Window.partitionBy("query_id").orderBy(F.desc("sim_raw"), "neighbor_id")
-    return (
-        ranked.withColumn("rk", F.row_number().over(wF))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim_raw", 6).alias("sim"))
-    )
+    return _rounded(_top_per_query(ranked, "sim_raw", k))
 
 
 def ann_pq_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2975,7 +3110,6 @@ def ann_bq_topk(
     ``ann_bq_recall_check`` (measured 0.96-0.99 at three scales).
     """
     import numpy as np
-    from functools import reduce
 
     base = _emb(spark, sf_dir)
     n = base.count()
@@ -3044,30 +3178,8 @@ def ann_bq_topk(
 
     # same broadcast gate as brute_topk/ann_pq_topk: above 1M queries the
     # query side hash-chunks so resident broadcast memory stays bounded
-    if n > MAX_BROADCAST_QUERIES:
-        n_chunks = -(-n // MAX_BROADCAST_QUERIES)
-        scored = reduce(
-            lambda a, b: a.unionByName(b),
-            [
-                bq_chunk(
-                    base.filter(
-                        F.pmod(F.xxhash64("vec_id"), F.lit(n_chunks)) == i
-                    )
-                )
-                for i in range(n_chunks)
-            ],
-        )
-    else:
-        scored = bq_chunk(base)
-
-    wS = Window.partitionBy("query_id").orderBy(F.desc("sim_raw"), "neighbor_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(wS))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id", "neighbor_id", F.round("sim_raw", 6).alias("sim")
-        )
-    )
+    scored = _hash_chunked(base, n, MAX_BROADCAST_QUERIES, bq_chunk)
+    return _rounded(_top_per_query(scored, "sim_raw", k))
 
 
 def ann_bq_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3075,62 +3187,6 @@ def ann_bq_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "bq", ann_bq_topk(spark, sf_dir, k=5),
         floor=BQ_RECALL_FLOOR,
     )
-
-
-def _bq_cell_kernel_factory(id_col: str, r_cell: int):
-    """Shared IVF-BQ in-cell scan kernel for the session (``ann_ivfbq_topk``)
-    and persisted (``ann_ivfbq_query``) tiers, which differ only in the
-    member id column name: unpack the two packed sign-bit words to a
-    (members, 64) {-1,+1} matrix, sliced-gemm queries against it with the
-    same-id mask, and emit each query's top ``r_cell`` per cell."""
-
-    def kernel(qg, cg):
-        import numpy as np
-        import pandas as pd
-
-        if qg.empty or cg.empty:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "s_bq": []}
-            ).astype(
-                {"query_id": "int64", "neighbor_id": "int64", "s_bq": "float64"}
-            )
-        Q = np.array(qg["qe"].tolist(), dtype=np.float64)
-        Q = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-        q_ids = qg["query_id"].to_numpy()
-        c_ids = cg[id_col].to_numpy()
-        j32 = np.arange(32, dtype=np.uint64)
-        w0 = cg["w0"].to_numpy().astype(np.uint64)
-        w1 = cg["w1"].to_numpy().astype(np.uint64)
-        bits = np.concatenate(
-            [
-                (w0[:, None] >> j32[None, :]) & 1,
-                (w1[:, None] >> j32[None, :]) & 1,
-            ],
-            axis=1,
-        )
-        Bpm = bits.astype(np.float64) * 2.0 - 1.0
-        out_q, out_n, out_s = [], [], []
-        q_step = max(1, KERNEL_SLICE_ELEMS // max(1, len(c_ids)))
-        for lo in range(0, len(q_ids), q_step):
-            Qs = Q[lo : lo + q_step]
-            ids_s = q_ids[lo : lo + q_step]
-            sims = Qs @ Bpm.T
-            sims[ids_s[:, None] == c_ids[None, :]] = -np.inf
-            rr = min(r_cell, sims.shape[1])
-            top, nbr = _topk_rows(sims, c_ids, rr)
-            keep = np.isfinite(top).ravel()
-            out_q.append(np.repeat(ids_s, rr)[keep])
-            out_n.append(nbr.ravel()[keep])
-            out_s.append(top.ravel()[keep])
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "s_bq": np.concatenate(out_s),
-            }
-        )
-
-    return kernel
 
 
 def ann_ivfbq_topk(
@@ -3144,13 +3200,11 @@ def ann_ivfbq_topk(
     seed: int = 42,
 ) -> DataFrame:
     """IVF-BQ approximate top-k — the 1-bit in-cell rung of the serving
-    ladder (round-13 verdict lead 5): IVF's coarse quantizer prunes to
-    ``n_probe`` cells per query (the ``ann_ivf_topk`` half), the scan
-    INSIDE each probed cell runs over 1-bit sign codes (the
-    ``ann_bq_topk`` half: asymmetric q . sign(c) scoring — symmetric
-    hamming measured ~0.80 recall and was rejected for the flat tier),
-    and an exact cosine re-rank of the merged shortlist restores
-    precision (the shared ``_exact_cosine_rerank`` refine).
+    ladder (round-13 verdict lead 5): the shared IVF pipeline
+    (``_ivf_session``) with the BQ codec — members carry their packed
+    sign bits and are scored asymmetrically, q . sign(c) (the
+    ``ann_bq_topk`` half; symmetric hamming measured ~0.80 recall and was
+    rejected for the flat tier) — then the exact refine.
 
     vs IVF-PQ (``ann_ivfpq_topk``): the cogrouped member payload is TWO
     bigints per vector (16 B — 4x under PQ's m=16 int32 codes, 32x under
@@ -3161,89 +3215,23 @@ def ann_ivfbq_topk(
     only ~n_assign * n_probe / n_cells of the corpus instead of all of
     it, so the scan cost per query grows as sqrt(n), not n.
 
-    Scale shape: codebook broadcast; member packing is a narrow Arrow
-    map over the spilled assignment; the only wide ops are the cogroup
-    shuffle on cell id (16 B payloads) and the skinny shortlist
-    re-rank join. Rows-only in the registry (k-means is not
-    SQL-expressible); the oracle-paired ``ann_ivfbq_recall_check``
-    floor-asserts the composition end-to-end.
+    Rows-only in the registry (k-means is not SQL-expressible); the
+    oracle-paired ``ann_ivfbq_recall_check`` floor-asserts the
+    composition end-to-end.
     """
-    import numpy as np
-
-    base = _emb(spark, sf_dir)
-    n = base.count()
-    if n_cells is None:
-        n_cells = _adaptive_cells(n)
-    if n_probe is None:
-        n_probe = max(3, n_cells // 3)  # constant FRACTION (see ann_ivf_topk)
-    centers, with_vec = _codebook_cached(spark, sf_dir, n_cells, seed)
-    bc_centers = spark.sparkContext.broadcast(centers)
-    assigned = _cell_assign(with_vec, bc_centers, n_assign)
-
-    def pack(batches):
-        import pandas as pd
-
-        for b in batches:
-            if b.empty:
-                continue
-            E = np.array(b["emb"].tolist(), dtype=np.float64)
-            bits = E > 0  # sign(raw) == sign(normalized): norm > 0
-            j32 = np.arange(32, dtype=np.uint64)
-            w0 = (bits[:, :32].astype(np.uint64) << j32[None, :]).sum(axis=1)
-            w1 = (bits[:, 32:64].astype(np.uint64) << j32[None, :]).sum(axis=1)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": b["vec_id"],
-                    "cell": b["cell"],
-                    "w0": w0.astype(np.int64),
-                    "w1": w1.astype(np.int64),
-                }
-            )
-
-    members = assigned.mapInPandas(
-        pack, schema="neighbor_id long, cell int, w0 long, w1 long"
+    base, assigned, q, n_probe = _ivf_session(
+        spark, sf_dir, n_cells, n_probe, n_assign, seed
     )
-
-    def query_probes(batches):
-        import pandas as pd
-
-        C = bc_centers.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            Q = np.array(pdf["emb"].tolist(), dtype=np.float64)
-            dq = _sqdist_to_centers(Q, C)
-            probes = np.argsort(dq, axis=1, kind="stable")[:, :n_probe]
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["vec_id"].repeat(n_probe),
-                    "qe": pdf["emb"].repeat(n_probe),
-                    "cell": probes.ravel(),
-                }
-            )
-
-    q = base.mapInPandas(
-        query_probes, schema="query_id long, qe array<double>, cell int"
+    members = _encode_rows(assigned)
+    r_cell = int(cell_shortlist_mult) * int(k)
+    shortlist = _ivf_search(
+        q,
+        members,
+        _bq_cell_kernel_factory(r_cell),
+        "s_bq",
+        r_cell * max(1, n_probe // 2),
     )
-
-    R_cell = int(cell_shortlist_mult) * int(k)
-    bq_cell_kernel = _bq_cell_kernel_factory("neighbor_id", R_cell)
-
-    local = (
-        q.groupby("cell")
-        .cogroup(members.groupby("cell"))
-        .applyInPandas(
-            bq_cell_kernel, schema="query_id long, neighbor_id long, s_bq double"
-        )
-    )
-    wS = Window.partitionBy("query_id").orderBy(F.desc("s_bq"), "neighbor_id")
-    shortlist = (
-        local.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rk", F.row_number().over(wS))
-        .filter(F.col("rk") <= R_cell * max(1, n_probe // 2))
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_cosine_rerank(shortlist, base, k)
+    return _exact_cosine_rerank(shortlist, base, base, k)
 
 
 def ann_ivfbq_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3266,163 +3254,35 @@ def ann_ivfpq_topk(
     seed: int = 42,
 ) -> DataFrame:
     """IVF-PQ approximate top-k — the composed 100 TB serving
-    architecture (FAISS's IVFPQ + refine): the IVF coarse quantizer
-    prunes to ``n_probe`` cells per query, the PQ codes make the scan
-    INSIDE each cell compressed-domain (ADC over m codes/vector — the
-    cell kernel never touches raw member vectors), and an exact cosine
-    re-rank ("refine") of the merged shortlist restores precision.
-    ``ann_ivf_topk`` is the exact-in-cell half, ``ann_pq_topk`` the
-    flat-compressed half; this composes them.
-
-    Pipeline:
-      1. coarse codebook (cached seeded Lloyd, ~sqrt(n) cells) + spilled
-         assignment (n_assign nearest cells per vector — the boundary-miss
-         fix, same as IVF);
-      2. PQ codebooks on L2-normalized vectors; members encoded ONCE (a
-         narrow Arrow map adds `codes` to the assignment);
-      3. per query: probe the n_probe nearest cells (cell ids + the raw
-         query vector ride the probe rows);
-      4. cogroup on cell id: the kernel builds each query's (m x n_codes)
-         LUT and gathers ADC distances against the cell's CODES —
-         per-candidate cost is m table gathers, no multiplies, and the
-         shuffled member payload is m ints instead of d doubles (the
-         compression is IN THE PLAN, not just on disk);
-      5. per-cell shortlist (cell_shortlist_mult*k by (distance, id)),
-         global merge window, exact re-rank of the merged shortlist via
-         the shared ``_exact_cosine_rerank``.
+    architecture (FAISS's IVFPQ + refine): the shared IVF pipeline
+    (``_ivf_session``) with the PQ-ADC codec. m PQ codebooks are fit on
+    L2-normalized vectors and the spilled members encoded ONCE, so the
+    cogrouped member payload is m ints instead of d doubles (the
+    compression is IN THE PLAN, not just on disk) and the cell kernel
+    never touches raw member vectors; the exact refine restores
+    precision. ``ann_ivf_topk`` is the exact-in-cell half,
+    ``ann_pq_topk`` the flat-compressed half; this composes them.
 
     Recall comes from three levers (probe fraction, spill, shortlist
     depth); the oracle-paired ``ann_ivfpq_recall_check`` floor-asserts
     the composition end-to-end. Rows-only in the registry (k-means +
     Lloyd are not SQL-expressible).
     """
-    import numpy as np
-
-    base = _emb(spark, sf_dir)
-    n = base.count()
-    if n_cells is None:
-        n_cells = _adaptive_cells(n)
-    if n_probe is None:
-        n_probe = max(3, n_cells // 3)
-    centers, with_vec = _codebook_cached(spark, sf_dir, n_cells, seed)
-    bc_centers = spark.sparkContext.broadcast(centers)
-    books, d, _ = _pq_fit_codebooks(base, m, n_codes, seed + 100, normalize=True)
-    ds = d // m
+    base, assigned, q, n_probe = _ivf_session(
+        spark, sf_dir, n_cells, n_probe, n_assign, seed
+    )
+    books, _, _ = _pq_fit_codebooks(base, m, n_codes, seed + 100, normalize=True)
     bc_books = spark.sparkContext.broadcast(books)
-
-    # members: spilled cell assignment + PQ codes, one narrow map each
-    assigned = _cell_assign(with_vec, bc_centers, n_assign)
-
-    def encode(batches):
-        import pandas as pd
-
-        C = bc_books.value
-        for b in batches:
-            if b.empty:
-                continue
-            E = np.array(b["emb"].tolist(), dtype=np.float64)
-            E = E / np.linalg.norm(E, axis=1, keepdims=True)
-            codes = np.empty((len(E), m), dtype=np.int32)
-            for j in range(m):
-                S = E[:, j * ds : (j + 1) * ds]
-                dist = ((S[:, None, :] - C[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = dist.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": b["vec_id"],
-                    "cell": b["cell"],
-                    "codes": list(codes),
-                }
-            )
-
-    members = assigned.mapInPandas(
-        encode, schema="neighbor_id long, cell int, codes array<int>"
+    members = _encode_rows(assigned, bc_books)
+    r_cell = int(cell_shortlist_mult) * int(k)
+    shortlist = _ivf_search(
+        q,
+        members,
+        _pq_cell_kernel_factory(r_cell, bc_books),
+        "neg_d2",
+        r_cell * max(1, n_probe // 2),
     )
-
-    def query_probes(batches):
-        import pandas as pd
-
-        C = bc_centers.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            Q = np.array(pdf["emb"].tolist(), dtype=np.float64)
-            dq = _sqdist_to_centers(Q, C)
-            probes = np.argsort(dq, axis=1, kind="stable")[:, :n_probe]
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["vec_id"].repeat(n_probe),
-                    "qe": pdf["emb"].repeat(n_probe),
-                    "cell": probes.ravel(),
-                }
-            )
-
-    q = base.mapInPandas(
-        query_probes, schema="query_id long, qe array<double>, cell int"
-    )
-
-    R_cell = int(cell_shortlist_mult) * int(k)
-
-    def adc_cell_kernel(qg, cg):
-        import pandas as pd
-
-        if qg.empty or cg.empty:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "neg_d2": []}
-            ).astype({"query_id": "int64", "neighbor_id": "int64", "neg_d2": "float64"})
-        C = bc_books.value
-        Q = np.array(qg["qe"].tolist(), dtype=np.float64)
-        Q = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-        q_ids = qg["query_id"].to_numpy()
-        codes = np.array(cg["codes"].tolist(), dtype=np.int64)
-        c_ids = cg["neighbor_id"].to_numpy()
-        # per-query LUT for THIS cell's queries (rebuilt per probed cell —
-        # the per-query-once precompute is a serving-layer cache; here the
-        # rebuild is m*n_codes*ds flops per query-probe, amortized over
-        # the cell's members)
-        out_q, out_n, out_d = [], [], []
-        q_step = max(1, KERNEL_SLICE_ELEMS // max(1, len(c_ids)))
-        for lo in range(0, len(q_ids), q_step):
-            Qs = Q[lo : lo + q_step]
-            ids_s = q_ids[lo : lo + q_step]
-            L = np.empty((len(Qs), m, n_codes), dtype=np.float64)
-            for j in range(m):
-                Sq = Qs[:, j * ds : (j + 1) * ds]
-                L[:, j, :] = ((Sq[:, None, :] - C[j][None, :, :]) ** 2).sum(axis=2)
-            d2 = np.zeros((len(Qs), len(c_ids)))
-            for j in range(m):
-                d2 += L[:, j, :][:, codes[:, j]]
-            sims = -d2
-            sims[ids_s[:, None] == c_ids[None, :]] = -np.inf
-            rr = min(R_cell, sims.shape[1])
-            top, nbr = _topk_rows(sims, c_ids, rr)
-            keep = np.isfinite(top).ravel()
-            out_q.append(np.repeat(ids_s, rr)[keep])
-            out_n.append(nbr.ravel()[keep])
-            out_d.append(top.ravel()[keep])
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "neg_d2": np.concatenate(out_d),
-            }
-        )
-
-    local = (
-        q.groupby("cell")
-        .cogroup(members.groupby("cell"))
-        .applyInPandas(
-            adc_cell_kernel, schema="query_id long, neighbor_id long, neg_d2 double"
-        )
-    )
-    wS = Window.partitionBy("query_id").orderBy(F.desc("neg_d2"), "neighbor_id")
-    shortlist = (
-        local.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rk", F.row_number().over(wS))
-        .filter(F.col("rk") <= R_cell * max(1, n_probe // 2))
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_cosine_rerank(shortlist, base, k)
+    return _exact_cosine_rerank(shortlist, base, base, k)
 
 
 def ann_ivfpq_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3459,13 +3319,11 @@ def ivf_index_add_pq(
     counts both trees and refuses with the re-encode instruction rather
     than silently missing the appended vectors.
     """
-    import numpy as np
     import pandas as pd
 
     assigned = _ivf_relation(spark, index_dir, "assignments")
     base = assigned.select("vec_id", "emb").dropDuplicates(["vec_id"])
-    books, d, _ = _pq_fit_codebooks(base, m, n_codes, seed, normalize=True)
-    ds = d // m
+    books, _, _ = _pq_fit_codebooks(base, m, n_codes, seed, normalize=True)
     kk = books.shape[1]
     spark.createDataFrame(
         pd.DataFrame(
@@ -3477,26 +3335,8 @@ def ivf_index_add_pq(
         )
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/pq_codebooks")
     bc = spark.sparkContext.broadcast(books)
-
-    def encode(batches):
-        C = bc.value
-        for b in batches:
-            if b.empty:
-                continue
-            E = np.array(b["emb"].tolist(), dtype=np.float64)
-            E = E / np.linalg.norm(E, axis=1, keepdims=True)
-            codes = np.empty((len(E), m), dtype=np.int32)
-            for j in range(m):
-                S = E[:, j * ds : (j + 1) * ds]
-                dist = ((S[:, None, :] - C[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = dist.argmin(axis=1)
-            yield pd.DataFrame(
-                {"vec_id": b["vec_id"], "cell": b["cell"], "codes": list(codes)}
-            )
-
     (
-        assigned.select("vec_id", "emb", "cell")
-        .mapInPandas(encode, schema="vec_id long, cell int, codes array<int>")
+        _encode_rows(assigned.select("vec_id", "emb", "cell"), bc)
         .repartition("cell")
         .write.mode("overwrite")
         .partitionBy("cell")
@@ -3513,175 +3353,38 @@ def ann_ivfpq_query(
     n_probe: int = 3,
     cell_shortlist_mult: int = 8,
 ) -> DataFrame:
-    """Top-k search against a persisted IVF index's PQ LAYER: probe-list
-    directory pruning on ``pq_codes/cell=N/`` (the raw-vector tree is
-    not even opened for the scan), per-cell compressed-domain ADC, exact
-    cosine refine of the merged shortlist against the PRUNED raw cells.
-    The serve-many composition of ``ann_ivf_query`` (pruning) and
-    ``ann_pq_topk`` (ADC): codebooks and codes amortize across queries.
-
-    Staleness guard: raw appends without a re-encode leave pq_codes
-    smaller than assignments — refused with the fix instruction instead
-    of silently missing appended vectors.
+    """Top-k search against a persisted IVF index's PQ LAYER
+    (``ivf_index_add_pq``): the shared persisted pipeline
+    (``_ivf_index_probe``) scans the probed ``pq_codes/cell=N/``
+    directories with the PQ-ADC kernel — the raw-vector tree is opened
+    only by the refine, and only for the probed cells. The serve-many
+    composition of ``ann_ivf_query`` (pruning) and ``ann_pq_topk``
+    (ADC): codebooks and codes amortize across queries. A missing or
+    STALE layer is refused with the re-encode instruction.
     """
-    import os
-
     import numpy as np
 
-    if not os.path.isdir(os.path.join(index_dir, "pq_codes")):
-        raise ValueError(
-            f"index at {index_dir} has no PQ layer; run ivf_index_add_pq first"
-        )
-    n_assigned = _ivf_relation(spark, index_dir, "assignments").count()
-    n_codes_rows = _ivf_relation(spark, index_dir, "pq_codes").count()
-    if n_assigned != n_codes_rows:
-        raise ValueError(
-            f"PQ layer is STALE ({n_codes_rows} encoded of {n_assigned} "
-            "indexed rows — vectors were appended after ivf_index_add_pq); "
-            "re-run ivf_index_add_pq to re-encode"
-        )
+    q, codes, probed = _ivf_index_probe(
+        spark, index_dir, queries, n_probe, layer="pq_codes"
+    )
     cb = _ivf_relation(spark, index_dir, "pq_codebooks").collect()
     m = max(r["subspace"] for r in cb) + 1
     kk = max(r["code"] for r in cb) + 1
-    ds = len(cb[0]["center"])
-    books = np.zeros((m, kk, ds), dtype=np.float64)
+    books = np.zeros((m, kk, len(cb[0]["center"])), dtype=np.float64)
     for r in cb:
         books[r["subspace"], r["code"]] = r["center"]
     bc_books = spark.sparkContext.broadcast(books)
-
-    cent = _ivf_relation(spark, index_dir, "centroids").orderBy("cell").collect()
-    C = np.array([r["centroid"] for r in cent], dtype=np.float64)
-    bc_cent = spark.sparkContext.broadcast(C)
-
-    def probes_for(batches):
-        import pandas as pd
-
-        cmat = bc_cent.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            Q = np.array(pdf["qe"].tolist(), dtype=np.float64)
-            dq = _sqdist_to_centers(Q, cmat)
-            probes = np.argsort(dq, axis=1, kind="stable")[:, :n_probe]
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].repeat(n_probe),
-                    "qe": pdf["qe"].repeat(n_probe),
-                    "cell": probes.ravel(),
-                }
-            )
-
-    # one probe slot shared with ann_ivf_query: one outstanding table
-    q = pin(
-        queries.select(
-            F.col("vec_id").alias("query_id"),
-            as_double(F.col("embedding")).alias("qe"),
-        ).mapInPandas(probes_for, schema="query_id long, qe array<double>, cell int"),
-        "ivf_probe",
+    r_cell = int(cell_shortlist_mult) * int(k)
+    shortlist = _ivf_search(
+        q,
+        codes,
+        # the same-id mask matches the exact persisted path: a query never
+        # retrieves the indexed row with its own vec_id
+        _pq_cell_kernel_factory(r_cell, bc_books),
+        "neg_d2",
+        r_cell * max(1, n_probe // 2),
     )
-    probed = [r["cell"] for r in q.select("cell").distinct().collect()]
-    codes_rel = _ivf_relation(spark, index_dir, "pq_codes").filter(
-        F.col("cell").isin(probed)
-    )
-
-    R_cell = int(cell_shortlist_mult) * int(k)
-
-    def adc_cell_kernel(qg, cg):
-        import pandas as pd
-
-        if qg.empty or cg.empty:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "neg_d2": []}
-            ).astype(
-                {"query_id": "int64", "neighbor_id": "int64", "neg_d2": "float64"}
-            )
-        B = bc_books.value
-        Q = np.array(qg["qe"].tolist(), dtype=np.float64)
-        Q = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-        q_ids = qg["query_id"].to_numpy()
-        codes = np.array(cg["codes"].tolist(), dtype=np.int64)
-        c_ids = cg["vec_id"].to_numpy()
-        out_q, out_n, out_d = [], [], []
-        q_step = max(1, KERNEL_SLICE_ELEMS // max(1, len(c_ids)))
-        for lo in range(0, len(q_ids), q_step):
-            Qs = Q[lo : lo + q_step]
-            ids_s = q_ids[lo : lo + q_step]
-            L = np.empty((len(Qs), m, kk), dtype=np.float64)
-            for j in range(m):
-                Sq = Qs[:, j * ds : (j + 1) * ds]
-                L[:, j, :] = ((Sq[:, None, :] - B[j][None, :, :]) ** 2).sum(axis=2)
-            d2 = np.zeros((len(Qs), len(c_ids)))
-            for j in range(m):
-                d2 += L[:, j, :][:, codes[:, j]]
-            sims = -d2
-            # same-id mask, matching _cell_topk_kernel's semantics on the
-            # exact persisted path: a query never retrieves the indexed
-            # row with its own vec_id (corpus-vector queries would
-            # otherwise return themselves; external-namespace queries are
-            # unaffected unless ids collide, identical to ann_ivf_query)
-            sims[ids_s[:, None] == c_ids[None, :]] = -np.inf
-            rr = min(R_cell, sims.shape[1])
-            top, nbr = _topk_rows(sims, c_ids, rr)
-            keep = np.isfinite(top).ravel()
-            out_q.append(np.repeat(ids_s, rr)[keep])
-            out_n.append(nbr.ravel()[keep])
-            out_d.append(top.ravel()[keep])
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "neg_d2": np.concatenate(out_d),
-            }
-        )
-
-    local = (
-        q.groupby("cell")
-        .cogroup(codes_rel.groupby("cell"))
-        .applyInPandas(
-            adc_cell_kernel, schema="query_id long, neighbor_id long, neg_d2 double"
-        )
-    )
-    wS = Window.partitionBy("query_id").orderBy(F.desc("neg_d2"), "neighbor_id")
-    shortlist = (
-        local.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rk", F.row_number().over(wS))
-        .filter(F.col("rk") <= R_cell * max(1, n_probe // 2))
-        .select("query_id", "neighbor_id")
-    )
-    # exact refine: neighbor vectors come from the PRUNED raw cells (the
-    # only read of the raw tree), query vectors ride from the input
-    nv = (
-        _ivf_relation(spark, index_dir, "assignments")
-        .filter(F.col("cell").isin(probed))
-        .select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("ne"))
-        .dropDuplicates(["neighbor_id"])
-    )
-    qv = queries.select(
-        F.col("vec_id").alias("query_id"), as_double(F.col("embedding")).alias("qe")
-    )
-    dot = F.aggregate(
-        F.zip_with("qe", "ne", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    ranked = (
-        shortlist.join(qv, "query_id")
-        .join(nv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot / (nrm(F.col("qe")) * nrm(F.col("ne")))).alias("sim_raw"),
-        )
-    )
-    wF = Window.partitionBy("query_id").orderBy(F.desc("sim_raw"), "neighbor_id")
-    return (
-        ranked.withColumn("rk", F.row_number().over(wF))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim_raw", 6).alias("sim"))
-    )
+    return _ivf_index_refine(spark, index_dir, queries, probed, shortlist, k)
 
 
 def ivf_index_add_bq(spark: SparkSession, index_dir: str) -> None:
@@ -3702,33 +3405,12 @@ def ivf_index_add_bq(spark: SparkSession, index_dir: str) -> None:
     ``ann_ivfbq_query`` refuses with the re-encode instruction (same
     guard as the PQ layer).
     """
-    import numpy as np
-
-    assigned = _ivf_relation(spark, index_dir, "assignments")
-
-    def pack(batches):
-        import pandas as pd
-
-        j32 = np.arange(32, dtype=np.uint64)
-        for b in batches:
-            if b.empty:
-                continue
-            E = np.array(b["emb"].tolist(), dtype=np.float64)
-            bits = E > 0
-            w0 = (bits[:, :32].astype(np.uint64) << j32[None, :]).sum(axis=1)
-            w1 = (bits[:, 32:64].astype(np.uint64) << j32[None, :]).sum(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": b["vec_id"],
-                    "cell": b["cell"],
-                    "w0": w0.astype(np.int64),
-                    "w1": w1.astype(np.int64),
-                }
-            )
-
     (
-        assigned.select("vec_id", "emb", "cell")
-        .mapInPandas(pack, schema="vec_id long, cell int, w0 long, w1 long")
+        _encode_rows(
+            _ivf_relation(spark, index_dir, "assignments").select(
+                "vec_id", "emb", "cell"
+            )
+        )
         .repartition("cell")
         .write.mode("overwrite")
         .partitionBy("cell")
@@ -3745,114 +3427,25 @@ def ann_ivfbq_query(
     n_probe: int = 3,
     cell_shortlist_mult: int = 16,
 ) -> DataFrame:
-    """Top-k search against a persisted IVF index's BQ LAYER: probe-list
-    directory pruning on ``bq_codes/cell=N/`` (16-byte rows; the raw
-    tree is not opened for the scan), per-cell asymmetric sign-bit first
-    pass, exact cosine refine of the merged shortlist against the PRUNED
-    raw cells. The serve-many composition of ``ann_ivf_query`` (pruning)
-    and ``ann_bq_topk`` (scoring); shortlist mult defaults 16 — one
-    notch deeper than PQ's 8, the 1-bit coarseness lever (see
-    ``ann_ivfbq_topk``).
-
-    Staleness guard: raw appends without a re-encode leave bq_codes
-    smaller than assignments — refused with the fix instruction.
+    """Top-k search against a persisted IVF index's BQ LAYER
+    (``ivf_index_add_bq``): the shared persisted pipeline
+    (``_ivf_index_probe``) scans the probed ``bq_codes/cell=N/``
+    directories (16-byte rows) with the asymmetric sign-bit kernel. The
+    serve-many composition of ``ann_ivf_query`` (pruning) and
+    ``ann_bq_topk`` (scoring); shortlist mult defaults 16 — one notch
+    deeper than PQ's 8, the 1-bit coarseness lever (see
+    ``ann_ivfbq_topk``). A missing or STALE layer is refused with the
+    re-encode instruction.
     """
-    import os
-
-    import numpy as np
-
-    if not os.path.isdir(os.path.join(index_dir, "bq_codes")):
-        raise ValueError(
-            f"index at {index_dir} has no BQ layer; run ivf_index_add_bq first"
-        )
-    n_assigned = _ivf_relation(spark, index_dir, "assignments").count()
-    n_bq_rows = _ivf_relation(spark, index_dir, "bq_codes").count()
-    if n_assigned != n_bq_rows:
-        raise ValueError(
-            f"BQ layer is STALE ({n_bq_rows} encoded of {n_assigned} "
-            "indexed rows — vectors were appended after ivf_index_add_bq); "
-            "re-run ivf_index_add_bq to re-encode"
-        )
-    cent = _ivf_relation(spark, index_dir, "centroids").orderBy("cell").collect()
-    C = np.array([r["centroid"] for r in cent], dtype=np.float64)
-    bc_cent = spark.sparkContext.broadcast(C)
-
-    def probes_for(batches):
-        import pandas as pd
-
-        cmat = bc_cent.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            Q = np.array(pdf["qe"].tolist(), dtype=np.float64)
-            dq = _sqdist_to_centers(Q, cmat)
-            probes = np.argsort(dq, axis=1, kind="stable")[:, :n_probe]
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].repeat(n_probe),
-                    "qe": pdf["qe"].repeat(n_probe),
-                    "cell": probes.ravel(),
-                }
-            )
-
-    q = pin(
-        queries.select(
-            F.col("vec_id").alias("query_id"),
-            as_double(F.col("embedding")).alias("qe"),
-        ).mapInPandas(probes_for, schema="query_id long, qe array<double>, cell int"),
-        "ivf_probe",
+    q, codes, probed = _ivf_index_probe(
+        spark, index_dir, queries, n_probe, layer="bq_codes"
     )
-    probed = [r["cell"] for r in q.select("cell").distinct().collect()]
-    codes_rel = _ivf_relation(spark, index_dir, "bq_codes").filter(
-        F.col("cell").isin(probed)
+    r_cell = int(cell_shortlist_mult) * int(k)
+    shortlist = _ivf_search(
+        q,
+        codes,
+        _bq_cell_kernel_factory(r_cell),
+        "s_bq",
+        r_cell * max(1, n_probe // 2),
     )
-
-    R_cell = int(cell_shortlist_mult) * int(k)
-    bq_cell_kernel = _bq_cell_kernel_factory("vec_id", R_cell)
-
-    local = (
-        q.groupby("cell")
-        .cogroup(codes_rel.groupby("cell"))
-        .applyInPandas(
-            bq_cell_kernel, schema="query_id long, neighbor_id long, s_bq double"
-        )
-    )
-    wS = Window.partitionBy("query_id").orderBy(F.desc("s_bq"), "neighbor_id")
-    shortlist = (
-        local.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rk", F.row_number().over(wS))
-        .filter(F.col("rk") <= R_cell * max(1, n_probe // 2))
-        .select("query_id", "neighbor_id")
-    )
-    nv = (
-        _ivf_relation(spark, index_dir, "assignments")
-        .filter(F.col("cell").isin(probed))
-        .select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("ne"))
-        .dropDuplicates(["neighbor_id"])
-    )
-    qv = queries.select(
-        F.col("vec_id").alias("query_id"), as_double(F.col("embedding")).alias("qe")
-    )
-    dot = F.aggregate(
-        F.zip_with("qe", "ne", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    ranked = (
-        shortlist.join(qv, "query_id")
-        .join(nv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot / (nrm(F.col("qe")) * nrm(F.col("ne")))).alias("sim_raw"),
-        )
-    )
-    wF = Window.partitionBy("query_id").orderBy(F.desc("sim_raw"), "neighbor_id")
-    return (
-        ranked.withColumn("rk", F.row_number().over(wF))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim_raw", 6).alias("sim"))
-    )
+    return _ivf_index_refine(spark, index_dir, queries, probed, shortlist, k)

@@ -1,15 +1,18 @@
-"""Custom stateful streaming operator via applyInPandasWithState.
+"""Custom stateful streaming operator: a per-user running profile (event
+count, exact integer value sum, last-seen timestamp) that emits an updated
+row per user per micro-batch.
 
-The built-in windows (streaming/events.py) cover time-bucketed aggregation;
-this module is the escape hatch for operator semantics Spark lacks — here, a
-per-user running profile (event count, value sum, last-seen timestamp) that
-emits an updated row per user per micro-batch and expires idle users via
-processing-time timeout.
+The profile is written as a transformWithState ``StatefulProcessor``
+(``MicroProfileProcessor``) and executed on the applyInPandasWithState
+engine through a small compat shim (``run_stateful_processor_compat``): the
+native transformWithStateInPandas worker needs the ``protobuf`` package,
+which this environment does not ship, while the processor class itself
+imports without it.
 
 State design for scale: state lives in the state store partitioned by the
-group key, so memory is O(active keys), not O(events); the timeout bounds
-"active". This is the Spark-native equivalent of a custom HBase
-coprocessor-style running aggregate.
+group key, so memory is O(active keys), not O(events). This is the
+Spark-native equivalent of a custom HBase coprocessor-style running
+aggregate.
 """
 
 from __future__ import annotations
@@ -18,118 +21,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = "user_id bigint, n_events bigint, sum_value double, last_seen_us bigint"
-STATE_SCHEMA = "n bigint, total double, last_us bigint"
-
-
-def _make_update_fn(idle_timeout_ms: int | None):
-    def update_user_profile(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        n, total, last_us = state.get if state.exists else (0, 0.0, 0)
-        for pdf in batches:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            last_us = max(last_us, int(pdf["us"].max()))
-        state.update((n, total, last_us))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "sum_value": [total],
-                "last_seen_us": [last_us],
-            }
-        )
-
-    return update_user_profile
-
-
-def user_profiles(stream: DataFrame, idle_timeout_ms: int | None = None) -> DataFrame:
-    """Running per-user profile over the events stream.
-
-    In production pass ``idle_timeout_ms`` (e.g. 1h) so idle users expire
-    from the state store — with ProcessingTimeTimeout the engine schedules
-    state-cleanup triggers, which also means an availableNow bounded drain
-    keeps running cleanup batches instead of terminating; bounded tests run
-    with no timeout.
-    """
-    from pyspark.sql import functions as F
-
-    with_us = stream.select(
-        "user_id", "value", F.unix_micros(F.col("ts")).alias("us")
-    )
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if idle_timeout_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return with_us.groupBy("user_id").applyInPandasWithState(
-        _make_update_fn(idle_timeout_ms),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=timeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithState twin (round 4). Spark 4's transformWithStateInPandas is
-# the successor API to applyInPandasWithState: named typed state variables
-# (Value/List/Map) instead of one tuple, explicit timer registration
-# instead of a per-call timeout, and the state schema can EVOLVE across
-# restarts. Same operator semantics as user_profiles, kept as a parallel
-# implementation and parity-tested on bounded input — migrating a fleet of
-# stateful jobs is exactly when you want both APIs proven equivalent.
-#
-# The StatefulProcessor CLASS imports without protobuf; only STARTING a
-# transformWithStateInPandas query needs the proto RPC codec. That split is
-# what makes the compat shim below possible: the same processor object runs
-# on the applyInPandasWithState engine, so its logic is parity-TESTED in
-# this image even though the native API is env-gated.
-
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-
-class ProfileProcessor(StatefulProcessor):
-    """Running per-user profile as a transformWithState StatefulProcessor.
-
-    Executed two ways: natively via transformWithStateInPandas where
-    protobuf exists (``user_profiles_tws``), and on the
-    applyInPandasWithState engine via the compat shim everywhere
-    (``user_profiles_tws_compat``) — both parity-tested against the batch
-    ground truth."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("profile", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        if self._state.exists():
-            n, total, last_us = self._state.get()
-        else:
-            n, total, last_us = 0, 0.0, 0
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            last_us = max(last_us, int(pdf["us"].max()))
-        self._state.update((n, total, last_us))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "sum_value": [total],
-                "last_seen_us": [last_us],
-            }
-        )
-
-    def close(self) -> None:
-        pass
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
 class _ValueStateCompat:
@@ -194,7 +87,7 @@ def run_stateful_processor_compat(
     write-back so state mutations made after the last yield still land.
 
     State stays in the legacy state store partitioned by the group key —
-    the scale story is identical to user_profiles: O(active keys) memory,
+    O(active keys) memory,
     per-key sequential processing, shuffle only on the group key.
     """
 
@@ -236,26 +129,12 @@ def _with_us(stream: DataFrame) -> DataFrame:
     )
 
 
-def user_profiles_tws_compat(stream: DataFrame) -> DataFrame:
-    """ProfileProcessor (the transformWithState implementation) executed
-    through the compat shim — runs everywhere, parity-tested against both
-    ``user_profiles`` and the batch ground truth."""
-    return run_stateful_processor_compat(
-        _with_us(stream).groupBy("user_id"),
-        ProfileProcessor,
-        OUTPUT_SCHEMA,
-        STATE_SCHEMA,
-        output_mode="update",
-    )
-
-
 class MicroProfileProcessor(StatefulProcessor):
     """Integer-micros running profile — the DRIVER-VERIFIED stateful form.
 
-    ``ProfileProcessor`` accumulates the value sum as a python float, so
-    the converged total's low bits depend on micro-batch boundaries — fine
-    for the tolerance-tested parity tests, unusable for a hash-compared
-    SQL oracle. This twin accumulates ``floor(value * 1e6)`` as exact
+    A python-float value sum would make the converged total's low bits
+    depend on micro-batch boundaries, unusable for a hash-compared SQL
+    oracle. This processor accumulates ``floor(value * 1e6)`` as exact
     int64 micros: floor of an IEEE double is deterministic and identical
     across engines (no tie-breaking rule, unlike round-half-even vs
     round-half-away), integer addition is order-independent, so the
@@ -306,35 +185,4 @@ def user_profiles_micros(stream: DataFrame) -> DataFrame:
         "user_id bigint, n_events bigint, value_micros bigint, last_seen_us bigint",
         "n bigint, micros bigint, last_us bigint",
         output_mode="update",
-    )
-
-
-def user_profiles_tws(stream: DataFrame) -> DataFrame:
-    """Running per-user profile via native transformWithStateInPandas.
-
-    ENV-GATED (same policy as sources/hbase.py and the multimodal
-    decoders): the transformWithState Python worker speaks protobuf to
-    the state server and this image does not ship `protobuf`
-    (pyspark.sql.streaming.proto imports google.protobuf at PRE_INIT and
-    the driver worker crashes with a -2 init failure — verified). The
-    SAME ProfileProcessor runs — and is parity-tested — in this image via
-    ``user_profiles_tws_compat``; here the native API raises before
-    starting a doomed query.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the `protobuf` package "
-            "(the stateful-processor worker's RPC codec), which is not "
-            "installed in this environment; use user_profiles_tws_compat "
-            "(same ProfileProcessor on the applyInPandasWithState engine) "
-            "or user_profiles — parity-tested equivalent semantics"
-        ) from e
-
-    return _with_us(stream).groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=ProfileProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )

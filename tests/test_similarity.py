@@ -198,6 +198,28 @@ def test_brute_topk_stays_exact_above_gate_via_chunking(spark, embeddings, monke
         f"driver collect far exceeded the per-chunk bound: {collected_sizes}"
     )
 
+    # the flat PQ and BQ scans share the same hash-chunk gate, each with
+    # its own cap: shrink both caps so 500 queries run as 4 chunks, and
+    # the chunked output must equal the one-pass output exactly
+    n = embeddings.count()
+    cap = -(-n // 4)
+    for fn, attr, value in (
+        (similarity.ann_pq_topk, "TARGET_PQ_LUT_BYTES", cap * 16 * 64 * 8),
+        (similarity.ann_bq_topk, "MAX_BROADCAST_QUERIES", cap),
+    ):
+        one_pass = sorted(tuple(r) for r in fn(spark, SF_DIR, k=3).collect())
+        collected_sizes.clear()
+        with monkeypatch.context() as mp:
+            mp.setattr(similarity, attr, value)
+            chunked = sorted(tuple(r) for r in fn(spark, SF_DIR, k=3).collect())
+        assert chunked == one_pass, fn.__name__
+        assert len(one_pass) == 3 * n
+        query_collects = [c for c in collected_sizes if c < n]
+        assert len(query_collects) >= 4 and max(query_collects) <= 2 * cap, (
+            fn.__name__,
+            collected_sizes,
+        )
+
 
 def test_ivf_codebook_sample_cap(spark, embeddings, monkeypatch):
     """Codebook training never sees more than MAX_KMEANS_TRAIN_ROWS rows
@@ -892,7 +914,8 @@ def test_cell_topk_kernel_sliced_matches_unsliced_adversarial_width(monkeypatch)
     produce BIT-IDENTICAL output whether the kernel slices its query axis
     or not — slicing partitions the query ids, so per-slice top-k rows
     concatenate without a merge. Forces a tiny KERNEL_SLICE_ELEMS so a
-    400x300 group runs in many slices."""
+    400x300 group runs in many slices, through each cell kernel: exact
+    (with and without the label mask), PQ-ADC and BQ."""
     import numpy as np
     import pandas as pd
 
@@ -915,20 +938,61 @@ def test_cell_topk_kernel_sliced_matches_unsliced_adversarial_width(monkeypatch)
     # overlap some ids so the self-match mask fires too
     cpdf.loc[:49, "neighbor_id"] = np.arange(50, dtype=np.int64)
 
-    def run(label_mask):
+    # the PQ-ADC and BQ codec kernels slice the same way: members carry
+    # PQ codes (m=4 subspaces x 8 codewords of a random codebook) or two
+    # packed sign-bit words under the overlapping ids
+    from types import SimpleNamespace
+
+    books = SimpleNamespace(value=rng.standard_normal((4, 8, dim // 4)))
+    codes_pdf = pd.DataFrame(
+        {
+            "vec_id": cpdf["neighbor_id"],
+            "codes": [rng.integers(0, 8, 4).tolist() for _ in range(n_c)],
+        }
+    )
+    # sign-bit words pack 64 dims, so the BQ queries are 64-dim
+    qpdf64 = qpdf.assign(qe=[rng.standard_normal(64).tolist() for _ in range(n_q)])
+    words_pdf = pd.DataFrame(
+        {
+            "vec_id": cpdf["neighbor_id"],
+            "w0": rng.integers(0, 1 << 32, n_c, dtype=np.int64),
+            "w1": rng.integers(0, 1 << 32, n_c, dtype=np.int64),
+        }
+    )
+    kernels = {
+        "exact": lambda: similarity._cell_topk_kernel(5)(qpdf, cpdf),
+        "exact_masked": lambda: similarity._cell_topk_kernel(
+            5, label_mask=True
+        )(qpdf, cpdf),
+        "pq": lambda: similarity._pq_cell_kernel_factory(7, books)(
+            qpdf, codes_pdf
+        ),
+        "bq": lambda: similarity._bq_cell_kernel_factory(7)(
+            qpdf64, words_pdf
+        ),
+    }
+
+    def run(name):
         return (
-            similarity._cell_topk_kernel(5, label_mask=label_mask)(qpdf, cpdf)
+            kernels[name]()
             .sort_values(["query_id", "neighbor_id"])
             .reset_index(drop=True)
         )
 
-    full = {m: run(m) for m in (False, True)}
+    full = {name: run(name) for name in kernels}
     monkeypatch.setattr(similarity, "KERNEL_SLICE_ELEMS", 1024)  # ~3-row slices
-    sliced = {m: run(m) for m in (False, True)}
-    for m in (False, True):
-        pd.testing.assert_frame_equal(full[m], sliced[m])
+    sliced = {name: run(name) for name in kernels}
+    for name in kernels:
+        pd.testing.assert_frame_equal(full[name], sliced[name])
     # and the mask actually did something
-    assert len(full[True]) < len(full[False]) or not full[True].empty
+    assert len(full["exact_masked"]) < len(full["exact"]) or not full[
+        "exact_masked"
+    ].empty
+    # the codec kernels keep their own shortlist depth, self-matches out
+    for name in ("pq", "bq"):
+        per_query = full[name].groupby("query_id").size()
+        assert per_query.max() == 7 and len(per_query) == n_q, name
+        assert not (full[name]["query_id"] == full[name]["neighbor_id"]).any()
 
 
 def test_cogroup_shards_scales_with_probe_volume():
@@ -1179,6 +1243,57 @@ def test_ivfbq_exhaustive_probe_equals_exact_knn(spark):
         ).collect()
     }
     assert got == exact
+
+
+def test_pq_tiers_on_corpus_smaller_than_n_codes(spark, tmp_path):
+    """The PQ codebook fit clamps its code count to the training sample,
+    so a 40-vector corpus gets 40 codewords per subspace, not the
+    requested 64: the ADC lookup tables must be sized from the fitted
+    codebooks, and both PQ tiers return k rows per query."""
+    from symat_hbase_tools_spark.sources.tables import load_table
+
+    load_table(spark, SF_DIR, "embeddings").orderBy("vec_id").limit(40).write.parquet(
+        str(tmp_path / "embeddings.parquet")
+    )
+    for fn in (similarity.ann_pq_topk, similarity.ann_ivfpq_topk):
+        rows = fn(spark, str(tmp_path), k=3).collect()
+        per_query = {}
+        for r in rows:
+            per_query[r["query_id"]] = per_query.get(r["query_id"], 0) + 1
+        assert len(per_query) == 40 and set(per_query.values()) == {3}, fn.__name__
+
+
+def test_ivf_pipeline_stages_are_not_copied():
+    """The IVF tiers share one probe stage, one kernel factory per codec
+    and one refine stage: a nested copy of a probe generator, a PQ-ADC
+    kernel or a PQ/BQ encoder, or a second probe-table pin site, means a
+    copy came back."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(similarity))
+    banned = {"query_probes", "probes_for", "adc_cell_kernel", "encode", "pack"}
+    nested = [
+        (outer.name, inner.name, inner.lineno)
+        for outer in ast.walk(tree)
+        if isinstance(outer, ast.FunctionDef)
+        for inner in ast.walk(outer)
+        if inner is not outer
+        and isinstance(inner, ast.FunctionDef)
+        and inner.name in banned
+    ]
+    assert not nested, f"nested copies of shared IVF stages: {nested}"
+    probe_pins = [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", getattr(node.func, "attr", None)) == "pin"
+        and any(
+            isinstance(a, ast.Constant) and a.value == "ivf_probe"
+            for a in list(node.args) + [kw.value for kw in node.keywords]
+        )
+    ]
+    assert len(probe_pins) == 1, f"ivf_probe pin sites at lines {probe_pins}"
 
 
 def test_persisted_ivfpq_lifecycle(spark, tmp_path):

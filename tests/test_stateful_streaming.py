@@ -1,116 +1,41 @@
-"""Custom stateful streaming operator test: applyInPandasWithState running
-per-user profiles must converge to the batch ground truth on bounded input."""
+"""Custom stateful streaming operator tests: the running per-user profile
+must converge to the batch ground truth on bounded input, and the
+transformWithState compat shim must honor its state contract."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from symat_hbase_tools_spark.streaming import events as se
-from symat_hbase_tools_spark.streaming.stateful import user_profiles
+from symat_hbase_tools_spark.streaming.stateful import user_profiles_micros
 from tests.conftest import SF_DIR
 
 
 def test_user_profiles_match_batch(spark, events):
-    stream = se.stream_events(spark, SF_DIR)
-    out = se.run_bounded(user_profiles(stream), "t_profiles", output_mode="update")
-    # update mode may emit a row per user per micro-batch; the LAST row per
-    # user is the converged profile
-    latest = {}
-    for r in out.collect():
-        latest[r["user_id"]] = (r["n_events"], r["sum_value"], r["last_seen_us"])
-    want = {
-        r["user_id"]: (r["n"], r["s"], r["last_us"])
-        for r in events.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("value").alias("s"),
-            F.max(F.unix_micros("ts")).alias("last_us"),
-        )
-        .collect()
-    }
-    assert set(latest) == set(want)
-    for u, (n, s, last) in want.items():
-        gn, gs, glast = latest[u]
-        assert gn == n and glast == last
-        assert abs(gs - s) < 1e-6
-
-
-def test_user_profiles_tws_matches_legacy_api(spark, events):
-    """transformWithStateInPandas twin: parity-tested where the runtime
-    supports it; in this image (no protobuf — the stateful-processor
-    worker's RPC codec) the operator must refuse up front with a clear
-    NotImplementedError instead of starting a query that crashes at
-    PRE_INIT."""
-    import pytest
-
-    from symat_hbase_tools_spark.streaming.stateful import user_profiles_tws
-
-    stream = se.stream_events(spark, SF_DIR)
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-
-    if not has_protobuf:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            user_profiles_tws(stream)
-        return
-
-    out = se.run_bounded(
-        user_profiles_tws(stream), "t_profiles_tws", output_mode="update"
-    )
-    latest = {}
-    for r in out.collect():
-        latest[r["user_id"]] = (r["n_events"], r["sum_value"], r["last_seen_us"])
-    want = {
-        r["user_id"]: (r["n"], r["s"], r["last_us"])
-        for r in events.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("value").alias("s"),
-            F.max(F.unix_micros("ts")).alias("last_us"),
-        )
-        .collect()
-    }
-    assert set(latest) == set(want)
-    for u, (n, s, last) in want.items():
-        gn, gs, glast = latest[u]
-        assert gn == n and glast == last
-        assert abs(gs - s) < 1e-6
-
-
-def test_profile_processor_compat_matches_batch(spark, events):
-    """Round-6 verdict item 8: the transformWithState ProfileProcessor must
-    be EXECUTED and parity-tested in this image, not just gate-refused.
-    The compat shim runs the same processor class on the
-    applyInPandasWithState engine — its converged per-user profiles must
-    equal the batch ground truth (and hence user_profiles, which the test
-    above pins to the same truth)."""
-    from symat_hbase_tools_spark.streaming.stateful import user_profiles_tws_compat
-
+    """The running profile converges EXACTLY to the batch ground truth:
+    integer-micros accumulation equals SUM(CAST(floor(value*1e6) AS
+    BIGINT)) bit for bit, whatever the micro-batching."""
     stream = se.stream_events(spark, SF_DIR)
     out = se.run_bounded(
-        user_profiles_tws_compat(stream), "t_profiles_compat", output_mode="update"
+        user_profiles_micros(stream), "t_profiles", output_mode="update"
     )
+    # update mode may emit a row per user per micro-batch; n_events grows
+    # monotonically per user, so the row with the largest count is the
+    # converged profile
     latest = {}
     for r in out.collect():
-        latest[r["user_id"]] = (r["n_events"], r["sum_value"], r["last_seen_us"])
+        row = (r["n_events"], r["value_micros"], r["last_seen_us"])
+        if r["user_id"] not in latest or row[0] > latest[r["user_id"]][0]:
+            latest[r["user_id"]] = row
+    events.createOrReplaceTempView("t_profiles_events")
     want = {
-        r["user_id"]: (r["n"], r["s"], r["last_us"])
-        for r in events.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("value").alias("s"),
-            F.max(F.unix_micros("ts")).alias("last_us"),
-        )
-        .collect()
+        r["user_id"]: (r["n"], r["micros"], r["last_us"])
+        for r in spark.sql(
+            "SELECT user_id, COUNT(*) AS n, "
+            "SUM(CAST(floor(value * 1000000) AS BIGINT)) AS micros, "
+            "MAX(unix_micros(ts)) AS last_us "
+            "FROM t_profiles_events GROUP BY user_id"
+        ).collect()
     }
-    assert set(latest) == set(want)
-    for u, (n, s, last) in want.items():
-        gn, gs, glast = latest[u]
-        assert gn == n and glast == last
-        assert abs(gs - s) < 1e-6
+    assert latest == want
 
 
 def test_compat_shim_state_clear_removes_state(spark):
