@@ -29,7 +29,7 @@ import sys
 
 from symat_hbase_tools_spark.functions.bytes_binary import to_bytes_binary
 from symat_hbase_tools_spark.operators.audit import audit, counters_of, write_report_tsv
-from symat_hbase_tools_spark.operators.copy_row import copy_row
+from symat_hbase_tools_spark.operators.copy_row import copy_row, copy_row_in_place
 from symat_hbase_tools_spark.session import get_spark
 from symat_hbase_tools_spark.sources.catalog import (
     overwrite_table_in_place,
@@ -407,27 +407,35 @@ def main(argv: list[str] | None = None) -> int:
             if _parse_bool(args.override):
                 ts = args.timestamp if args.timestamp is not None else int(time.time() * 1000)
             src = read_cells(spark, resolve_table(args.sourceTable))
-            dst = (
-                src
-                if args.destinationTable == args.sourceTable
-                else read_cells(spark, resolve_table(args.destinationTable))
+            same = args.destinationTable == args.sourceTable
+            # reference semantics: CopyRow mutates the destination TABLE
+            # itself (CopyRow.java:118-131) — no --output flag exists. A
+            # region-addressed table rewrites only the key's region.
+            n = (
+                copy_row_in_place(src, key, ts)
+                if same and args.output is None
+                else None
             )
-            new_dest, n = copy_row(src, dst, key, ts)
+            if n is None:
+                dst = (
+                    src
+                    if same
+                    else read_cells(spark, resolve_table(args.destinationTable))
+                )
+                new_dest, n = copy_row(src, dst, key, ts)
+                if n and args.output is not None:
+                    from symat_hbase_tools_spark.sources.bloom import with_row_bloom
+
+                    with_row_bloom(new_dest.write.mode("overwrite")).parquet(
+                        args.output
+                    )
+                elif n:
+                    overwrite_table_in_place(
+                        new_dest, resolve_table(args.destinationTable)
+                    )
             if n == 0:
                 print(f"no data found for row key {args.rowKey!r}; nothing written")
                 return 0
-            if args.output is not None:
-                from symat_hbase_tools_spark.sources.bloom import with_row_bloom
-
-                with_row_bloom(new_dest.write.mode("overwrite")).parquet(
-                    args.output
-                )
-            else:
-                # reference semantics: CopyRow mutates the destination TABLE
-                # itself (CopyRow.java:118-131) — no --output flag exists
-                overwrite_table_in_place(
-                    new_dest, resolve_table(args.destinationTable)
-                )
             print(f"copied {n} cells of row {args.rowKey!r}")
             return 0
         if args.tool == "repair":

@@ -39,7 +39,6 @@ from symat_hbase_tools_spark.registry.wrappers import *  # noqa: F401,F403
 from symat_hbase_tools_spark.registry.wrappers import (  # noqa: F401
     _FIXTURE_CACHE,
     _FIXTURE_ROOT,
-    _REGIONSTORE_CACHE,
     _fanout,
     _materialized_fixture,
     _pretty_cells,

@@ -7,6 +7,13 @@ README.md:12-17).
 
 Spark shape: filter (pushed-down binary equality) -> withColumn(ts) ->
 cell-granularity upsert (anti-join + union). All built-in expressions.
+
+Region addressing: the point read is ``kv.point_get``, so on a table whose
+region manifest holds (``sources/io.py``) it reads the key's region file
+only, and ``copy_row_in_place`` upserts into that region and rewrites its
+one file (``bulkload.rewrite_region``): the table keeps its N range-disjoint
+files and a true manifest. Other tables take ``copy_row`` and a whole-table
+rewrite.
 """
 
 from __future__ import annotations
@@ -34,10 +41,10 @@ def copy_row_cells(
     qualifier is read and copied (CopyRow.java:107-113). Pass False to copy
     every stored version (a full-history replica repair).
     """
-    row = cells.filter(F.col("row") == F.lit(row_key))
-    if latest_only:
-        from symat_hbase_tools_spark.operators.kv import visible_cells
+    from symat_hbase_tools_spark.operators.kv import point_get, visible_cells
 
+    row = point_get(cells, row_key)
+    if latest_only:
         row = visible_cells(row)
     if override_ts is not None:
         row = row.withColumn("ts", F.lit(int(override_ts)).cast("long"))
@@ -72,3 +79,29 @@ def copy_row(
     if n == 0:
         return dest, 0
     return upsert_cells(dest, puts), n
+
+
+def copy_row_in_place(
+    cells: DataFrame, row_key: bytes, override_ts: int | None = None
+) -> int | None:
+    """CopyRow into the table ``cells`` was read from, rewriting only the
+    key's home region. Returns the cells copied (0: nothing written), or
+    ``None`` when ``cells`` is not the held scan of a manifest table or the
+    key lies before its first region — the caller then takes ``copy_row``
+    and a whole-table rewrite."""
+    from symat_hbase_tools_spark.operators.bulkload import rewrite_region
+    from symat_hbase_tools_spark.sources.io import covering_cells, held_regions
+
+    held = held_regions(cells)
+    if held is None:
+        return None
+    path, regions = held
+    home = sum(r.start <= row_key for r in regions) - 1
+    if home < 0:
+        return None
+    region, n = copy_row(
+        cells, covering_cells(cells, row_key, row_key, True), row_key, override_ts
+    )
+    if n:
+        rewrite_region(region, path, regions, home)
+    return n

@@ -7,6 +7,13 @@ Mappings (SURVEY.md §2.1):
   * list_families    — S4, CorruptRowsMR.java:230-238
   * latest_cells     — latest-version-wins read (HBase default GET semantics)
 
+Region addressing: on the scan ``sources.io.read_cells`` returns for a
+table whose region manifest holds, point_get and range_scan read only the
+region files their key range touches (``io.covering_cells``, the HBase meta
+lookup): a Get opens one file however many regions there are, an empty
+range none. The row filter on top is the same; any other DataFrame keeps
+the plain filtered scan.
+
 Scale notes: point_get is a pushed-down binary-equality filter (parquet
 row-group stats prune; on the HBase connector it becomes a real GET).
 keyonly_scan prunes to the `row` column before the distinct — Catalyst's
@@ -22,11 +29,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from symat_hbase_tools_spark.functions.bytes_binary import to_string_binary_expr
+from symat_hbase_tools_spark.sources.io import covering_cells
 
 
 def point_get(cells: DataFrame, row_key: bytes) -> DataFrame:
     """Fetch all cells of one row by exact key (S1)."""
-    return cells.filter(F.col("row") == F.lit(row_key))
+    return covering_cells(cells, row_key, row_key, hi_inclusive=True).filter(
+        F.col("row") == F.lit(row_key)
+    )
 
 
 def range_scan(
@@ -39,7 +49,7 @@ def range_scan(
     min/max pruning); on the connector they become real scan ranges
     (the DataSourceV2 pushdown noted in SURVEY §4.1).
     """
-    out = cells
+    out = covering_cells(cells, start_row, stop_row)
     if start_row is not None:
         out = out.filter(F.col("row") >= F.lit(start_row))
     if stop_row is not None:

@@ -17,11 +17,12 @@ narrow per-row expression, so candidate generation adds exactly one shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from symat_hbase_tools_spark.functions.vectors import as_double, cosine
 from symat_hbase_tools_spark.plans.serve_cache import pin
+from symat_hbase_tools_spark.sources.io import read_json, write_json
 from symat_hbase_tools_spark.sources.tables import load_table
 
 DIM = 64
@@ -1672,6 +1673,44 @@ def _index_centroids(spark: SparkSession, index_dir: str):
     return spark.sparkContext.broadcast(C)
 
 
+def _write_cell_tree(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """Write an index tree partitioned by cell and record its row count in
+    ``<path>/_rows.json`` for the STALE check of ``_ivf_index_probe``.
+
+    Repartitioned on cell BEFORE the dynamic-partition write: a scan with
+    few input splits otherwise funnels the whole index through one or two
+    writer tasks routing rows across n_cells directories (measured ~200 s
+    of the 200k build); hashed on cell the write is cells-way parallel and
+    each directory gets whole files. The count is an ``observe`` on the
+    write itself, after the shuffle (a result stage counts a retried task
+    once), so it costs no job. An append adds to the recorded count; its
+    record is marked unknown before the write, so an append that dies
+    midway leaves no count to trust and the check counts the trees."""
+    spark = df.sparkSession
+    record = f"{path}/_rows.json"
+    before = 0
+    if mode == "append":
+        before = _recorded_rows(spark, path)
+        write_json(spark, record, {"rows": None})
+    counted = Observation()
+    (
+        df.repartition("cell")
+        .observe(counted, F.count(F.lit(1)).alias("rows"))
+        .write.mode(mode)
+        .partitionBy("cell")
+        .parquet(path)
+    )
+    if before is not None:
+        write_json(spark, record, {"rows": before + counted.get["rows"]})
+
+
+def _recorded_rows(spark: SparkSession, path: str) -> int | None:
+    """The row count ``_write_cell_tree`` recorded for the tree at
+    ``path``; ``None`` when there is none."""
+    record = read_json(spark, f"{path}/_rows.json")
+    return record.get("rows") if record else None
+
+
 def build_ivf_index(
     spark: SparkSession,
     sf_dir: str,
@@ -1738,17 +1777,9 @@ def build_ivf_index(
         with_vec = with_vec.join(
             raw.select("vec_id", "label"), "vec_id", "left"
         )
-    (
-        _cell_assign(with_vec, bc, n_assign, extra_cols=extra)
-        # repartition on cell BEFORE the dynamic-partition write: a scan
-        # with few input splits otherwise funnels the whole index through
-        # one or two writer tasks routing rows across n_cells directories
-        # (measured ~200 s of the 200k build); hashed on cell the write is
-        # cells-way parallel and each directory gets whole files
-        .repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{index_dir}/assignments")
+    _write_cell_tree(
+        _cell_assign(with_vec, bc, n_assign, extra_cols=extra),
+        f"{index_dir}/assignments",
     )
     # a rebuild replaces the on-disk layout: drop any cached relations
     _invalidate_ivf_relations(index_dir)
@@ -1827,14 +1858,10 @@ def ivf_index_append(
             ).alias("label")
         )
     vecs = new_vectors.select(*sel)
-    (
-        _cell_assign(vecs, bc, n_assign, extra_cols=extra)
-        # same pre-write cell repartition as build_ivf_index (parallel
-        # writers, whole files per directory)
-        .repartition("cell")
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(f"{index_dir}/assignments")
+    _write_cell_tree(
+        _cell_assign(vecs, bc, n_assign, extra_cols=extra),
+        f"{index_dir}/assignments",
+        mode="append",
     )
     # new files on disk: cached relations would miss them
     _invalidate_ivf_relations(index_dir)
@@ -2006,12 +2033,9 @@ def ivf_index_rebalance(
         if has_label
         else None
     )
-    (
-        _cell_assign(vecs, bc, n_assign, extra_cols=extra)
-        .repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{index_dir}/assignments__new")
+    _write_cell_tree(
+        _cell_assign(vecs, bc, n_assign, extra_cols=extra),
+        f"{index_dir}/assignments__new",
     )
     for part in ("centroids", "assignments"):
         live, new = f"{index_dir}/{part}", f"{index_dir}/{part}__new"
@@ -2103,14 +2127,15 @@ def _ivf_index_probe(
     ``layer`` is the cell tree the codec kernel scans: ``assignments``
     (raw vectors), ``pq_codes`` or ``bq_codes``; a code layer that is
     missing, or STALE (raw appends since it was encoded leave it smaller
-    than assignments), is refused with the re-encode instruction instead
-    of silently missing the appended vectors. label_mask=True is the
-    hard-negative variant: queries with a null label are dropped, the
-    query label rides the probe rows as ``ql`` and the index label the
-    members as ``cl`` (null-label members excluded — the labeled-only
-    mining contract), both cast to long: int32 narrowing could throw
-    (ANSI) or wrap, and wrapped labels collide, silently masking valid
-    negatives.
+    than assignments — compared on the row counts recorded when each tree
+    was written, see ``_write_cell_tree``), is refused with the re-encode
+    instruction instead of silently missing the appended vectors.
+    label_mask=True is the hard-negative variant: queries with a null
+    label are dropped, the query label rides the probe rows as ``ql`` and
+    the index label the members as ``cl`` (null-label members excluded —
+    the labeled-only mining contract), both cast to long: int32 narrowing
+    could throw (ANSI) or wrap, and wrapped labels collide, silently
+    masking valid negatives.
 
     Returns (q, members, probed): the pinned (query_id, qe, cell[, ql])
     probe rows, ``layer`` pruned to the probed cells, and the probed
@@ -2123,8 +2148,11 @@ def _ivf_index_probe(
             raise ValueError(
                 f"index at {index_dir} has no {tag} layer; run {add} first"
             )
-        n_assigned = _ivf_relation(spark, index_dir, "assignments").count()
-        n_encoded = _ivf_relation(spark, index_dir, layer).count()
+        n_assigned = _recorded_rows(spark, f"{index_dir}/assignments")
+        n_encoded = _recorded_rows(spark, f"{index_dir}/{layer}")
+        if n_assigned is None or n_encoded is None:  # no record: count
+            n_assigned = _ivf_relation(spark, index_dir, "assignments").count()
+            n_encoded = _ivf_relation(spark, index_dir, layer).count()
         if n_assigned != n_encoded:
             raise ValueError(
                 f"{tag} layer is STALE ({n_encoded} encoded of {n_assigned} "
@@ -3316,8 +3344,9 @@ def ivf_index_add_pq(
     duplicates rows; a duplicate-weighted fit would bias centroids toward
     boundary vectors), L2-normalized (ADC ranks like cosine). Appending
     raw vectors AFTER add_pq leaves the PQ layer STALE — ``ann_ivfpq_query``
-    counts both trees and refuses with the re-encode instruction rather
-    than silently missing the appended vectors.
+    compares both trees' recorded row counts and refuses with the
+    re-encode instruction rather than silently missing the appended
+    vectors.
     """
     import pandas as pd
 
@@ -3335,12 +3364,9 @@ def ivf_index_add_pq(
         )
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/pq_codebooks")
     bc = spark.sparkContext.broadcast(books)
-    (
-        _encode_rows(assigned.select("vec_id", "emb", "cell"), bc)
-        .repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{index_dir}/pq_codes")
+    _write_cell_tree(
+        _encode_rows(assigned.select("vec_id", "emb", "cell"), bc),
+        f"{index_dir}/pq_codes",
     )
     _invalidate_ivf_relations(index_dir)
 
@@ -3405,16 +3431,13 @@ def ivf_index_add_bq(spark: SparkSession, index_dir: str) -> None:
     ``ann_ivfbq_query`` refuses with the re-encode instruction (same
     guard as the PQ layer).
     """
-    (
+    _write_cell_tree(
         _encode_rows(
             _ivf_relation(spark, index_dir, "assignments").select(
                 "vec_id", "emb", "cell"
             )
-        )
-        .repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{index_dir}/bq_codes")
+        ),
+        f"{index_dir}/bq_codes",
     )
     _invalidate_ivf_relations(index_dir)
 

@@ -167,6 +167,28 @@ def _scratch_path(leaf: str) -> str:
     return os.path.join(_FIXTURE_ROOT[0], leaf)
 
 
+def _fixture_path(sf_dir, name, write) -> str | None:
+    """The scratch path ``write(path)`` filled once per (name, sf_dir,
+    source mtime); ``None`` when the source has no mtime or the write
+    failed (the caller then runs its plan in flight)."""
+    import os
+
+    src = os.path.join(sf_dir, "customer.parquet")
+    try:
+        key = (name, os.path.abspath(sf_dir), os.path.getmtime(src))
+    except OSError:
+        return None
+    path = _FIXTURE_CACHE.get(key)
+    if path is None:
+        path = _scratch_path(f"{name}_{abs(hash(key)):x}")
+        try:
+            write(path)
+        except Exception:
+            return None
+        _FIXTURE_CACHE[key] = path
+    return path
+
+
 def _materialized_fixture(spark, sf_dir, name, build) -> DataFrame:
     """Synthesized-fixture parquet cache. The versioned/corrupted cells
     fixtures are BENCH INPUTS, not part of the operator under test; their
@@ -177,28 +199,18 @@ def _materialized_fixture(spark, sf_dir, name, build) -> DataFrame:
     oracle runs in (its fixture CTE materializes from the base table
     in-memory). Falls back to the in-flight plan if the scratch dir is
     unwritable."""
-    import os
 
-    src = os.path.join(sf_dir, "customer.parquet")
-    try:
-        key = (name, os.path.abspath(sf_dir), os.path.getmtime(src))
-    except OSError:
-        return build()
-    path = _FIXTURE_CACHE.get(key)
-    if path is None:
-        path = _scratch_path(f"{name}_{abs(hash(key)):x}")
-        try:
-            df = build()
-            writer = df.write.mode("overwrite")
-            if "row" in df.columns:  # cells fixtures carry the row bloom
-                from symat_hbase_tools_spark.sources.bloom import with_row_bloom
+    def write(path):
+        df = build()
+        writer = df.write.mode("overwrite")
+        if "row" in df.columns:  # cells fixtures carry the row bloom
+            from symat_hbase_tools_spark.sources.bloom import with_row_bloom
 
-                writer = with_row_bloom(writer)
-            writer.parquet(path)
-        except Exception:
-            return build()
-        _FIXTURE_CACHE[key] = path
-    return spark.read.parquet(path)
+            writer = with_row_bloom(writer)
+        writer.parquet(path)
+
+    path = _fixture_path(sf_dir, name, write)
+    return build() if path is None else spark.read.parquet(path)
 
 
 def kv_latest_version(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -222,40 +234,30 @@ def kv_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pretty_cells(ranged, "row_key", "qualifier", "value")
 
 
-#: region stores already built this process, keyed (sf_dir, source mtime)
-#: so testdata regeneration rebuilds — mirrors _FIXTURE_CACHE.
-_REGIONSTORE_CACHE: dict[tuple, str] = {}
-
-
 def kv_region_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range scan THROUGH the regionstore relation (Python DataSource with
-    key-range pushdown, SURVEY.md §4.1): the store is built once per sf_dir
-    (range-partitioned region files), then the query's row predicates push
-    into the source and prune region directories — only the regions
-    intersecting [RANGE_START, RANGE_STOP) are opened.
+    """Range scan over a region-addressed table: the customer cells are
+    bulk-loaded once per (sf_dir, mtime) into 8 range-disjoint region files
+    with a region manifest (operators/bulkload.py), and ``kv.range_scan``
+    on the ``read_cells`` scan opens only the region files intersecting
+    [RANGE_START, RANGE_STOP) — the HBase meta lookup of a scan's start
+    and stop rows.
 
-    The store lands in the process-scoped mkdtemp scratch (_FIXTURE_ROOT),
+    The table lands in the process-scoped mkdtemp scratch (_FIXTURE_ROOT),
     never a fixed shared /tmp path: predictable paths race across
     concurrent runs and are squattable on multi-user hosts (round-4
     verdict, What's wrong #1 — same advisory that moved the CSV
     roundtrip in round 3)."""
-    import os
+    from symat_hbase_tools_spark.operators.bulkload import bulk_load_cells
+    from symat_hbase_tools_spark.sources.io import read_cells
 
-    from symat_hbase_tools_spark.sources import regionstore
+    def cells():
+        return customer_cells(load_table(spark, sf_dir, "customer"))
 
-    src = os.path.join(sf_dir, "customer.parquet")
-    try:
-        key = (os.path.abspath(sf_dir), os.path.getmtime(src))
-    except OSError:
-        key = (os.path.abspath(sf_dir), None)
-    store = _REGIONSTORE_CACHE.get(key)
-    if store is None:
-        store = _scratch_path(f"regionstore_{abs(hash(key)):x}")
-        cells = customer_cells(load_table(spark, sf_dir, "customer"))
-        regionstore.write_region_store(cells, store, n_regions=8)
-        _REGIONSTORE_CACHE[key] = store
-    df = regionstore.read_region_store(spark, store)
-    ranged = df.filter((F.col("row") >= RANGE_START) & (F.col("row") < RANGE_STOP))
+    store = _fixture_path(
+        sf_dir, "regionstore", lambda path: bulk_load_cells(cells(), path, 8)
+    )
+    table = cells() if store is None else read_cells(spark, store)
+    ranged = kv.range_scan(table, RANGE_START, RANGE_STOP)
     return _pretty_cells(ranged, "row_key", "qualifier", "ts", "value")
 
 
@@ -819,7 +821,7 @@ def events_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: persisted IVF indexes already built this process, keyed (sf_dir, mtime)
-#: so testdata regeneration rebuilds — mirrors _REGIONSTORE_CACHE.
+#: so testdata regeneration rebuilds — mirrors _FIXTURE_CACHE.
 _IVF_INDEX_CACHE: dict[tuple, str] = {}
 
 
@@ -831,7 +833,7 @@ def ann_ivf_indexed_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The index (n_cells=16, n_assign=3 spilled assignment) materializes once
     per (sf_dir, mtime) into the process-scoped scratch — the same
-    amortization contract as the regionstore and cells fixtures — so the
+    amortization contract as the region-addressed and cells fixtures — so the
     timed work here is ann_ivf_query itself: probed-cell directory pruning
     + cell-local matmul + merge. Measured recall@5 with n_probe=6/16 on
     the round-6 numpy-Lloyd codebook: 0.966 (sf0.001) / 0.970 (sf0.01)

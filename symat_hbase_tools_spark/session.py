@@ -26,8 +26,6 @@ RUNTIME_CONFS = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow for pandas UDF exchange (the only Python-side hot paths).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Python DataSource filter pushdown (regionstore key-range pruning).
-    "spark.sql.python.filterPushdown.enabled": "true",
     # PySpark 4's DataFrame debugging wraps EVERY DataFrame API call with a
     # Python stack walk plus 3 py4j round-trips (conf.get + origin set +
     # clear) to enrich error messages with user call sites. Measured ~0.4 s

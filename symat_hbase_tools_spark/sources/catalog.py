@@ -29,6 +29,8 @@ from __future__ import annotations
 import json
 import os
 
+from symat_hbase_tools_spark.sources.bloom import with_row_bloom
+
 #: env var naming a JSON catalog file mapping logical names to paths
 CATALOG_ENV = "SYMAT_TABLE_CATALOG"
 #: age gate for deleting .inflight-/.replaced- siblings whose owner pid
@@ -88,26 +90,10 @@ def resolve_table(name: str) -> str:
     return os.path.join(root, ns, tbl)
 
 
-def overwrite_table_in_place(df, path: str) -> None:
-    """Overwrite a table directory that may also be an INPUT of ``df``.
-
-    Spark cannot ``mode("overwrite")`` a path it is concurrently reading
-    (the scan would see its own truncation), and the reference's CopyRow
-    writes into the destination TABLE it just read from
-    (``CopyRow.java:118-131``). Twin semantics: materialize to a sibling
-    temp dir, then swap directories via the Hadoop FileSystem API — so
-    ``hdfs://`` / ``s3a://`` tables work, not just local paths (driver-local
-    ``os.rename`` would crash AFTER Spark had already written the temp dir).
-
-    Failure posture: the destination is renamed aside and the new data
-    renamed in; if the second rename fails, the original is restored in a
-    ``try/except`` so the destination directory is never left absent.  A
-    hard process kill between the two renames can still strand the
-    ``.replaced-`` sibling (directory swap has no atomic primitive on HDFS
-    or object stores); the predictable suffix makes recovery obvious.
-    """
-
-    spark = df.sparkSession
+def _in_place_siblings(spark, path: str):
+    """(fs, path constructor, ``.inflight-`` path, ``.replaced-`` path) for
+    an in-place rewrite of ``path``, after clearing stale siblings of
+    earlier runs."""
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
 
@@ -201,25 +187,73 @@ def overwrite_table_in_place(df, path: str) -> None:
                 )
             if stale:
                 fs.delete(st.getPath(), True)
-    writer = df.write.mode("overwrite")
-    if "row" in df.columns:  # cells tables get the row-key bloom (HFile analog)
-        from symat_hbase_tools_spark.sources.bloom import with_row_bloom
+    return fs, _jp, tmp, old
 
-        writer = with_row_bloom(writer)
-    writer.parquet(tmp.toString())
-    dest_existed = fs.exists(dest)
-    if dest_existed and not fs.rename(dest, old):
-        fs.delete(tmp, True)
-        raise IOError(f"could not move {path} aside for in-place overwrite")
+
+def overwrite_table_in_place(df, path: str) -> None:
+    """Overwrite a cells table directory that may also be an INPUT of
+    ``df`` (written with the row-key bloom, the HFile analog).
+
+    Spark cannot ``mode("overwrite")`` a path it is concurrently reading
+    (the scan would see its own truncation), and the reference's CopyRow
+    writes into the destination TABLE it just read from
+    (``CopyRow.java:118-131``). Twin semantics: materialize to a sibling
+    temp dir, then swap directories via the Hadoop FileSystem API — so
+    ``hdfs://`` / ``s3a://`` tables work, not just local paths (driver-local
+    ``os.rename`` would crash AFTER Spark had already written the temp dir).
+
+    Failure posture: the destination is renamed aside and the new data
+    renamed in; if the second rename fails, the original is restored in a
+    ``try/except`` so the destination directory is never left absent.  A
+    hard process kill between the two renames can still strand the
+    ``.replaced-`` sibling (directory swap has no atomic primitive on HDFS
+    or object stores); the predictable suffix makes recovery obvious.
+    """
+    fs, _jp, tmp, old = _in_place_siblings(df.sparkSession, path)
+    with_row_bloom(df.write.mode("overwrite")).parquet(tmp.toString())
     try:
-        if not fs.rename(tmp, dest):
-            raise IOError(f"could not move new data into place at {path}")
+        _swap(fs, _jp(path), old, tmp, _jp(path))
+    finally:
+        fs.delete(tmp, True)  # don't leak the inflight dir
+    fs.delete(old, True)
+
+
+def _swap(fs, current, aside, new, dest) -> None:
+    """Move ``current`` (if it exists) to ``aside``, then ``new`` to
+    ``dest``; if the second move fails, put ``current`` back, so the
+    destination is never left absent."""
+    existed = fs.exists(current)
+    if existed and not fs.rename(current, aside):
+        raise IOError(f"could not move {current} aside for in-place overwrite")
+    try:
+        if not fs.rename(new, dest):
+            raise IOError(f"could not move new data into place at {dest}")
     except BaseException:
-        # never leave the destination absent: put the original back,
-        # and don't leak the inflight dir
-        if dest_existed and not fs.exists(dest):
-            fs.rename(old, dest)
-        fs.delete(tmp, True)
+        if existed and not fs.exists(current):
+            fs.rename(aside, current)
         raise
-    if dest_existed:
-        fs.delete(old, True)
+
+
+def replace_file_in_place(df, path: str, name: str) -> str:
+    """Swap the data file ``name`` of the table at ``path`` for the one
+    file ``df`` writes (one partition), under ``overwrite_table_in_place``'s
+    failure posture: the new file is written to the ``.inflight-`` sibling,
+    the old one is moved aside into the ``.replaced-`` sibling and the new
+    one moved in; if that fails the old file is put back. Returns the new
+    file's name (Spark's, so it differs from every older one)."""
+    fs, _jp, tmp, old = _in_place_siblings(df.sparkSession, path)
+    with_row_bloom(df.write.mode("overwrite")).parquet(tmp.toString())
+    (written,) = [st.getPath() for st in fs.globStatus(_jp(f"{tmp}/*.parquet"))]
+    fs.mkdirs(old)
+    try:
+        _swap(
+            fs,
+            _jp(f"{path}/{name}"),
+            _jp(f"{old}/{name}"),
+            written,
+            _jp(f"{path}/{written.getName()}"),
+        )
+    finally:
+        fs.delete(tmp, True)
+    fs.delete(old, True)
+    return written.getName()

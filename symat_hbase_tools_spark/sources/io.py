@@ -14,6 +14,19 @@ all-NULL columns without error, so the driver first reads the footer of one
 data file and checks its columns against ``CELLS_SCHEMA`` — a missing, extra
 or mistyped column raises before any plan is built.
 
+Region manifest (HBase meta): a bulk load writes ``<table>/_regions.json``,
+per region in key order its start row (region i holds
+``[start_i, start_{i+1})``), its one data file and its cell count.
+``read_cells`` trusts a manifest only when it names exactly the table's
+data files, and holds it with the table's scan under a key of two Hadoop FS
+status calls (directory mtime; manifest mtime and length). While the key
+matches, ``read_cells`` returns the held scan without a footer read, and
+``covering_cells`` narrows it to the region files a key range touches (the
+reads of ``kv.point_get``, ``kv.range_scan`` and ``copy_row``). Another
+writer's file, an overwrite, a deleted manifest, or a crash between a
+region swap and its manifest write each change the key, and a manifest that
+is missing or no longer names the data files leaves the whole-table read.
+
 Format guidance at scale (docstrings are the contract, tests enforce
 round-trips):
   * parquet — the default: columnar, predicate pushdown, column pruning.
@@ -27,6 +40,9 @@ from __future__ import annotations
 
 import functools
 import json
+import os
+from collections import OrderedDict
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,6 +102,21 @@ def _jvm_classes(jvm):
     )
 
 
+def cells_schema_problems(found: dict) -> list[str]:
+    """Every column of ``found`` (name -> JSON type; ``None`` matches any
+    type) that is missing from, extra to, or typed differently than
+    ``CELLS_SCHEMA``."""
+    want = {f.name: f.dataType.jsonValue() for f in CELLS_SCHEMA.fields}
+    problems = [f"missing column {c!r}" for c in want if c not in found]
+    problems += [f"extra column {c!r}" for c in found if c not in want]
+    problems += [
+        f"column {c!r} is {t}, expected {want[c]}"
+        for c, t in found.items()
+        if c in want and t is not None and t != want[c]
+    ]
+    return problems
+
+
 def _check_cells_footer(spark: SparkSession, path: str) -> None:
     """Raise ``ValueError`` naming every column of the parquet table at
     ``path`` that is missing from, extra to, or typed differently than
@@ -123,25 +154,128 @@ def _check_cells_footer(spark: SparkSession, path: str) -> None:
         part_dirs = status.getPath().toString().split("/")[-depth - 1 : -1]
         # the reader types a partition column from the pinned schema
         found.update((d.split("=", 1)[0], None) for d in part_dirs)
-    want = {f.name: f.dataType.jsonValue() for f in CELLS_SCHEMA.fields}
-    problems = [f"missing column {c!r}" for c in want if c not in found]
-    problems += [f"extra column {c!r}" for c in found if c not in want]
-    problems += [
-        f"column {c!r} is {t}, expected {want[c]}"
-        for c, t in found.items()
-        if c in want and t is not None and t != want[c]
-    ]
+    problems = cells_schema_problems(found)
     if problems:
         raise ValueError(f"{path} is not a cells table: " + "; ".join(problems))
 
 
+# -- region manifest ----------------------------------------------------------
+
+#: the region manifest a bulk load writes beside its data files (the leading
+#: underscore hides it from Spark's file listing)
+MANIFEST = "_regions.json"
+
+
+@dataclass(frozen=True)
+class Region:
+    """One manifest entry: the region holds rows from ``start`` up to the
+    next region's start, all in ``file`` (a name inside the table)."""
+
+    start: bytes
+    file: str
+    cells: int
+
+
+#: (table key, regions, scan) of recently read manifest tables, by table
+#: path; bounded, the least recently read dropped first
+_HELD: OrderedDict[str, tuple] = OrderedDict()
+_MAX_HELD = 8
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem of ``path``, Hadoop ``Path`` constructor)."""
+    Path = _jvm_classes(spark._jvm)[0]
+    return Path(path).getFileSystem(spark._jsc.hadoopConfiguration()), Path
+
+
+def write_json(spark: SparkSession, path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path`` through the Hadoop FS: written
+    beside, then renamed in, so a reader sees the old file, no file, or the
+    whole new one — never a torn one."""
+    fs, Path = _hadoop_fs(spark, path)
+    dest, tmp = Path(path), Path(f"{path}.tmp-{os.getpid()}")
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray(json.dumps(obj).encode()))
+    finally:
+        out.close()
+    fs.delete(dest, False)  # Hadoop's rename does not replace a file
+    if not fs.rename(tmp, dest):
+        fs.delete(tmp, False)
+        raise IOError(f"could not move {path} into place")
+
+
+def read_json(spark: SparkSession, path: str):
+    """The JSON object at ``path``, or ``None`` when there is no file."""
+    fs, Path = _hadoop_fs(spark, path)
+    if not fs.exists(Path(path)):
+        return None
+    stream = fs.open(Path(path))
+    try:
+        data = spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+    finally:
+        stream.close()
+    return json.loads(bytes(data))
+
+
+def write_manifest(spark: SparkSession, path: str, regions: list[Region]) -> None:
+    """Replace the manifest of the table at ``path``."""
+    write_json(
+        spark,
+        f"{path}/{MANIFEST}",
+        [{"start": r.start.hex(), "file": r.file, "cells": r.cells} for r in regions],
+    )
+
+
+def data_file_names(spark: SparkSession, path: str) -> list[str]:
+    """Names of the parquet data files directly under ``path``."""
+    fs, Path = _hadoop_fs(spark, path)
+    return [st.getPath().getName() for st in fs.globStatus(Path(f"{path}/*.parquet"))]
+
+
+def _table_key(spark: SparkSession, path: str) -> tuple | None:
+    """(directory mtime, manifest mtime, manifest length): two status
+    calls whatever the table size; ``None`` when there is no manifest."""
+    fs, Path = _hadoop_fs(spark, path)
+    found = fs.globStatus(Path(f"{path}/{MANIFEST}"))
+    if not found:
+        return None
+    dir_mtime = fs.getFileStatus(Path(path)).getModificationTime()
+    return dir_mtime, found[0].getModificationTime(), found[0].getLen()
+
+
+def _manifest(spark: SparkSession, path: str) -> tuple[Region, ...] | None:
+    """The table's regions, if its manifest names exactly its data files."""
+    entries = read_json(spark, f"{path}/{MANIFEST}")
+    if not entries:
+        return None
+    regions = tuple(
+        Region(bytes.fromhex(e["start"]), e["file"], int(e["cells"])) for e in entries
+    )
+    if sorted(data_file_names(spark, path)) != sorted(r.file for r in regions):
+        return None
+    return regions
+
+
 def read_cells(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
     """Open a cells table. Parquet gets the fixed ``CELLS_SCHEMA`` after
-    the footer check (module docstring): no Spark job runs. ORC keeps
-    Spark's schema inference."""
+    the footer check (module docstring): no Spark job runs. A table whose
+    manifest holds is served from the held scan while its key matches.
+    ORC keeps Spark's schema inference."""
     if fmt == "parquet":
+        key = _table_key(spark, path)
+        held_key, regions, scan = _HELD.pop(path, (None, None, None))
+        if key is not None and key == held_key and scan.sparkSession is spark:
+            _HELD[path] = (key, regions, scan)  # now the most recently read
+            return scan
         _check_cells_footer(spark, path)
-        return spark.read.schema(CELLS_SCHEMA).parquet(path)
+        scan = spark.read.schema(CELLS_SCHEMA).parquet(path)
+        regions = _manifest(spark, path) if key is not None else None
+        if regions:
+            _HELD[path] = (key, regions, scan)
+            while len(_HELD) > _MAX_HELD:
+                _HELD.popitem(last=False)
+        return scan
     if fmt == "orc":
         return spark.read.orc(path)
     schema = "row string, family string, qualifier string, ts long, type string, value string"
@@ -152,6 +286,42 @@ def read_cells(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFram
             spark.read.schema(schema).option("header", True).csv(path)
         )
     raise ValueError(f"unsupported format: {fmt}")
+
+
+def held_regions(cells: DataFrame) -> tuple[str, tuple[Region, ...]] | None:
+    """(table path, regions) when ``cells`` is the scan ``read_cells``
+    returned for a table whose manifest holds; else ``None``."""
+    for path, (_, regions, scan) in _HELD.items():
+        if scan is cells:
+            return path, regions
+    return None
+
+
+def covering_cells(
+    cells: DataFrame,
+    lo: bytes | None = None,
+    hi: bytes | None = None,
+    hi_inclusive: bool = False,
+) -> DataFrame:
+    """``cells`` itself, unless it is a held manifest scan: then a scan of
+    only the region files that can hold rows in ``[lo, hi)`` (``[lo, hi]``
+    with ``hi_inclusive``) — the HBase meta lookup. An empty range opens no
+    file. The caller still applies its row filter on top."""
+    found = held_regions(cells)
+    if found is None:
+        return cells
+    path, regions = found
+    spark = cells.sparkSession
+    empty = lo is not None and hi is not None and (lo > hi or (lo == hi and not hi_inclusive))
+    files = [] if empty else [
+        f"{path}/{r.file}"
+        for r, nxt in zip(regions, regions[1:] + (None,))
+        if (hi is None or r.start < hi or (hi_inclusive and r.start == hi))
+        and (lo is None or nxt is None or nxt.start > lo)
+    ]
+    if not files:
+        return spark.createDataFrame([], CELLS_SCHEMA)
+    return spark.read.schema(CELLS_SCHEMA).parquet(*files)
 
 
 # -- documents-table JSONL interchange ---------------------------------------

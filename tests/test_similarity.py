@@ -984,10 +984,17 @@ def test_cell_topk_kernel_sliced_matches_unsliced_adversarial_width(monkeypatch)
     sliced = {name: run(name) for name in kernels}
     for name in kernels:
         pd.testing.assert_frame_equal(full[name], sliced[name])
-    # and the mask actually did something
-    assert len(full["exact_masked"]) < len(full["exact"]) or not full[
-        "exact_masked"
-    ].empty
+    # and the mask actually did something: merged back onto their labels,
+    # the masked output holds no same-label pair and the unmasked one does
+    def same_label_pairs(out):
+        labeled = out.merge(qpdf[["query_id", "ql"]], on="query_id").merge(
+            cpdf[["neighbor_id", "cl"]], on="neighbor_id"
+        )
+        assert len(labeled) == len(out)
+        return int((labeled["ql"] == labeled["cl"]).sum())
+
+    assert same_label_pairs(full["exact_masked"]) == 0
+    assert same_label_pairs(full["exact"]) > 0
     # the codec kernels keep their own shortlist depth, self-matches out
     for name in ("pq", "bq"):
         per_query = full[name].groupby("query_id").size()
@@ -1407,6 +1414,63 @@ def test_persisted_ivfbq_lifecycle(spark, tmp_path):
         & (F.abs(F.col("sim") - 1.0) < 1e-6)
     ).count()
     assert hits == 4
+
+
+def test_ivf_stale_check_reads_recorded_row_counts(spark, tmp_path, monkeypatch):
+    """The STALE check of the persisted code layers compares the row counts
+    recorded when each tree was written (an observe on the write), so a
+    query's construction runs no count job over the trees. The records
+    equal the trees' counts, an append adds to the assignments count, and
+    a tree without a record is still checked by counting it."""
+    import uuid
+
+    import pyspark.sql.functions as F
+    import pytest as _pytest
+
+    from symat_hbase_tools_spark.operators import similarity as S
+    from symat_hbase_tools_spark.sources.io import write_json
+
+    idx = str(tmp_path / "idx")
+    S.build_ivf_index(spark, SF_DIR, idx, n_cells=8, n_assign=2)
+    S.ivf_index_add_pq(spark, idx)
+    S.ivf_index_add_bq(spark, idx)
+    for layer in ("assignments", "pq_codes", "bq_codes"):
+        assert S._recorded_rows(spark, f"{idx}/{layer}") == (
+            spark.read.parquet(f"{idx}/{layer}").count()
+        ), layer
+    qs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(10)
+
+    def construct_jobs(query):
+        sc = spark.sparkContext
+        group = f"construct-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            query(spark, idx, qs, k=3, n_probe=4)
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    queries = (S.ann_ivfpq_query, S.ann_ivfbq_query)
+    for q in queries:  # opens the index relations, which run jobs once
+        construct_jobs(q)
+    recorded = [construct_jobs(q) for q in queries]
+    with monkeypatch.context() as m:
+        m.setattr(S, "_recorded_rows", lambda *a: None)
+        counted = [construct_jobs(q) for q in queries]
+    assert all(c >= r + 2 for c, r in zip(counted, recorded)), (recorded, counted)
+
+    n_before = S._recorded_rows(spark, f"{idx}/assignments")
+    clones = qs.limit(4).withColumn("vec_id", F.col("vec_id") + 9_000_000)
+    S.ivf_index_append(spark, idx, clones, n_assign=1)
+    assert S._recorded_rows(spark, f"{idx}/assignments") == n_before + 4
+    with _pytest.raises(ValueError, match="STALE"):
+        S.ann_ivfpq_query(spark, idx, qs, k=3)
+    # an append that died midway leaves its count unknown: the trees are
+    # counted, and the layer is still refused
+    write_json(spark, f"{idx}/assignments/_rows.json", {"rows": None})
+    assert S._recorded_rows(spark, f"{idx}/assignments") is None
+    with _pytest.raises(ValueError, match="STALE"):
+        S.ann_ivfbq_query(spark, idx, qs, k=3)
 
 
 def test_ivfpq_concurrent_writer_drill(spark, tmp_path):
