@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from symat_hbase_tools_spark.sources.io import local_frame
+
 
 #: below this edge count the transitive closure runs as driver-side
 #: union-find instead of the distributed loop. 2M edges collect to tens of
@@ -43,7 +45,9 @@ def _driver_union_find(pairs: DataFrame, edge_rows, id_type) -> DataFrame:
     """Union-find with path compression; union-by-min keeps every root the
     min id of its component, matching the distributed algorithm's labels.
     Direction- and duplicate-insensitive, so it consumes the raw pair rows
-    with no doubling/distinct pass."""
+    with no doubling/distinct pass. The labels enter Spark as one Arrow
+    table (``local_frame``): a ``LocalTableScan``, where a Python list
+    would be a PythonRDD scan that starts a Python worker on every run."""
     parent: dict = {}
 
     def find(x):
@@ -69,7 +73,7 @@ def _driver_union_find(pairs: DataFrame, edge_rows, id_type) -> DataFrame:
         [StructField("node", id_type, False), StructField("cluster", id_type, False)]
     )
     rows = [(node, find(node)) for node in parent]
-    return pairs.sparkSession.createDataFrame(rows, schema)
+    return local_frame(pairs.sparkSession, rows, schema)
 
 
 def _star_components(edges: DataFrame, max_iter: int) -> DataFrame:

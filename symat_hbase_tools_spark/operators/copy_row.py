@@ -6,7 +6,8 @@ and upsert them into a destination cells table (dest may equal source —
 README.md:12-17).
 
 Spark shape: filter (pushed-down binary equality) -> withColumn(ts) ->
-cell-granularity upsert (anti-join + union). All built-in expressions.
+one Arrow collect of the puts -> cell-granularity upsert (anti-join +
+union) of that local table. All built-in expressions.
 
 Region addressing: the point read is ``kv.point_get``, so on a table whose
 region manifest holds (``sources/io.py``) it reads the key's region file
@@ -73,12 +74,17 @@ def copy_row(
 
     n_cells_copied == 0 reproduces the empty-row guard: dest is returned
     unchanged and nothing is written (CopyRow.java:114-117).
+
+    The puts (one row's cells) are collected once, as Arrow, and upserted
+    as a local table: the lazy read would otherwise run again for the
+    anti-join's broadcast and for the union.
     """
     puts = copy_row_cells(source, row_key, override_ts, latest_only)
-    n = puts.count()
-    if n == 0:
+    table = puts.toArrow()
+    if table.num_rows == 0:
         return dest, 0
-    return upsert_cells(dest, puts), n
+    local = dest.sparkSession.createDataFrame(table, puts.schema)
+    return upsert_cells(dest, local), table.num_rows
 
 
 def copy_row_in_place(

@@ -85,6 +85,7 @@ def bow_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from symat_hbase_tools_spark.plans.partitioning import scan_fanout as _scan_fanout
 from symat_hbase_tools_spark.plans.serve_cache import pin
+from symat_hbase_tools_spark.sources.io import local_frame
 
 
 def _doc_shingles(
@@ -123,7 +124,9 @@ def _doc_shingles(
 # Jaccard" semantics). Exactness caveat: with the cap active, pairs whose
 # similarity rests on ultra-common shingles score lower than text-book
 # Jaccard — the behavior you want for dedup, but set max_shingle_df=None for
-# the uncapped textbook definition on bounded corpora.
+# the uncapped textbook definition on bounded corpora. The hot-shingle
+# census runs only when the cap can bind: a corpus of at most
+# MAX_SHINGLE_DF documents has no shingle above it (``_binding_cap``).
 MAX_SHINGLE_DF = 10_000
 
 
@@ -141,71 +144,114 @@ def ngram_jaccard_pairs(
     corpora's max shingle df is far below the default cap; see MAX_SHINGLE_DF
     for the capped-Jaccard caveat on corpora that exceed it).
     """
-    # no persist on the shingle arrays (round-16 advice): this path's ONLY
-    # consumer is _intersection_pairs, which persists the downstream
-    # exploded table — the upstream cache had one plan reference, costing
-    # a cache-write pass with zero reuse
-    sh = _doc_shingles(spark, sf_dir, n).select(
-        "doc_id", F.explode(shingle_hashes(F.col("sh"))).alias("s")
+    rows = _shingle_rows(_doc_shingles(spark, sf_dir, n))
+    return _jaccard_pairs_from_shingles(
+        rows, threshold, _binding_cap(spark, sf_dir, max_shingle_df)
     )
-    return _jaccard_pairs_from_shingles(sh, threshold, max_shingle_df)
+
+
+def _shingle_rows(shingles: DataFrame) -> DataFrame:
+    """(doc_id, n_sh, s) from ``_doc_shingles``' (doc_id, sh): one row per
+    shingle hash, with the document's set size riding along — the first
+    stage of the near-dup pair pipeline. The shingles are distinct strings,
+    so size(hs) is the set size (up to an xxhash64 collision).
+
+    ``explode_outer``, not ``explode``: an inner explode lets Catalyst infer
+    size(hs) > 0 and push it into the projection that runs the interpreted
+    shingle lambda, which then runs twice per row. A document without
+    shingles keeps one row with a null ``s``, which no join matches."""
+    hs = shingles.select("doc_id", shingle_hashes(F.col("sh")).alias("hs"))
+    return hs.select(
+        "doc_id",
+        F.size("hs").cast("bigint").alias("n_sh"),
+        F.explode_outer("hs").alias("s"),
+    )
+
+
+def _binding_cap(
+    spark: SparkSession, sf_dir: str, max_shingle_df: int | None
+) -> int | None:
+    """``max_shingle_df`` when it can bind, else None. A shingle's document
+    frequency is at most the number of documents, so below the cap no
+    shingle is hot and the census has nothing to remove; the count reads
+    parquet metadata only."""
+    if max_shingle_df is None:
+        return None
+    n_docs = load_table(spark, sf_dir, "documents").count()
+    return max_shingle_df if n_docs > max_shingle_df else None
+
+
+def _set_sizes(sh: DataFrame) -> DataFrame:
+    """(doc_id, n_sh, s) from (doc_id, s) rows, n_sh counted per document
+    (null ``s`` rows count 0)."""
+    sizes = sh.groupBy("doc_id").agg(F.count("s").alias("n_sh"))
+    return sh.join(sizes, "doc_id")
 
 
 def _intersection_pairs(
-    sh: DataFrame, max_shingle_df: int | None
+    rows: DataFrame, max_shingle_df: int | None
 ) -> DataFrame:
-    """(d1 < d2, i, n1, n2) from an exploded (doc_id, s: long) shingle-hash
-    table — the shared candidate pipeline under BOTH similarity scores
-    (Jaccard and containment finish it with different formulas, so the
-    df-cap semantics and the join strategy can never drift between them).
+    """(d1 < d2, i, n1, n2) from (doc_id, n_sh, s: long) shingle rows
+    (``_shingle_rows``) — the shared candidate pipeline under BOTH
+    similarity scores (Jaccard and containment finish it with different
+    formulas, so the df-cap semantics and the join strategy can never drift
+    between them).
+
+    One self-join on s: both sides are the same plan, so they read one
+    reused shuffle exchange, and the (d1, d2) aggregate counts the
+    intersection i while n1/n2 are max(n_sh) of each side — the sizes ride
+    the rows instead of being joined back. (Grouping by n1/n2 instead would
+    let Catalyst infer isnotnull(size(hs)) into the shingle projection.)
 
     join key = xxhash64(shingle): fixed-width long comparisons instead of
     string equality through the whole self-join (the hot path at scale).
     A key collision would need two distinct shingles in one corpus to share
     an xxhash64 — p < n^2 / 2^64, irrelevant even at 10^8 distinct shingles.
-    With ``max_shingle_df``, capped shingles leave both the intersection
-    and the sizes (consistent capped semantics, see MAX_SHINGLE_DF).
+
+    ``max_shingle_df`` is the cap when it can bind (``_binding_cap``), else
+    None. With a cap, the census drops shingles above it from both the
+    intersection and the sizes (consistent capped semantics, see
+    MAX_SHINGLE_DF) and recounts n_sh.
     """
-    # persist the exploded (doc_id, s) table BEFORE the df cap (round 16;
-    # supersedes the round-15 post-cap pin): the pre-cap table has FIVE
-    # logical references (hot census + sizes aggregate + both self-join
-    # sides, with the anti-join replayed on three of them), so pinning here
-    # lets every consumer read the cache — the explode+xxhash shingle pass
-    # runs exactly once — while the re-applied cap is one broadcast hash
-    # anti-probe per cached row (codegen'd, and the BroadcastExchange of the
-    # hot set is built once and reused). The round-15 post-cap pin left the
-    # hot census + anti-join left side reading the UPSTREAM shingle-array
-    # cache, which cost a second corpus-sized cache; this shape needs only
-    # the 16 B/row exploded table. 10x-probe evidence in OPTIMIZATION_r16.md.
-    sh = pin(sh, "intersection_pairs")
     if max_shingle_df is not None:
+        # census branch: pin the exploded (doc_id, s) table BEFORE the cap
+        # (round 16): the hot census and the capped table (read by the
+        # sizes aggregate, the size join and both self-join sides) all
+        # reference it, so every consumer reads the cache and the
+        # explode+xxhash shingle pass runs exactly once; the re-applied cap
+        # is one broadcast hash anti-probe per cached row (codegen'd, the
+        # hot set's BroadcastExchange built once and reused). 10x-probe
+        # evidence in OPTIMIZATION_r16.md. The recounted sizes join the
+        # rows, not the pair table: at the cap a shingle can still emit
+        # ~cap^2/2 pairs, so the pair table can outgrow the rows.
+        sh = pin(rows.select("doc_id", "s"), "intersection_pairs")
         hot = sh.groupBy("s").count().filter(F.col("count") > max_shingle_df)
-        sh = sh.join(F.broadcast(hot.select("s")), "s", "left_anti")
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+        rows = _set_sizes(sh.join(F.broadcast(hot.select("s")), "s", "left_anti"))
     # SHUFFLE_HASH: the equi-self-join would default to sort-merge, paying a
     # full sort of the exploded shingle table on BOTH sides; hash join skips
     # the sorts and streams one side against the other's hash map. (A
     # collect_list-posting-list + pair-explosion rewrite was tried and is
     # ~3x SLOWER: the nested-transform pair generator runs interpreted,
     # while this join stays inside whole-stage codegen.)
-    a, b = sh.alias("a"), sh.hint("shuffle_hash").alias("b")
-    inter = (
+    a, b = rows.alias("a"), rows.hint("shuffle_hash").alias("b")
+    return (
         a.join(b, "s")
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .agg(F.count(F.lit(1)).alias("i"))
+        .agg(
+            F.count(F.lit(1)).alias("i"),
+            F.max("a.n_sh").alias("n1"),
+            F.max("b.n_sh").alias("n2"),
+        )
     )
-    s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n_sh").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n_sh").alias("n2"))
-    return inter.join(s1, "d1").join(s2, "d2")
 
 
 def _jaccard_pairs_from_shingles(
-    sh: DataFrame, threshold: float, max_shingle_df: int | None
+    rows: DataFrame, threshold: float, max_shingle_df: int | None
 ) -> DataFrame:
     """Jaccard finisher over ``_intersection_pairs`` (see its docstring)."""
     return (
-        _intersection_pairs(sh, max_shingle_df)
+        _intersection_pairs(rows, max_shingle_df)
         .select(
             "d1",
             "d2",
@@ -1626,14 +1672,10 @@ def prefix_filter_pairs(
         # self-join). Sampling exposure is shared by both routes and is a
         # volume risk only, never a correctness risk (a missed hot shingle
         # adds join rows here exactly as it adds candidate rows there).
-        # No persist on the shingle arrays (round-16 advice): single
-        # consumer — _intersection_pairs persists the exploded table.
-        sh = _doc_shingles(spark, sf_dir, n).select(
-            "doc_id", F.explode(shingle_hashes(F.col("sh"))).alias("s")
-        )
         # orientation already canonical: the self-join keeps a.doc_id <
         # b.doc_id, the same (d1 < d2) the prefix route's least/greatest emits
-        return _jaccard_pairs_from_shingles(sh, threshold, max_shingle_df=None)
+        rows = _shingle_rows(_doc_shingles(spark, sf_dir, n))
+        return _jaccard_pairs_from_shingles(rows, threshold, max_shingle_df=None)
     if not hot:
         # forced prefix route on a cold corpus (route="prefix" — tests pin
         # this to keep the no-demotion canonical order covered): hash order,
@@ -1657,7 +1699,7 @@ def prefix_filter_pairs(
             "doc_id", F.explode(shingle_hashes(F.col("sh"))).alias("s")
         )
         hot_df = F.broadcast(
-            spark.createDataFrame([(s,) for s in hot], "s long").withColumn(
+            local_frame(spark, [(s,) for s in hot], "s long").withColumn(
                 "hot", F.lit(1)
             )
         )
@@ -1765,21 +1807,18 @@ def containment_pairs(
     "capped containment"; this corpus sits far below the cap so the
     output is textbook-exact, oracle-verified).
 
-    Scale shape: identical to the Jaccard join — one partial-aggregated
-    df cap pass, the SHUFFLE_HASH shingle self-join, a (d1, d2) count
-    aggregate, size joins on the reduced pair table. Output: d1 < d2,
+    Scale shape: identical to the Jaccard join (``_intersection_pairs``) —
+    the SHUFFLE_HASH shingle self-join and a (d1, d2) aggregate that counts
+    the intersection and carries the sizes, with the df-cap census only
+    when the cap can bind. Output: d1 < d2,
     n1, n2 (the CAPPED per-side sizes — consumers deriving a drop side
     must use these, not recomputed uncapped sizes, so the orientation
     always agrees with the containment denominator), n_small,
     containment (rounded 6).
     """
-    # no persist on the shingle arrays (round-16 advice): single consumer —
-    # _intersection_pairs persists the downstream exploded table
-    sh = _doc_shingles(spark, sf_dir, n).select(
-        "doc_id", F.explode(shingle_hashes(F.col("sh"))).alias("s")
-    )
+    rows = _shingle_rows(_doc_shingles(spark, sf_dir, n))
     return (
-        _intersection_pairs(sh, max_shingle_df)
+        _intersection_pairs(rows, _binding_cap(spark, sf_dir, max_shingle_df))
         .select(
             "d1",
             "d2",

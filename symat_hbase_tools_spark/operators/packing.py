@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from symat_hbase_tools_spark.sources.io import local_frame
+
 #: whitespace token count — matches text_analysis.token_stats and the DuckDB
 #: oracle (len(string_split_regex(trim(text), ' +')))
 def _n_tokens(text: F.Column) -> F.Column:
@@ -77,8 +79,8 @@ def pack_sequences(
         offsets[r["_pid"]] = running
         running += r["_total"]
     spark = docs.sparkSession
-    off_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid int, _offset long"
+    off_df = local_frame(
+        spark, [(pid, off) for pid, off in offsets.items()], "_pid int, _offset long"
     )
     return (
         local.join(F.broadcast(off_df), "_pid")

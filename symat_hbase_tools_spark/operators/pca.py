@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from symat_hbase_tools_spark.sources.io import local_frame
 from symat_hbase_tools_spark.sources.tables import load_table
 
 #: principal components kept by the default projection
@@ -160,7 +161,8 @@ def pca_check(spark: SparkSession, sf_dir: str, k: int = PCA_K) -> DataFrame:
         (F.sum("n") / k).cast("long").alias("n_vectors"),
     ).first()
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(centered_ok_row["n_vectors"]),

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from symat_hbase_tools_spark.functions.text import stopword_hits, token_count
+from symat_hbase_tools_spark.sources.io import local_frame
 from symat_hbase_tools_spark.sources.tables import load_table
 
 #: probe feature names, in Gram index order; f0 is the intercept column
@@ -116,8 +117,8 @@ def ridge_fit(
         (FEATURE_NAMES[i], float(w[i]), int(n), float(mse), float(r2))
         for i in range(k)
     ]
-    return spark.createDataFrame(
-        out, "feature string, coef double, n_rows bigint, mse double, r2 double"
+    return local_frame(
+        spark, out, "feature string, coef double, n_rows bigint, mse double, r2 double"
     )
 
 

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from symat_hbase_tools_spark.sources.io import local_frame
+
 _BUCKETS = 1_000_000
 
 
@@ -317,8 +319,8 @@ def pps_systematic(
         offsets[r["_pid"]] = running
         running += r["_total"] or 0
     stride = max(running // max(target_k, 1), 1)
-    off_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid int, _offset long"
+    off_df = local_frame(
+        spark, [(pid, off) for pid, off in offsets.items()], "_pid int, _offset long"
     )
     cum = (F.col("_local_cum") - F.col("_w") + F.col("_offset")).alias("_cum")
     tape = local.join(F.broadcast(off_df), "_pid").select(id_col, "_w", cum)
@@ -455,9 +457,7 @@ def kcenter_select(
         chosen.append((rank, sel_id, round(sel_d, 6)))
         chosen_ids.add(sel_id)
     base.unpersist()
-    return spark.createDataFrame(
-        chosen, "rank int, vec_id long, sel_dist double"
-    )
+    return local_frame(spark, chosen, "rank int, vec_id long, sel_dist double")
 
 
 def kcenter_check(spark, sf_dir: str, k: int = KCENTER_K) -> DataFrame:

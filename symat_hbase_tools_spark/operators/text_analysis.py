@@ -22,6 +22,7 @@ from symat_hbase_tools_spark.functions.text import (
     tokens,
 )
 from symat_hbase_tools_spark.plans.serve_cache import pin
+from symat_hbase_tools_spark.sources.io import local_frame
 from symat_hbase_tools_spark.sources.tables import load_table
 
 def lang_id_expr(text: F.Column) -> F.Column:
@@ -494,7 +495,7 @@ def bm25_search(
         F.count(F.lit(1)).alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
-    qt = spark.createDataFrame([(t,) for t in query_terms], "term string")
+    qt = local_frame(spark, [(t,) for t in query_terms], "term string")
     tf = (
         words.join(F.broadcast(qt), "term")
         .groupBy("doc_id", "term")

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from symat_hbase_tools_spark.operators.relational import money_sum
 from symat_hbase_tools_spark.plans.serve_cache import pin
+from symat_hbase_tools_spark.sources.io import local_frame
 from symat_hbase_tools_spark.sources.tables import load_table
 
 #: funnel stage sequence (strictly-increasing event times between stages)
@@ -231,8 +232,10 @@ def events_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     Aggregate output: count + exact money sum per band.
     """
     events = load_table(spark, sf_dir, "events")
-    bands = spark.createDataFrame(
-        [(n, lo, hi) for n, lo, hi in VALUE_BANDS], "band string, lo double, hi double"
+    bands = local_frame(
+        spark,
+        [(n, lo, hi) for n, lo, hi in VALUE_BANDS],
+        "band string, lo double, hi double",
     )
     cond = (F.col("value") >= F.col("lo")) & (F.col("value") < F.col("hi"))
     joined = events.join(F.broadcast(bands), cond, "inner")

@@ -27,6 +27,9 @@ writer's file, an overwrite, a deleted manifest, or a crash between a
 region swap and its manifest write each change the key, and a manifest that
 is missing or no longer names the data files leaves the whole-table read.
 
+Driver-side rows (a union-find's labels, a query's terms, a handful of
+offsets) enter Spark through ``local_frame``, as one Arrow table.
+
 Format guidance at scale (docstrings are the contract, tests enforce
 round-trips):
   * parquet — the default: columnar, predicate pushdown, column pruning.
@@ -186,6 +189,26 @@ def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem of ``path``, Hadoop ``Path`` constructor)."""
     Path = _jvm_classes(spark._jvm)[0]
     return Path(path).getFileSystem(spark._jsc.hadoopConfiguration()), Path
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema`` order;
+    ``schema`` a StructType or a DDL string), handed to Spark as one Arrow
+    table. Its plan is a ``LocalTableScan``; ``createDataFrame`` over a
+    Python list scans a PythonRDD instead, which starts a Python worker on
+    every action."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def write_json(spark: SparkSession, path: str, obj) -> None:

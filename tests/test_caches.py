@@ -3,6 +3,7 @@ mtimes) must never be served a stale plan, and both caches stay bounded."""
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 
@@ -88,6 +89,12 @@ def test_bench_summary_keep_names_resolve():
     assert len(set(bench.SUMMARY_KEEP)) == len(bench.SUMMARY_KEEP)
 
 
+#: a shingle df cap below sf0.001's 500 documents: the cap can bind, so the
+#: dedup pair operators run the hot-shingle census and its
+#: ``intersection_pairs`` pin (at the default cap they pin nothing)
+CENSUS_CAP = 100
+
+
 def test_dedup_pin_hygiene_bounded(spark):
     """Serve-many hygiene (round 16): repeated dedup-operator calls keep at
     most ONE outstanding pinned table per pin site — previous calls' pins
@@ -96,8 +103,8 @@ def test_dedup_pin_hygiene_bounded(spark):
     from symat_hbase_tools_spark.plans.serve_cache import outstanding
 
     for _ in range(3):
-        dedup.ngram_jaccard_pairs(spark, SF_DIR).collect()
-        dedup.containment_pairs(spark, SF_DIR).collect()
+        dedup.ngram_jaccard_pairs(spark, SF_DIR, max_shingle_df=CENSUS_CAP).collect()
+        dedup.containment_pairs(spark, SF_DIR, max_shingle_df=CENSUS_CAP).collect()
     pins = outstanding()
     assert "intersection_pairs" in pins, "expected pinned slots to be registered"
     for slot, n in pins.items():
@@ -174,7 +181,7 @@ def test_serve_many_pins_bounded_across_families(spark, tmp_path):
     from symat_hbase_tools_spark.plans.serve_cache import outstanding
 
     ops = [
-        dedup.ngram_jaccard_pairs,
+        functools.partial(dedup.ngram_jaccard_pairs, max_shingle_df=CENSUS_CAP),
         timeseries.events_gap_fill,
         text_analysis.bm25_search,
         text_analysis.token_budget_select,

@@ -3,9 +3,10 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from symat_hbase_tools_spark.operators import dedup
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_run
 
 
 @pytest.fixture(scope="module")
@@ -202,7 +203,10 @@ def test_default_cap_bounds_hot_shingle_explosion(spark):
     alone would produce C(60,2)=1770 intersecting pairs."""
     from pyspark.sql import functions as F
 
-    from symat_hbase_tools_spark.operators.dedup import _jaccard_pairs_from_shingles
+    from symat_hbase_tools_spark.operators.dedup import (
+        _jaccard_pairs_from_shingles,
+        _set_sizes,
+    )
 
     n_docs = 60
     rows = []
@@ -213,8 +217,12 @@ def test_default_cap_bounds_hot_shingle_explosion(spark):
     rows += [(0, 5001), (0, 5002), (1, 5001), (1, 5002)]
     sh = spark.createDataFrame(rows, "doc_id long, s long")
 
-    uncapped = _jaccard_pairs_from_shingles(sh, threshold=0.0, max_shingle_df=None)
-    capped = _jaccard_pairs_from_shingles(sh, threshold=0.0, max_shingle_df=10)
+    uncapped = _jaccard_pairs_from_shingles(
+        _set_sizes(sh), threshold=0.0, max_shingle_df=None
+    )
+    capped = _jaccard_pairs_from_shingles(
+        _set_sizes(sh), threshold=0.0, max_shingle_df=10
+    )
     n_uncapped, n_capped = uncapped.count(), capped.count()
     assert n_uncapped == n_docs * (n_docs - 1) // 2  # quadratic blow-up
     assert n_capped == 1  # only the genuine rare-shingle pair survives
@@ -223,6 +231,60 @@ def test_default_cap_bounds_hot_shingle_explosion(spark):
     # capped-Jaccard semantics: sizes exclude the hot shingle too (3 rare
     # shingles each, 2 shared -> 2/4)
     assert abs(got["jaccard"] - 0.5) < 1e-12
+
+
+def test_fresh_dedup_clusters_runs_few_jobs(spark):
+    """A fresh doc_dedup_clusters (cache cleared, plan rebuilt, collected)
+    runs at most 10 Spark jobs: the documents count, one materialization
+    of the pair pipeline (the shingle rows shuffled once and reused by both
+    self-join sides), the pair collect and the action over the local label
+    table. Running the hot-shingle census, its pin and the size joins on
+    every call takes 29."""
+    from symat_hbase_tools_spark.entry import QUERIES
+    from symat_hbase_tools_spark.sources.tables import load_table
+
+    load_table(spark, SF_DIR, "documents")  # schema read outside the count
+    spark.catalog.clearCache()
+
+    def fresh():
+        return QUERIES["doc_dedup_clusters"].__wrapped__(spark, SF_DIR).collect()
+
+    rows, jobs = jobs_run(spark, fresh)
+    assert rows and jobs <= 10, jobs
+
+
+def _max_shingle_df(spark) -> int:
+    rows = dedup._shingle_rows(dedup._doc_shingles(spark, SF_DIR, 3))
+    return rows.groupBy("s").count().agg(F.max("count")).first()[0]
+
+
+@pytest.mark.parametrize(
+    "op, threshold",
+    [(dedup.ngram_jaccard_pairs, 0.3), (dedup.containment_pairs, 0.5)],
+)
+def test_census_branch_equals_default_when_nothing_is_hot(
+    spark, documents, op, threshold
+):
+    """A cap between the corpus's largest shingle df and its document count
+    runs the hot-shingle census (the anti-join is in the plan), finds
+    nothing hot, and so returns exactly the default branch's output, schema
+    included. The default branch (cap above the document count) runs no
+    census."""
+    cap = _max_shingle_df(spark)
+    assert cap < documents.count()
+    default = op(spark, SF_DIR, threshold=threshold)
+    census = op(spark, SF_DIR, threshold=threshold, max_shingle_df=cap)
+
+    def has_census(df):
+        return "LeftAnti" in df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert has_census(census) and not has_census(default)
+    assert census.schema == default.schema
+    want = sorted(tuple(r) for r in default.collect())
+    assert want and sorted(tuple(r) for r in census.collect()) == want
+    if op is dedup.containment_pairs:
+        types = dict(census.dtypes)
+        assert [types[c] for c in ("n1", "n2", "n_small")] == ["bigint"] * 3
 
 
 def test_incremental_indexed_matches_unindexed(spark, tmp_path):

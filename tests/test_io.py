@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from symat_hbase_tools_spark.sources import io as cio
 from symat_hbase_tools_spark.sources.cells import CELL_TS, customer_cells
+from tests.conftest import jobs_run
 
 
 def cells_set(df):
@@ -148,21 +149,6 @@ def test_scratch_paths_are_process_scoped(spark):
     assert stores, os.listdir(root)
 
 
-def _jobs_run(spark, action):
-    """(``action()``, the Spark jobs it launched), counted through a job
-    group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobcount-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        result = action()
-    finally:
-        sc._jsc.clearJobGroup()
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_read_cells_runs_no_job(spark, customer, tmp_path):
     """Opening a cells table runs no Spark job (the schema is fixed and
     checked against one footer on the driver); a point Get is one job."""
@@ -171,10 +157,10 @@ def test_read_cells_runs_no_job(spark, customer, tmp_path):
 
     path = str(tmp_path / "bulk")
     bulk_load_cells(customer_cells(customer), path, 4)
-    cells, jobs = _jobs_run(spark, lambda: cio.read_cells(spark, path))
+    cells, jobs = jobs_run(spark, lambda: cio.read_cells(spark, path))
     assert jobs == 0
     get = kv.point_get(cells, b"cust#00000007")
-    table, jobs = _jobs_run(spark, get.toArrow)
+    table, jobs = jobs_run(spark, get.toArrow)
     assert jobs == 1
     assert table.num_rows == 4
 

@@ -139,6 +139,19 @@ def test_connected_components_paths_agree(spark):
     assert fast == dist
 
 
+def test_driver_union_find_labels_are_a_local_table_scan(spark):
+    """The driver union-find's labels enter Spark as Arrow: a
+    LocalTableScan, not a PythonRDD scan that starts a Python worker."""
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "d1 long, d2 long")
+    labels = connected_components(pairs)
+    plan = labels._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert sorted(tuple(r) for r in labels.collect()) == [
+        (1, 1), (2, 1), (3, 1), (10, 10), (11, 10)
+    ]
+    assert [f.nullable for f in labels.schema.fields] == [False, False]
+
+
 def test_dedup_clusters_report(spark):
     pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "d1 long, d2 long")
     got = {

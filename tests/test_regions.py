@@ -14,7 +14,6 @@ import glob
 import json
 import os
 import shutil
-import uuid
 
 import duckdb
 import pyarrow as pa
@@ -27,6 +26,7 @@ from symat_hbase_tools_spark.operators import bulkload, kv
 from symat_hbase_tools_spark.operators.bulkload import bulk_load_cells
 from symat_hbase_tools_spark.sources import io as cio
 from symat_hbase_tools_spark.sources.cells import CELLS_SCHEMA, customer_cells
+from tests.conftest import jobs_run
 
 N_REGIONS = 8
 
@@ -62,17 +62,6 @@ def _scan(df) -> dict:
 
     walk(df._jdf.queryExecution().executedPlan())
     return out
-
-
-def _jobs_run(spark, action):
-    sc = spark.sparkContext
-    group = f"jobcount-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        result = action()
-    finally:
-        sc._jsc.clearJobGroup()
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _manifest(path):
@@ -161,12 +150,12 @@ def test_get_cost_does_not_grow_with_regions(spark, customer, tmp_path):
 def test_held_table_opens_without_jobs(spark, table):
     """read_cells on a manifest table runs 0 Spark jobs, first and again
     (the held scan is reused), and the Get runs 1 over 1 file."""
-    first, jobs = _jobs_run(spark, lambda: cio.read_cells(spark, table))
+    first, jobs = jobs_run(spark, lambda: cio.read_cells(spark, table))
     assert jobs == 0
-    again, jobs = _jobs_run(spark, lambda: cio.read_cells(spark, table))
+    again, jobs = jobs_run(spark, lambda: cio.read_cells(spark, table))
     assert jobs == 0 and again is first
     get = kv.point_get(again, b"cust#00000007")
-    arrow, jobs = _jobs_run(spark, get.toArrow)
+    arrow, jobs = jobs_run(spark, get.toArrow)
     assert jobs == 1 and arrow.num_rows == 4
     assert _scan(kv.point_get(again, b"cust#00000007"))["numFiles"] == 1
 
@@ -221,6 +210,28 @@ def test_copy_row_in_place_rewrites_one_region(spark, customer, table):
         if ".inflight-" in p or ".replaced-" in p
     ]
     assert siblings == []
+
+
+def test_copy_row_in_place_collects_the_puts_once(spark, table):
+    """An in-place copy-row collects the row's cells once and upserts them
+    as a local table: at most 4 Spark jobs (a lazy upsert re-reads the
+    puts for the count, the broadcast and the union: 7 jobs), and the
+    copied cells are the source row's cells with only the timestamp
+    bumped."""
+    key, bumped = b"cust#00000042", 1786000000000
+    before = _rows(kv.point_get(cio.read_cells(spark, table), key))
+    rc, jobs = jobs_run(spark, lambda: cli.main([
+        "copy-row", "--sourceTable", table, "--destTable", table,
+        "--rowKeyByteString", key.decode(), "--override", "true",
+        "--timestampToUse", str(bumped),
+    ]))
+    assert rc == 0
+    assert jobs <= 4, jobs
+    after = _rows(kv.point_get(cio.read_cells(spark, table), key))
+    copied = [r for r in after if r[3] == bumped]
+    assert len(before) == 4
+    assert copied == sorted(r[:3] + (bumped,) + r[4:] for r in before)
+    assert sorted(set(after) - set(copied)) == before
 
 
 # -- staleness: every change the manifest does not describe falls back --------

@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 
 from symat_hbase_tools_spark.operators import similarity
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_run
 
 
 @pytest.fixture(scope="module")
@@ -1422,8 +1422,6 @@ def test_ivf_stale_check_reads_recorded_row_counts(spark, tmp_path, monkeypatch)
     query's construction runs no count job over the trees. The records
     equal the trees' counts, an append adds to the assignments count, and
     a tree without a record is still checked by counting it."""
-    import uuid
-
     import pyspark.sql.functions as F
     import pytest as _pytest
 
@@ -1441,14 +1439,7 @@ def test_ivf_stale_check_reads_recorded_row_counts(spark, tmp_path, monkeypatch)
     qs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(10)
 
     def construct_jobs(query):
-        sc = spark.sparkContext
-        group = f"construct-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            query(spark, idx, qs, k=3, n_probe=4)
-        finally:
-            sc._jsc.clearJobGroup()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return jobs_run(spark, lambda: query(spark, idx, qs, k=3, n_probe=4))[1]
 
     queries = (S.ann_ivfpq_query, S.ann_ivfbq_query)
     for q in queries:  # opens the index relations, which run jobs once
