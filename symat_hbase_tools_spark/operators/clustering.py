@@ -41,13 +41,20 @@ from symat_hbase_tools_spark.sources.io import local_frame
 DRIVER_UNION_FIND_MAX_EDGES = 2_000_000
 
 
-def _driver_union_find(pairs: DataFrame, edge_rows, id_type) -> DataFrame:
-    """Union-find with path compression; union-by-min keeps every root the
-    min id of its component, matching the distributed algorithm's labels.
-    Direction- and duplicate-insensitive, so it consumes the raw pair rows
-    with no doubling/distinct pass. The labels enter Spark as one Arrow
-    table (``local_frame``): a ``LocalTableScan``, where a Python list
-    would be a PythonRDD scan that starts a Python worker on every run."""
+def _driver_union_find(spark, edges, id_type) -> DataFrame:
+    """Union-find with path compression over an Arrow table of (a, b)
+    edges; union-by-min keeps every root the min id of its component,
+    matching the distributed algorithm's labels. Direction- and
+    duplicate-insensitive, so it consumes the raw pair rows with no
+    doubling/distinct pass.
+
+    The labels enter Spark as one Arrow table (``local_frame``), a
+    ``LocalTableScan``: a Python list would be a PythonRDD scan that starts
+    a Python worker on every run. ``coalesce(1)`` makes that one partition,
+    so an aggregate over the labels (``dedup_clusters``' per-cluster count)
+    runs without an exchange: one job, where the scan's default split would
+    take two. Every consumer joins the labels as the broadcast side, so the
+    corpus side keeps its partitioning."""
     parent: dict = {}
 
     def find(x):
@@ -58,7 +65,7 @@ def _driver_union_find(pairs: DataFrame, edge_rows, id_type) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in edge_rows:
+    for a, b in zip(edges.column("a").to_pylist(), edges.column("b").to_pylist()):
         if a not in parent:
             parent[a] = a
         if b not in parent:
@@ -73,7 +80,7 @@ def _driver_union_find(pairs: DataFrame, edge_rows, id_type) -> DataFrame:
         [StructField("node", id_type, False), StructField("cluster", id_type, False)]
     )
     rows = [(node, find(node)) for node in parent]
-    return local_frame(pairs.sparkSession, rows, schema)
+    return local_frame(spark, rows, schema).coalesce(1)
 
 
 def _star_components(edges: DataFrame, max_iter: int) -> DataFrame:
@@ -171,42 +178,39 @@ def connected_components(
 
     Output: node, cluster. Deterministic: labels are ids, min is order-free.
 
-    ``algorithm`` selects the distributed path taken when the edge list
-    exceeds ``max_driver_edges``: ``propagate`` (min-label propagation with
-    path halving — the right default for shallow near-dup graphs) or
-    ``star`` (alternating large-star/small-star, Kiveris et al. — O(log n)
-    rounds on adversarial long-chain graphs regardless of diameter).
+    Up to ``max_driver_edges`` edges the labels come from a driver-side
+    union-find over one bounded Arrow collect of the pairs; the pair plan
+    runs once. A larger graph takes the distributed path, and its pair
+    plan runs twice: once in that bounded collect, once to build the edge
+    list. ``algorithm`` selects the distributed path: ``propagate``
+    (min-label propagation with path halving — the right default for
+    shallow near-dup graphs) or ``star`` (alternating large-star/small-star,
+    Kiveris et al. — O(log n) rounds on adversarial long-chain graphs
+    regardless of diameter).
     """
-    # materialize the (expensive) pair plan ONCE and count it: union-find
-    # is direction- and duplicate-insensitive, so when the count fits the
-    # driver threshold the collect hits the cache and the doubling union,
-    # distinct exchange, checkpoint pass, and per-round stages of the
-    # iterative path never run. Near-dup edge lists are orders of magnitude
-    # smaller than the corpus, so even 100 TB corpora usually land here.
-    # (count+collect-from-cache, NOT take(N+1): take's incremental-limit
-    # execution schedules several sequential reduce jobs before concluding
-    # the limit can't be reached.)
-    from pyspark import StorageLevel
-
-    sel = pairs.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        n_pairs = sel.count()
-        if n_pairs <= max_driver_edges:
-            return _driver_union_find(
-                pairs, [(r["a"], r["b"]) for r in sel.collect()],
-                pairs.schema[src].dataType,
-            )
-        # big graph: build the doubled edge list from the CACHED pairs —
-        # the pair-generating plan still runs only once.
-        edges = (
-            sel.unionByName(sel.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            .distinct()
-            .localCheckpoint(eager=True)
+    # One bounded Arrow collect both picks the route and carries the edge
+    # list: at most max_driver_edges + 1 rows reach the driver, and a
+    # result within the threshold IS the whole edge list, so no count runs
+    # first and nothing is persisted. Union-find is direction- and
+    # duplicate-insensitive, so the doubling union, distinct exchange,
+    # checkpoint pass and per-round stages of the iterative path never run.
+    # Near-dup edge lists are orders of magnitude smaller than the corpus,
+    # so even 100 TB corpora usually land here. (The limited collect runs
+    # the pair plan's stages once, as an unlimited one would; it is not
+    # take(N+1)'s incremental scan of partitions.)
+    sel = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    bounded = sel.limit(max_driver_edges + 1).toArrow()
+    if bounded.num_rows <= max_driver_edges:
+        return _driver_union_find(
+            pairs.sparkSession, bounded, pairs.schema[src].dataType
         )
-    finally:
-        sel.unpersist()
+    # big graph: the pair plan runs a second time, to build the doubled
+    # edge list (the bounded collect kept no cache of it)
+    edges = (
+        sel.unionByName(sel.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
     # right-size the iteration: the edge list is usually MUCH smaller than
     # the corpus that produced it (near-dup pairs are rare). Counting the
     # checkpointed edges is free, and coalescing to ~1M edges/partition

@@ -46,7 +46,7 @@ from symat_hbase_tools_spark.functions.text import (
     simhash_from_votes,
     simhash_vote_aggs,
 )
-from symat_hbase_tools_spark.sources.tables import load_table
+from symat_hbase_tools_spark.sources.tables import load_table, table_path
 
 _LOG = logging.getLogger(__name__)
 
@@ -83,9 +83,9 @@ def bow_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from symat_hbase_tools_spark.plans.partitioning import scan_fanout as _scan_fanout
+from symat_hbase_tools_spark.plans.partitioning import fanout
 from symat_hbase_tools_spark.plans.serve_cache import pin
-from symat_hbase_tools_spark.sources.io import local_frame
+from symat_hbase_tools_spark.sources.io import local_frame, rows_exceed
 
 
 def _doc_shingles(
@@ -97,15 +97,12 @@ def _doc_shingles(
     once per reference (~3x measured). MEMORY_AND_DISK + LRU eviction keeps
     it safe on clusters; the cached unit is the post-shingle table, which is
     the same order of size as the input text."""
-    docs = load_table(spark, sf_dir, "documents")
     # The signature/shingle math is compute-bound per row: fan the scan out
-    # to one task per ~2 MB of text (capped at cluster parallelism). A small
-    # corpus collapses to few fat tasks instead of 32 near-empty ones; at
-    # real scale the source has more splits than cores and this is left
+    # to one task per ~512 KB of text (capped at cluster parallelism). A
+    # small corpus collapses to few fat tasks instead of 32 near-empty ones;
+    # at real scale the source has more splits than cores and this is left
     # untouched (fan OUT only — never pay a full shuffle to coalesce).
-    target = _scan_fanout(spark, docs)
-    if docs.rdd.getNumPartitions() < target:
-        docs = docs.repartition(target)
+    docs = fanout(spark, load_table(spark, sf_dir, "documents"))
     # two projections: materialize the words array, THEN shingle — keeps the
     # split out of the interpreted shingle lambda (see shingles_from_words)
     out = docs.withColumn("words", F.split(F.col("text"), " ")).select(
@@ -172,13 +169,18 @@ def _binding_cap(
     spark: SparkSession, sf_dir: str, max_shingle_df: int | None
 ) -> int | None:
     """``max_shingle_df`` when it can bind, else None. A shingle's document
-    frequency is at most the number of documents, so below the cap no
-    shingle is hot and the census has nothing to remove; the count reads
-    parquet metadata only."""
+    frequency is at most the number of documents, so with at most
+    ``max_shingle_df`` documents no shingle is hot and the census has
+    nothing to remove. The documents table's parquet footers decide it on
+    the driver (``sources.io.rows_exceed``): no Spark job, and no footer
+    is read once the running row count passes the cap. The scan is the
+    caller's (``_doc_shingles`` opened it), so its column count, which
+    bounds the partition levels, costs no job either."""
     if max_shingle_df is None:
         return None
-    n_docs = load_table(spark, sf_dir, "documents").count()
-    return max_shingle_df if n_docs > max_shingle_df else None
+    levels = len(load_table(spark, sf_dir, "documents").columns)
+    binds = rows_exceed(spark, table_path(sf_dir, "documents"), max_shingle_df, levels)
+    return max_shingle_df if binds else None
 
 
 def _set_sizes(sh: DataFrame) -> DataFrame:
@@ -214,17 +216,22 @@ def _intersection_pairs(
     MAX_SHINGLE_DF) and recounts n_sh.
     """
     if max_shingle_df is not None:
-        # census branch: pin the exploded (doc_id, s) table BEFORE the cap
-        # (round 16): the hot census and the capped table (read by the
-        # sizes aggregate, the size join and both self-join sides) all
-        # reference it, so every consumer reads the cache and the
-        # explode+xxhash shingle pass runs exactly once; the re-applied cap
-        # is one broadcast hash anti-probe per cached row (codegen'd, the
-        # hot set's BroadcastExchange built once and reused). 10x-probe
-        # evidence in OPTIMIZATION_r16.md. The recounted sizes join the
-        # rows, not the pair table: at the cap a shingle can still emit
-        # ~cap^2/2 pairs, so the pair table can outgrow the rows.
-        sh = pin(rows.select("doc_id", "s"), "intersection_pairs")
+        # census branch: pin the exploded (doc_id, s) table BEFORE the cap,
+        # hash-partitioned on s. The hot census, the capped table, the
+        # sizes aggregate and both self-join sides all read the pin, so the
+        # explode+xxhash shingle pass runs once. The census aggregate and
+        # the self-join find the pin already partitioned on s (a pinned
+        # table keeps its cached plan's partitioning) and the broadcast
+        # anti-join keeps it, so both sides read the pin's one exchange.
+        # Spark could not reuse an exchange of their own: every read of a
+        # pin is its own TableCacheQueryStage, and the stage id is part of
+        # the plan Spark compares. The size join keeps the partitioning
+        # while the sizes table broadcasts; a larger one is joined through
+        # a shuffle on doc_id, and each side is then exchanged on s again.
+        # The recounted sizes join the rows, not the pair table: at the cap
+        # a shingle can still emit ~cap^2/2 pairs, so the pair table can
+        # outgrow the rows.
+        sh = pin(rows.select("doc_id", "s").repartition("s"), "intersection_pairs")
         hot = sh.groupBy("s").count().filter(F.col("count") > max_shingle_df)
         rows = _set_sizes(sh.join(F.broadcast(hot.select("s")), "s", "left_anti"))
     # SHUFFLE_HASH: the equi-self-join would default to sort-merge, paying a
@@ -631,10 +638,7 @@ def dup_span_census(
     skew the join key at corpus scale; they are exactly the rows the
     ``nd > 1`` filter keeps, and AQE skew-join splits them.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    target = _scan_fanout(spark, docs)
-    if docs.rdd.getNumPartitions() < target:  # fan OUT only, never coalesce
-        docs = docs.repartition(target)
+    docs = fanout(spark, load_table(spark, sf_dir, "documents"))
     words = docs.withColumn("words", F.split(F.col("text"), " ")).filter(
         F.size("words") >= k
     )
@@ -698,10 +702,7 @@ def _window_hashes_of(docs: DataFrame, k: int, persist: bool = False) -> DataFra
     the pass twice and dup_span_partners FOUR times per action (verified
     in executed plans). MEMORY_AND_DISK — the cached unit is ~24 bytes
     per token, the same order as the input text."""
-    spark = docs.sparkSession
-    target = _scan_fanout(spark, docs)
-    if docs.rdd.getNumPartitions() < target:  # fan OUT only, never coalesce
-        docs = docs.repartition(target)
+    docs = fanout(docs.sparkSession, docs)
     words = docs.withColumn("words", F.split(F.col("text"), " ")).filter(
         F.size("words") >= k
     )

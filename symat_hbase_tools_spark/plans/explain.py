@@ -69,3 +69,33 @@ def assert_no_hof_in_filters(df: DataFrame) -> None:
         "interpreted HOF re-inlined into a Filter (double-eval class):\n"
         + "\n".join(offenders)
     )
+
+
+def plan_children(node) -> list:
+    """The children of ``node``, a JVM node of an executed physical plan,
+    through adaptive query stages and reused exchanges. A pinned table's
+    read (``TableCacheQueryStage``, ``InMemoryTableScan``) is a leaf: its
+    cached plan ran once, outside this query's stages."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return [node.executedPlan()]
+    if name == "TableCacheQueryStage":
+        return []
+    if name.endswith("QueryStage"):
+        return [node.plan()]
+    if name == "ReusedExchange":
+        return [node.child()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def executed_nodes(df: DataFrame) -> list:
+    """Every node of ``df``'s executed physical plan, the final adaptive
+    plan once an action has run (``plan_children``). A reused exchange's
+    subtree is listed once per read."""
+    nodes, stack = [], [df._jdf.queryExecution().executedPlan()]  # noqa: SLF001
+    while stack:
+        node = stack.pop()
+        nodes.append(node)
+        stack.extend(plan_children(node))
+    return nodes

@@ -57,9 +57,10 @@ def fanout(
     ``scan_fanout`` caps the target at cluster parallelism — is left
     untouched: coalescing it through a full shuffle would pay an exchange
     of the entire input just to shrink task count, which the scheduler
-    handles fine as-is.
+    handles fine as-is. A target of 1 returns ``df`` without asking its
+    partition count (never below 1), which plans the query.
     """
     target = scan_fanout(spark, df, bytes_per_task)
-    if df.rdd.getNumPartitions() < target:
+    if target > 1 and df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -120,34 +120,49 @@ def cells_schema_problems(found: dict) -> list[str]:
     return problems
 
 
+def _data_files(spark: SparkSession, conf, path: str, levels: int):
+    """(data-file statuses, partition depth) of the parquet table at
+    ``path``, or ``None`` when it holds no data file.
+
+    The files directly under ``path``, else those of the first level of
+    ``<col>=<value>/`` directories that has any, down to ``levels`` levels
+    (at most one per column); a ``path`` that is itself a file is its one
+    data file. One glob per level, through the Hadoop FileSystem API (any
+    scheme: local, hdfs://, s3a://). The statuses are a Java array, so each
+    element read is a py4j round trip: index only what you use."""
+    Path = _jvm_classes(spark._jvm)[0]
+    root = Path(path)
+    fs = root.getFileSystem(conf)
+    pattern = path
+    for depth in range(levels):
+        hits = fs.globStatus(Path(f"{pattern}/*.parquet"))
+        if len(hits):
+            return hits, depth
+        pattern += "/*=*"
+    if not fs.isFile(root):
+        return None
+    return [fs.getFileStatus(root)], 0
+
+
 def _check_cells_footer(spark: SparkSession, path: str) -> None:
     """Raise ``ValueError`` naming every column of the parquet table at
     ``path`` that is missing from, extra to, or typed differently than
     ``CELLS_SCHEMA``.
 
-    Reads one data file's footer on the driver through the Hadoop
-    FileSystem API (any scheme: local, hdfs://, s3a://). The schema is the
-    one Spark itself would infer: the writer's row metadata, else the
-    parquet schema converted by Spark's converter. Partition columns of a
-    ``<dir>/<col>=<value>/`` layout count as present. A path with no data
-    file is left to the reader (a missing path raises there; an empty
-    directory is an empty table).
+    Reads one data file's footer (``_data_files``) on the driver. The
+    schema is the one Spark itself would infer: the writer's row metadata,
+    else the parquet schema converted by Spark's converter. Partition
+    columns of a ``<dir>/<col>=<value>/`` layout count as present. A path
+    with no data file is left to the reader (a missing path raises there;
+    an empty directory is an empty table).
     """
-    Path, Reader, Converter, SQLConf = _jvm_classes(spark._jvm)
+    _, Reader, Converter, SQLConf = _jvm_classes(spark._jvm)
     conf = spark._jsc.hadoopConfiguration()
-    root = Path(path)
-    fs = root.getFileSystem(conf)
-    pattern = path
-    for depth in range(len(CELLS_SCHEMA.fields)):  # one level per partition column
-        hits = fs.globStatus(Path(f"{pattern}/*.parquet"))
-        if len(hits):
-            status = hits[0]
-            break
-        pattern += "/*=*"
-    else:
-        if not fs.isFile(root):
-            return
-        status, depth = fs.getFileStatus(root), 0
+    found_files = _data_files(spark, conf, path, len(CELLS_SCHEMA.fields))
+    if found_files is None:
+        return
+    files, depth = found_files
+    status = files[0]
     meta = Reader.readFooter(conf, status).getFileMetaData()
     row_json = meta.getKeyValueMetaData().get(_SPARK_ROW_METADATA)
     if row_json is None:
@@ -160,6 +175,23 @@ def _check_cells_footer(spark: SparkSession, path: str) -> None:
     problems = cells_schema_problems(found)
     if problems:
         raise ValueError(f"{path} is not a cells table: " + "; ".join(problems))
+
+
+def rows_exceed(spark: SparkSession, path: str, n: int, levels: int) -> bool:
+    """Whether the parquet table at ``path`` holds more than ``n`` rows,
+    from its data files' footers (``_data_files``) on the driver: no Spark
+    job. The footers are read one file at a time and the reads stop once
+    the running row count passes ``n``."""
+    Reader = _jvm_classes(spark._jvm)[1]
+    conf = spark._jsc.hadoopConfiguration()
+    found_files = _data_files(spark, conf, path, levels)
+    rows = 0
+    for status in found_files[0] if found_files else ():
+        blocks = Reader.readFooter(conf, status).getBlocks()
+        rows += sum(block.getRowCount() for block in blocks)
+        if rows > n:
+            return True
+    return False
 
 
 # -- region manifest ----------------------------------------------------------

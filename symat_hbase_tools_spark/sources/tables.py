@@ -71,10 +71,15 @@ _SCAN_CACHE: dict[tuple, DataFrame] = {}
 _SCAN_CACHE_MAX = 1024
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    """Where the table ``name`` of ``sf_dir`` lives."""
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table; normalizes events.ts -> (TimestampType, ts_ns)."""
     apply_runtime_confs(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = table_path(sf_dir, name)
     try:
         mtime = os.path.getmtime(path)
     except OSError:

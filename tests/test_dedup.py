@@ -235,11 +235,12 @@ def test_default_cap_bounds_hot_shingle_explosion(spark):
 
 def test_fresh_dedup_clusters_runs_few_jobs(spark):
     """A fresh doc_dedup_clusters (cache cleared, plan rebuilt, collected)
-    runs at most 10 Spark jobs: the documents count, one materialization
-    of the pair pipeline (the shingle rows shuffled once and reused by both
-    self-join sides), the pair collect and the action over the local label
-    table. Running the hot-shingle census, its pin and the size joins on
-    every call takes 29."""
+    runs at most 4 Spark jobs: the pair plan's 3 adaptive stages, run once
+    by the bounded Arrow collect that carries the edges to the driver
+    union-find, and 1 for the per-cluster count over the one-partition
+    label table. The documents' parquet footers decide the census with no
+    job. A documents count, a persisted pair count before the collect and a
+    label table of several partitions took 10."""
     from symat_hbase_tools_spark.entry import QUERIES
     from symat_hbase_tools_spark.sources.tables import load_table
 
@@ -250,7 +251,53 @@ def test_fresh_dedup_clusters_runs_few_jobs(spark):
         return QUERIES["doc_dedup_clusters"].__wrapped__(spark, SF_DIR).collect()
 
     rows, jobs = jobs_run(spark, fresh)
-    assert rows and jobs <= 10, jobs
+    assert rows and jobs <= 4, jobs
+
+
+@pytest.mark.parametrize("partition_by", [None, "part"])
+def test_binding_cap_reads_footers_without_a_job(spark, tmp_path, partition_by):
+    """``_binding_cap`` decides from the documents' parquet footers on the
+    driver: no Spark job, on a table of several data files, flat or in
+    ``part=<value>/`` directories. With n documents a cap of n cannot bind
+    and a cap of n - 1 can."""
+    import glob
+    import os
+
+    from symat_hbase_tools_spark.sources.tables import load_table
+
+    sf, n = str(tmp_path), 37
+    path = os.path.join(sf, "documents.parquet")
+    writer = (
+        spark.range(n)
+        .selectExpr("id AS doc_id", "'a b c' AS text", "id % 2 AS part")
+        .repartition(4)
+        .write
+    )
+    if partition_by:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(path)
+    pattern = "*/*.parquet" if partition_by else "*.parquet"
+    assert len(glob.glob(os.path.join(path, pattern))) > 1
+    load_table(spark, sf, "documents")  # the callers' scan, opened first
+
+    def caps():
+        return [dedup._binding_cap(spark, sf, cap) for cap in (None, n, n - 1)]
+
+    got, jobs = jobs_run(spark, caps)
+    assert (got, jobs) == ([None, None, n - 1], 0)
+
+
+def _exchanges_on_s(df) -> list[str]:
+    """Node names of the exchanges partitioned on the shingle key ``s`` in
+    the executed plan of the collected ``df``, outside pinned tables."""
+    from symat_hbase_tools_spark.plans.explain import executed_nodes
+
+    return sorted(
+        node.nodeName()
+        for node in executed_nodes(df)
+        if node.nodeName() in ("Exchange", "ReusedExchange")
+        and node.outputPartitioning().toString().startswith("hashpartitioning(s#")
+    )
 
 
 def _max_shingle_df(spark) -> int:
@@ -269,7 +316,8 @@ def test_census_branch_equals_default_when_nothing_is_hot(
     runs the hot-shingle census (the anti-join is in the plan), finds
     nothing hot, and so returns exactly the default branch's output, schema
     included. The default branch (cap above the document count) runs no
-    census."""
+    census. The census branch's self-join reads its pinned table, which is
+    already partitioned on the join key, with no exchange of its own."""
     cap = _max_shingle_df(spark)
     assert cap < documents.count()
     default = op(spark, SF_DIR, threshold=threshold)
@@ -282,6 +330,9 @@ def test_census_branch_equals_default_when_nothing_is_hot(
     assert census.schema == default.schema
     want = sorted(tuple(r) for r in default.collect())
     assert want and sorted(tuple(r) for r in census.collect()) == want
+    # both census self-join sides read the one exchange on s that built
+    # the pinned shingle table: outside the pin nothing shuffles on s
+    assert _exchanges_on_s(census) == []
     if op is dedup.containment_pairs:
         types = dict(census.dtypes)
         assert [types[c] for c in ("n1", "n2", "n_small")] == ["bigint"] * 3

@@ -140,16 +140,95 @@ def test_connected_components_paths_agree(spark):
 
 
 def test_driver_union_find_labels_are_a_local_table_scan(spark):
-    """The driver union-find's labels enter Spark as Arrow: a
-    LocalTableScan, not a PythonRDD scan that starts a Python worker."""
+    """The driver union-find's labels enter Spark as Arrow, one partition:
+    a LocalTableScan under a Coalesce 1, not a PythonRDD scan that starts a
+    Python worker. So dedup_clusters' per-cluster count runs without an
+    exchange."""
+    from symat_hbase_tools_spark.plans.explain import executed_nodes
+
     pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "d1 long, d2 long")
     labels = connected_components(pairs)
-    plan = labels._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    plan = labels._jdf.queryExecution().executedPlan()
+    assert plan.toString().startswith("Coalesce 1"), plan.toString()
+    assert [n.nodeName() for n in executed_nodes(labels)] == [
+        "Coalesce", "LocalTableScan"
+    ]
     assert sorted(tuple(r) for r in labels.collect()) == [
         (1, 1), (2, 1), (3, 1), (10, 10), (11, 10)
     ]
     assert [f.nullable for f in labels.schema.fields] == [False, False]
+    report = dedup_clusters(pairs)
+    assert report.count() == 2
+    names = [n.nodeName() for n in executed_nodes(report)]
+    assert "Exchange" not in names, names
+
+
+def test_driver_route_threshold_is_exact(spark):
+    """At exactly ``max_driver_edges`` edges the driver union-find runs
+    (its labels are a LocalTableScan); one edge more takes the distributed
+    route. Both label the graph alike."""
+    edges = [(1, 2), (2, 3), (10, 11), (3, 4), (11, 12)]
+    pairs = spark.createDataFrame(edges, "d1 long, d2 long")
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    driver = connected_components(pairs, max_driver_edges=len(edges))
+    dist = connected_components(pairs, max_driver_edges=len(edges) - 1)
+    assert "LocalTableScan" in plan(driver), plan(driver)
+    assert "LocalTableScan" not in plan(dist), plan(dist)
+    want = [(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10), (12, 10)]
+    assert sorted(tuple(r) for r in driver.collect()) == want
+    assert sorted(tuple(r) for r in dist.collect()) == want
+
+
+def _leaf_names(node) -> set[str]:
+    from symat_hbase_tools_spark.plans.explain import plan_children
+
+    kids = plan_children(node)
+    if not kids:
+        return {node.nodeName()}
+    return set().union(*(_leaf_names(k) for k in kids))
+
+
+def _labels_join_builds(df) -> list[bool]:
+    """For every join in the executed plan of the collected ``df`` between
+    the labels (LocalTableScan leaves only) and the corpus (a read of stored
+    data, a file scan or a cached table, among its leaves): whether it
+    broadcasts the labels as its build side."""
+    from symat_hbase_tools_spark.plans.explain import executed_nodes, plan_children
+
+    builds = []
+    for node in executed_nodes(df):
+        name = node.nodeName()
+        if "Join" not in name:
+            continue
+        sides = [_leaf_names(side) for side in plan_children(node)]
+        labels = [leaves == {"LocalTableScan"} for leaves in sides]
+        corpus = [bool(leaves - {"LocalTableScan"}) for leaves in sides]
+        if (labels[0] and corpus[1]) or (labels[1] and corpus[0]):
+            builds.append(
+                name == "BroadcastHashJoin"
+                and (node.buildSide().toString() == "BuildRight") == labels[1]
+            )
+    return builds
+
+
+@pytest.mark.parametrize(
+    "query",
+    ["doc_dedup_keep_best", "doc_leakage_safe_split", "doc_softdedup_weights"],
+)
+def test_labels_stay_the_broadcast_build_side(spark, query):
+    """The one-partition labels are joined to the corpus as the broadcast
+    build side, so the corpus side keeps its partitioning (streaming the
+    corpus through one label partition would leave one task)."""
+    from symat_hbase_tools_spark.entry import QUERIES
+    from tests.conftest import SF_DIR
+
+    df = QUERIES[query].__wrapped__(spark, SF_DIR)
+    assert df.collect()
+    builds = _labels_join_builds(df)
+    assert builds and all(builds), builds
 
 
 def test_dedup_clusters_report(spark):
