@@ -28,7 +28,7 @@ import argparse
 import sys
 
 from symat_hbase_tools_spark.functions.bytes_binary import to_bytes_binary
-from symat_hbase_tools_spark.operators.audit import audit, counters_of, write_report_tsv
+from symat_hbase_tools_spark.operators.audit import audit_counted, write_report_tsv
 from symat_hbase_tools_spark.operators.copy_row import copy_row, copy_row_in_place
 from symat_hbase_tools_spark.session import get_spark
 from symat_hbase_tools_spark.sources.catalog import (
@@ -943,13 +943,18 @@ def main(argv: list[str] | None = None) -> int:
                 print(f"wrote {args.output}")
             return 0
         cells = read_cells(spark, resolve_table(args.table))
-        report, counters = audit(cells)
+        report, counters = audit_counted(cells)
+        # the write is the one scan: it fills the counters, so the trace
+        # (a second action) runs after it
+        write_report_tsv(report, args.outputDir)
         if _parse_bool(args.traceCells):
             report.show(100, truncate=False)
-        write_report_tsv(report, args.outputDir)
-        c = counters_of(counters)
-        print(f"TOTAL_ROWS={c.total} SUCCESS_ROWS={c.success} FAILED_ROWS={c.failed}")
-        return 0 if c.failed == 0 else 2
+        c = counters.get
+        print(
+            f"TOTAL_ROWS={c['total']} SUCCESS_ROWS={c['success']} "
+            f"FAILED_ROWS={c['failed']}"
+        )
+        return 0 if c["failed"] == 0 else 2
     except SystemExit:
         raise
     except Exception as exc:  # noqa: BLE001

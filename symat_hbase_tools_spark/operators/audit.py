@@ -12,7 +12,9 @@ Two implementations with identical output:
   * ``audit``        — declarative (DataFrame-only). The "probe" is a single
     aggregation over the cells: a row is corrupt iff it carries the corruption
     marker qualifier. This is the 100 TB path: one partial-aggregated
-    hash-agg, no Python, no window, counters via the same pass.
+    hash-agg, no Python, no window. ``audit_counted`` fills the counters from
+    the same pass as the report's write (the CLI's one scan); ``audit``
+    returns them as a lazy frame of their own (the registry's form).
   * ``audit_probe``  — reference-shaped: per-partition "connection" +
     per-row try/except probe inside mapInPandas (the Spark analogue of the
     mapper's lazy reused connection, CorruptRowsMR.java:104-123). Used to
@@ -31,7 +33,7 @@ from collections.abc import Iterator
 from typing import NamedTuple
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from symat_hbase_tools_spark.functions.bytes_binary import to_string_binary_expr
@@ -94,26 +96,52 @@ def _probed_rows(cells: DataFrame) -> DataFrame:
     )
 
 
-def audit(cells: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Declarative audit. Returns (report_df, counters_df).
+def _counters() -> list[Column]:
+    """TOTAL / SUCCESS / FAILED over the probed rows; 0, not NULL, on an
+    empty table."""
+    return [
+        F.count(F.lit(1)).alias("total"),
+        F.count_if(~F.col("is_corrupt")).alias("success"),
+        F.count_if(F.col("is_corrupt")).alias("failed"),
+    ]
 
-    report_df:   row_key STRING, error STRING   (corrupt rows only)
-    counters_df: total, success, failed         (single row, exact)
-    """
-    probed = _probed_rows(cells)
-    report = probed.filter(F.col("is_corrupt")).select(
+
+def _report(probed: DataFrame) -> DataFrame:
+    return probed.filter(F.col("is_corrupt")).select(
         "row_key",
         F.concat(
             F.lit("CorruptCellError, message: corrupt marker present for row "),
             F.col("row_key"),
         ).alias("error"),
     )
-    counters = probed.agg(
-        F.count("*").alias("total"),
-        F.sum(F.when(~F.col("is_corrupt"), 1).otherwise(0)).alias("success"),
-        F.sum(F.when(F.col("is_corrupt"), 1).otherwise(0)).alias("failed"),
-    )
-    return report, counters
+
+
+def audit(cells: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Declarative audit. Returns (report_df, counters_df).
+
+    report_df:   row_key STRING, error STRING   (corrupt rows only)
+    counters_df: total, success, failed         (single row, exact)
+
+    The two frames are independent plans: collecting both scans the cells
+    twice (``audit_counted`` scans once).
+    """
+    probed = _probed_rows(cells)
+    return _report(probed), probed.agg(*_counters())
+
+
+def audit_counted(cells: DataFrame) -> tuple[DataFrame, Observation]:
+    """``audit``'s report plus an Observation that the action running the
+    report fills with ``total``, ``success`` and ``failed`` (read ``.get``
+    after the action): one scan for both, as the reference mapper bumps its
+    counters while it probes.
+
+    The counters are observed on the per-row aggregate's output, in the
+    result stage (see ``compaction.major_compact_counted``), and only the
+    first action fills them: run the report's write first.
+    """
+    counters = Observation()
+    probed = _probed_rows(cells).observe(counters, *_counters())
+    return _report(probed), counters
 
 
 def _default_prober(row_key: str, is_corrupt: bool) -> None:

@@ -7,11 +7,15 @@ count distinct word-n-gram shingles each training document shares with ANY
 benchmark document; above a threshold the document is flagged.
 
 Scale shape: benchmark suites are tiny (MBs) next to a 100 TB corpus, so
-the benchmark shingle set is DISTINCTed and broadcast — the train side
-never shuffles for the join; only the per-doc overlap count aggregates
-(partial map-side combine, one narrow shuffle on doc_id). Same xxhash64
-shingle keys as the dedup family (fixed-width long joins; collision math in
-dedup.py applies).
+the benchmark side is DISTINCTed and broadcast — the train side never
+shuffles for the join; only the per-doc aggregate shuffles (partial
+map-side combine, one narrow shuffle on doc_id).
+
+Every operator here runs the near-dup pipeline of ``dedup.py`` (its module
+docstring states each stage's rationale once): the exact-overlap operators
+read its shingle rows or hashed sets and end in a per-document count, and
+the fuzzy one runs MinHash LSH bands, the array-set Jaccard verify and the
+best-match step.
 """
 
 from __future__ import annotations
@@ -19,9 +23,41 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from symat_hbase_tools_spark.functions.text import shingle_hashes
-from symat_hbase_tools_spark.operators.dedup import _doc_shingles
-from symat_hbase_tools_spark.plans.serve_cache import pin
+from symat_hbase_tools_spark.operators.dedup import (
+    NUM_BANDS,
+    NUM_HASHES,
+    _best_match,
+    _doc_shingles,
+    _hashed_sets,
+    _minhash_bands,
+    _minhash_sig_from_hashed,
+    _shingle_rows,
+    _verify_jaccard,
+)
+
+
+def _train_and_bench(
+    spark: SparkSession, sf_dir: str, n: int, benchmark_mod: int
+) -> tuple[DataFrame, DataFrame]:
+    """(doc_id, s) shingle rows of the training docs, and the benchmark
+    docs' distinct s. Both read one pinned shingle table: Spark does not
+    dedupe common subplans."""
+    sh = _shingle_rows(
+        _doc_shingles(spark, sf_dir, n, persist=True), drop_empty=True
+    ).select("doc_id", "s")
+    is_bench = F.col("doc_id") % benchmark_mod == 0
+    return sh.filter(~is_bench), sh.filter(is_bench).select("s").distinct()
+
+
+def _overlaps(train: DataFrame, bench: DataFrame, min_overlap: int) -> DataFrame:
+    """(doc_id, n_overlap) of the training docs sharing >= min_overlap
+    distinct shingles with the broadcast benchmark set."""
+    return (
+        train.join(F.broadcast(bench), "s")
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_overlap"))
+        .filter(F.col("n_overlap") >= min_overlap)
+    )
 
 
 def benchmark_contamination(
@@ -36,20 +72,8 @@ def benchmark_contamination(
 
     Output: doc_id, n_overlap.
     """
-    # persist=True: the shingle table is referenced twice (bench + train
-    # sides) and Spark does not dedupe common subplans
-    sh = _doc_shingles(spark, sf_dir, n, persist=True).select(
-        "doc_id", F.explode(shingle_hashes(F.col("sh"))).alias("s")
-    )
-    is_bench = F.col("doc_id") % benchmark_mod == 0
-    bench = sh.filter(is_bench).select("s").distinct()
-    train = sh.filter(~is_bench)
-    return (
-        train.join(F.broadcast(bench), "s")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-        .filter(F.col("n_overlap") >= min_overlap)
-    )
+    train, bench = _train_and_bench(spark, sf_dir, n, benchmark_mod)
+    return _overlaps(train, bench, min_overlap)
 
 
 #: bloom sizing: ~10 bits per element + 7 hashes -> ~0.8% false-positive
@@ -101,14 +125,9 @@ def benchmark_contamination_bloom(
     """
     import numpy as np
 
-    # persist=True: referenced twice — the bloom build collects the bench
-    # side, then the screened train side re-reads the same shingle table
-    sh = _doc_shingles(spark, sf_dir, n, persist=True).select(
-        "doc_id", F.explode(shingle_hashes(F.col("sh"))).alias("s")
-    )
-    is_bench = F.col("doc_id") % benchmark_mod == 0
-    bench = sh.filter(is_bench).select("s").distinct()
-
+    # the bloom build collects the bench side, then the screened train
+    # side re-reads the same pinned shingle table
+    train, bench = _train_and_bench(spark, sf_dir, n, benchmark_mod)
     bench_hashes = bench.toPandas()["s"].to_numpy(dtype=np.int64)
     n_elems = max(len(bench_hashes), 1)
     m_bits = 1 << int(np.ceil(np.log2(n_elems * BLOOM_BITS_PER_ELEMENT)))
@@ -132,16 +151,8 @@ def benchmark_contamination_bloom(
                 ) & np.uint64(1) != 0
             yield pdf[keep]
 
-    survivors = (
-        sh.filter(~is_bench)
-        .mapInPandas(screen, schema="doc_id long, s long")
-    )
-    return (
-        survivors.join(F.broadcast(bench), "s")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-        .filter(F.col("n_overlap") >= min_overlap)
-    )
+    survivors = train.mapInPandas(screen, schema="doc_id long, s long")
+    return _overlaps(survivors, bench, min_overlap)
 
 
 def contamination_overlap_census(
@@ -169,24 +180,11 @@ def contamination_overlap_census(
     double, so the value is bit-identical cross-engine and the severity
     band compares are deterministic.
     """
-    # pin the POST-HASH (doc_id, hs) table, not the shingle arrays (round
-    # 16, the minhash_lsh_pairs discipline): it feeds BOTH the bench and
-    # train sides, the cached unit is ~8 bytes/shingle instead of the
-    # shingle text, and — the correctness-of-plan point — the later
-    # explodes make InferFiltersFromGenerate inject `size(hs) > 0 AND
-    # isnotnull(hs)` filters, which over a cached hs column are cheap
-    # column reads. With the cache one level lower (the sh arrays), those
-    # inferred filters re-inlined the interpreted shingle_hashes transform
-    # into a Filter above the cache (the round-9 double-eval class, caught
-    # by the HOF plan gate — it had been masked by a leaked minhash cache
-    # entry for exactly this subplan, which the round-16 pin hygiene
-    # stopped leaking).
-    hs = pin(
-        _doc_shingles(spark, sf_dir, n).select(
-            "doc_id", shingle_hashes(F.col("sh")).alias("hs")
-        ),
-        "contamination_hs",
-    )
+    # the hashed sets feed BOTH the bench and train sides, so they are
+    # pinned, and the explodes below run over the pinned hs column: the
+    # filters an inner explode makes Catalyst infer are cheap reads of
+    # it, never the shingle lambda (dedup module docstring, stage 1)
+    hs = _hashed_sets(_doc_shingles(spark, sf_dir, n), "contamination_hs")
     is_bench = F.col("doc_id") % benchmark_mod == 0
     bench = (
         hs.filter(is_bench)
@@ -248,37 +246,13 @@ def benchmark_contamination_fuzzy(
     training doc with its best-matching benchmark doc (max jaccard,
     bench_doc tie-break), jaccard >= threshold.
     """
-    from symat_hbase_tools_spark.operators.dedup import (
-        NUM_BANDS,
-        NUM_HASHES,
-        _minhash_sig_from_hashed,
-    )
-
-    rows_per_band = NUM_HASHES // NUM_BANDS
-    # pin + filter-above-the-boundary: the minhash_lsh_pairs idiom
-    # (the pushed-down size filter would re-inline the shingle HOF)
-    hashed = pin(
-        _doc_shingles(spark, sf_dir, n).select(
-            "doc_id", shingle_hashes(F.col("sh")).alias("hs")
-        ),
-        "contamination_fuzzy_hashed",
+    # pinned sets with the size filter above the pin, as in
+    # dedup.minhash_lsh_pairs
+    hashed = _hashed_sets(
+        _doc_shingles(spark, sf_dir, n), "contamination_fuzzy_hashed"
     ).filter(F.size("hs") > 0)
     sig = _minhash_sig_from_hashed(hashed, NUM_HASHES)
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    F.lit(b),
-                    F.slice("sig", b * rows_per_band + 1, rows_per_band),
-                ).alias("bh"),
-            )
-            for b in range(NUM_BANDS)
-        ]
-    )
-    buckets = sig.select("doc_id", F.explode(bands).alias("bb")).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
-    )
+    buckets = _minhash_bands(sig, "doc_id", NUM_HASHES, NUM_BANDS)
     is_bench = F.col("doc_id") % benchmark_mod == 0
     bench_b = buckets.filter(is_bench).select(
         "band", "bh", F.col("doc_id").alias("bench_doc")
@@ -289,33 +263,8 @@ def benchmark_contamination_fuzzy(
         .select("doc_id", "bench_doc")
         .distinct()
     )
-    tr = hashed.select("doc_id", F.col("hs").alias("sh_t"))
-    be = hashed.select(
-        F.col("doc_id").alias("bench_doc"), F.col("hs").alias("sh_b")
+    # the bench sets broadcast again on the verify join
+    scored = _verify_jaccard(
+        cand, hashed, "doc_id", "bench_doc", threshold, broadcast_right=True
     )
-    inter = F.size(F.array_intersect("sh_t", "sh_b"))
-    union = F.size("sh_t") + F.size("sh_b") - inter
-    scored = (
-        cand.join(tr, "doc_id")
-        .join(F.broadcast(be), "bench_doc")
-        .select("doc_id", "bench_doc", (inter / union).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-    # best benchmark match per contaminated doc: max jaccard, then the
-    # SMALLEST bench_doc (negating the id inside the ordering struct
-    # makes struct-max deliver exactly that tie-break)
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("jaccard"), (-F.col("bench_doc")).alias("nb")
-                )
-            ).alias("m")
-        )
-        .select(
-            "doc_id",
-            (-F.col("m.nb")).cast("long").alias("bench_doc"),
-            F.col("m.jaccard").alias("jaccard"),
-        )
-    )
+    return _best_match(scored, "doc_id", "bench_doc")

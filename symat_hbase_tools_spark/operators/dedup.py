@@ -1,35 +1,52 @@
 """Document deduplication operators (SURVEY.md §2.5 / north-star extension).
 
-Five dedup strategies over the ``documents`` table, each a first-class
-operator designed for 100 TB:
+Two exact fingerprints over the ``documents`` table, ``exact_dedup``
+(normalize + md5 + groupBy, keeper = min(doc_id)) and
+``bow_fingerprint_dedup`` (sorted distinct tokens -> md5, catches
+token-permuted copies), and the near-dup family.
 
-  * exact_dedup          — normalize + md5 + groupBy. One partial-aggregated
-                           shuffle on the 16-byte digest; canonical keeper =
-                           min(doc_id).
-  * bow_fingerprint_dedup— order-insensitive bag-of-words fingerprint
-                           (sorted distinct tokens -> md5). Catches
-                           token-permuted copies exact dedup misses.
-  * ngram_jaccard_pairs  — EXACT near-dup pairs by word-n-gram-shingle
-                           Jaccard. The shingle equi-join explodes on hot
-                           shingles at scale; ``max_shingle_df`` caps the
-                           document frequency of join keys (stop-shingle
-                           removal) — the standard trick to keep the
-                           candidate join linear-ish.
-  * minhash_lsh_pairs    — MinHash + banded LSH candidate generation, exact
-                           Jaccard verification of candidates only. The 100 TB
-                           path: signatures are narrow per-row expressions
-                           (no shuffle), candidates shuffle only on (band,
-                           band_hash), verification touches candidate pairs
-                           only. With b bands of r rows, P(candidate) =
-                           1-(1-j^r)^b — at j=0.99/b=16/r=4 a true pair is
-                           missed with p~1e-22, so against this corpus the
-                           output equals the exact operator's.
-  * simhash_pairs        — 64-bit SimHash + 4x16-bit band blocking; blocking
-                           is COMPLETE for hamming distance <= 3 by
-                           pigeonhole, so the operator is exactly "all pairs
-                           with hamming(simhash) <= max_hamming".
+The near-dup operators in this module, in ``contamination.py`` and
+``text_analysis.ngram_novelty`` run one pipeline, and each stage has one
+implementation:
 
-Everything is built-in expressions — xxhash64, array ops, joins. No UDFs.
+  1. Shingle rows. ``_shingles_of`` gives (doc_id, sh), the distinct word
+     n-gram shingles (``_doc_shingles`` for the documents table).
+     ``_hashed_sets`` gives the sets (doc_id, hs), one xxhash64 per shingle
+     (fixed-width long keys; a collision needs two distinct shingles of one
+     corpus to share an xxhash64, p < n^2 / 2^64), pinned under the
+     caller's site when its plan reads them more than once.
+     ``_shingle_rows`` gives (doc_id, n_sh, s), one row per shingle hash
+     with the set size riding along. The shingle lambda runs interpreted,
+     and three guards keep it from running twice per row:
+       * the rows come from ``explode_outer`` over the hs column: an inner
+         explode lets Catalyst infer size(hs) > 0 and push it into the
+         projection that runs the lambda. A document without shingles
+         keeps one null-s row, which no join matches; ``drop_empty``
+         removes it before a count, a collect or a written index;
+       * a filter on hs sits above the pin: the in-memory relation is a
+         pushdown barrier, while a filter below it re-inlines the lambda
+         (measured 0.3 -> 5.4 s at sf0.1);
+       * n_sh is nullable, and a grouping on it or a filter over it lets
+         Catalyst infer isnotnull(n_sh) into the lambda's projection:
+         aggregate it with max, or coalesce it to a non-nullable column.
+  2. Signature codec: the exact set itself, MinHash
+     (``_minhash_sig_from_hashed``, an Arrow/numpy kernel) or 64-bit SimHash
+     (bit votes of the shingle hashes).
+  3. Candidate generator: the self-join on s (``_intersection_pairs``,
+     exact, with the df-capped census when the cap can bind), MinHash LSH
+     bands (``_minhash_bands``: a pair at Jaccard j collides in some band
+     with p = 1-(1-j^r)^b), 4 x 16-bit hamming bands
+     (``banded_hamming_pairs``: exact for hamming <= 3 by pigeonhole), or
+     prefix filtering (``prefix_filter_pairs``, exact).
+  4. Verify: ``_jaccard`` is i / (n1 + n2 - i) over integer counts,
+     divided in double, so it is bit-identical to the DuckDB oracles.
+     ``_verify_jaccard`` computes it from the two hashed sets of each
+     candidate pair.
+  5. Pairs, or one best match per document (``_best_match``: max Jaccard,
+     ties to the smaller id).
+
+Everything is built-in expressions — xxhash64, array ops, joins — apart
+from the Arrow kernels of the MinHash and portable SimHash codecs.
 """
 
 from __future__ import annotations
@@ -46,6 +63,9 @@ from symat_hbase_tools_spark.functions.text import (
     simhash_from_votes,
     simhash_vote_aggs,
 )
+from symat_hbase_tools_spark.plans.partitioning import fanout
+from symat_hbase_tools_spark.plans.serve_cache import pin
+from symat_hbase_tools_spark.sources.io import local_frame, rows_exceed
 from symat_hbase_tools_spark.sources.tables import load_table, table_path
 
 _LOG = logging.getLogger(__name__)
@@ -83,9 +103,13 @@ def bow_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from symat_hbase_tools_spark.plans.partitioning import fanout
-from symat_hbase_tools_spark.plans.serve_cache import pin
-from symat_hbase_tools_spark.sources.io import local_frame, rows_exceed
+def _shingles_of(docs: DataFrame, n: int) -> DataFrame:
+    """(doc_id, sh) of a (doc_id, text) table, in two projections: the
+    words array is materialized, THEN shingled, which keeps the split out
+    of the interpreted shingle lambda (see shingles_from_words)."""
+    return docs.withColumn("words", F.split(F.col("text"), " ")).select(
+        "doc_id", shingles_from_words(F.col("words"), n=n).alias("sh")
+    )
 
 
 def _doc_shingles(
@@ -102,15 +126,77 @@ def _doc_shingles(
     # small corpus collapses to few fat tasks instead of 32 near-empty ones;
     # at real scale the source has more splits than cores and this is left
     # untouched (fan OUT only — never pay a full shuffle to coalesce).
-    docs = fanout(spark, load_table(spark, sf_dir, "documents"))
-    # two projections: materialize the words array, THEN shingle — keeps the
-    # split out of the interpreted shingle lambda (see shingles_from_words)
-    out = docs.withColumn("words", F.split(F.col("text"), " ")).select(
-        "doc_id", shingles_from_words(F.col("words"), n=n).alias("sh")
-    )
+    out = _shingles_of(fanout(spark, load_table(spark, sf_dir, "documents")), n)
     if persist:
         out = pin(out, "doc_shingles")
     return out
+
+
+def _hashed_sets(shingles: DataFrame, site: str | None = None) -> DataFrame:
+    """(doc_id, hs) from (doc_id, sh): stage 1 (module docstring), pinned
+    under ``site`` when given. A pinned set keeps ~8 bytes per shingle
+    instead of the shingle text."""
+    hs = shingles.select("doc_id", shingle_hashes(F.col("sh")).alias("hs"))
+    return hs if site is None else pin(hs, site)
+
+
+def _shingle_rows(shingles: DataFrame, drop_empty: bool = False) -> DataFrame:
+    """(doc_id, n_sh, s) from (doc_id, sh): stage 1 (module docstring). The
+    shingles are distinct strings, so n_sh = size(hs) is the set size (up
+    to an xxhash64 collision). ``drop_empty`` drops the null-s row of a
+    document without shingles."""
+    rows = _hashed_sets(shingles).select(
+        "doc_id",
+        F.size("hs").cast("bigint").alias("n_sh"),
+        F.explode_outer("hs").alias("s"),
+    )
+    return rows.filter(F.col("s").isNotNull()) if drop_empty else rows
+
+
+def _jaccard(i: str, n1: str, n2: str) -> F.Column:
+    """Set Jaccard from the intersection and the two set sizes: stage 4
+    (module docstring)."""
+    return F.col(i) / (F.col(n1) + F.col(n2) - F.col(i))
+
+
+def _verify_jaccard(
+    pairs: DataFrame,
+    sets: DataFrame,
+    left: str,
+    right: str,
+    threshold: float,
+    broadcast_right: bool = False,
+) -> DataFrame:
+    """``pairs`` plus the exact Jaccard of the two (doc_id, hs) ``sets``
+    its ``left`` and ``right`` id columns name, kept at >= threshold:
+    stage 4 for the candidate generators that carry no counts. The work is
+    per pair, proportional to the two sets, never a corpus-wide join."""
+    one = sets.select(F.col("doc_id").alias(left), F.col("hs").alias("_hs1"))
+    two = sets.select(F.col("doc_id").alias(right), F.col("hs").alias("_hs2"))
+    joined = pairs.join(one, left).join(
+        F.broadcast(two) if broadcast_right else two, right
+    )
+    return (
+        joined.select(
+            *pairs.columns,
+            F.size(F.array_intersect("_hs1", "_hs2")).alias("i"),
+            F.size("_hs1").alias("n1"),
+            F.size("_hs2").alias("n2"),
+        )
+        .select(*pairs.columns, _jaccard("i", "n1", "n2").alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _best_match(pairs: DataFrame, doc: str, match: str) -> DataFrame:
+    """(doc, match, jaccard): each ``doc``'s max-Jaccard ``match``, ties
+    to the smaller ``match`` id: stage 5 (module docstring). One
+    doc-keyed aggregate, which combines map-side; negating the id inside
+    the ordering struct makes struct-max deliver exactly that tie-break."""
+    best = F.max(F.struct("jaccard", (-F.col(match)).alias("neg"))).alias("m")
+    return pairs.groupBy(doc).agg(best).select(
+        doc, (-F.col("m.neg")).alias(match), F.col("m.jaccard").alias("jaccard")
+    )
 
 
 # Default document-frequency cap for the shingle self-join. The candidate
@@ -144,24 +230,6 @@ def ngram_jaccard_pairs(
     rows = _shingle_rows(_doc_shingles(spark, sf_dir, n))
     return _jaccard_pairs_from_shingles(
         rows, threshold, _binding_cap(spark, sf_dir, max_shingle_df)
-    )
-
-
-def _shingle_rows(shingles: DataFrame) -> DataFrame:
-    """(doc_id, n_sh, s) from ``_doc_shingles``' (doc_id, sh): one row per
-    shingle hash, with the document's set size riding along — the first
-    stage of the near-dup pair pipeline. The shingles are distinct strings,
-    so size(hs) is the set size (up to an xxhash64 collision).
-
-    ``explode_outer``, not ``explode``: an inner explode lets Catalyst infer
-    size(hs) > 0 and push it into the projection that runs the interpreted
-    shingle lambda, which then runs twice per row. A document without
-    shingles keeps one row with a null ``s``, which no join matches."""
-    hs = shingles.select("doc_id", shingle_hashes(F.col("sh")).alias("hs"))
-    return hs.select(
-        "doc_id",
-        F.size("hs").cast("bigint").alias("n_sh"),
-        F.explode_outer("hs").alias("s"),
     )
 
 
@@ -202,13 +270,7 @@ def _intersection_pairs(
     One self-join on s: both sides are the same plan, so they read one
     reused shuffle exchange, and the (d1, d2) aggregate counts the
     intersection i while n1/n2 are max(n_sh) of each side — the sizes ride
-    the rows instead of being joined back. (Grouping by n1/n2 instead would
-    let Catalyst infer isnotnull(size(hs)) into the shingle projection.)
-
-    join key = xxhash64(shingle): fixed-width long comparisons instead of
-    string equality through the whole self-join (the hot path at scale).
-    A key collision would need two distinct shingles in one corpus to share
-    an xxhash64 — p < n^2 / 2^64, irrelevant even at 10^8 distinct shingles.
+    the rows instead of being joined back.
 
     ``max_shingle_df`` is the cap when it can bind (``_binding_cap``), else
     None. With a cap, the census drops shingles above it from both the
@@ -259,11 +321,7 @@ def _jaccard_pairs_from_shingles(
     """Jaccard finisher over ``_intersection_pairs`` (see its docstring)."""
     return (
         _intersection_pairs(rows, max_shingle_df)
-        .select(
-            "d1",
-            "d2",
-            (F.col("i") / (F.col("n1") + F.col("n2") - F.col("i"))).alias("jaccard"),
-        )
+        .select("d1", "d2", _jaccard("i", "n1", "n2").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -295,8 +353,7 @@ def _minhash_signatures_arrow(docs: DataFrame, num_hashes: int) -> DataFrame:
     nothing either (partial agg), but pays 64 interpreted-expression
     evaluations per shingle row; the numpy kernel is one BLAS-shaped pass.
     """
-    hashed = docs.select("doc_id", shingle_hashes(F.col("sh")).alias("hs"))
-    return _minhash_sig_from_hashed(hashed, num_hashes)
+    return _minhash_sig_from_hashed(_hashed_sets(docs), num_hashes)
 
 
 def _minhash_sig_from_hashed(
@@ -381,6 +438,28 @@ def minhash_signatures(
 MAX_LSH_BUCKET = 4096
 
 
+def _minhash_bands(
+    sig: DataFrame, id_col: str, num_hashes: int, num_bands: int
+) -> DataFrame:
+    """(id_col, band, bh) LSH band keys of a table of MinHash ``sig``
+    arrays: stage 3 (module docstring). Band b of r = num_hashes //
+    num_bands signature rows is keyed by xxhash64(b, slice), so the
+    candidate join shuffles only on (band, bh)."""
+    r = num_hashes // num_bands
+    bands = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.xxhash64(F.lit(b), F.slice("sig", b * r + 1, r)).alias("bh"),
+            )
+            for b in range(num_bands)
+        ]
+    )
+    return sig.select(id_col, F.explode(bands).alias("bb")).select(
+        id_col, F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
+    )
+
+
 def _lsh_group_candidates(
     hashed: DataFrame,
     num_hashes: int,
@@ -402,7 +481,6 @@ def _lsh_group_candidates(
     projection collapse would re-inline the interpreted shingle-hash HOF
     into the sort argument and run the shingle pass twice during cache fill.
     """
-    rows_per_band = num_hashes // num_bands
     gid = F.xxhash64(F.array_sort("hs")).alias("gid")
     members = hashed.select(gid, "doc_id")  # (gid, doc_id) — 16 B/doc, narrow
     reps = members.groupBy("gid").agg(F.min("doc_id").alias("rep"))
@@ -412,20 +490,7 @@ def _lsh_group_candidates(
     sig = _minhash_sig_from_hashed(
         hashed.select("doc_id", gid, "hs"), num_hashes, passthrough=("gid",)
     )
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    F.lit(b), F.slice("sig", b * rows_per_band + 1, rows_per_band)
-                ).alias("bh"),
-            )
-            for b in range(num_bands)
-        ]
-    )
-    buckets = sig.select("gid", F.explode(bands).alias("bb")).select(
-        "gid", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
-    )
+    buckets = _minhash_bands(sig, "gid", num_hashes, num_bands)
     if max_bucket_size is not None:
         hot = (
             buckets.groupBy("band", "bh")
@@ -480,25 +545,12 @@ def minhash_lsh_pairs(
     a corpus with a 10^7-copy group owes C(10^7,2) rows by contract; the
     expansion here is a distributed self-join, not a per-task blowup.
     """
-    # persist the HASHED shingle table (long arrays, not strings): it feeds
-    # the signature kernel AND both verification sides — three plan
-    # references (see _doc_shingles docstring) — and caching post-hash
-    # keeps the cached unit ~8 bytes/shingle instead of the shingle text,
-    # so the fair-warm re-materialization (clearCache per bench repeat)
-    # costs one map-only scan+hash pass
-    # filter AFTER the persist boundary, on the computed hs column: a
-    # deterministic size-filter placed before (or after) the projection
-    # gets pushed below it by Catalyst, re-inlining the interpreted
-    # shingle expression into the Filter — the whole shingle pass then
-    # runs TWICE per row (measured 0.3 -> 5.4 s at sf0.1, round 9). The
-    # InMemoryRelation is a pushdown barrier, so the filter is one cheap
-    # size() over cached arrays.
-    hashed = pin(
-        _doc_shingles(spark, sf_dir, n).select(
-            "doc_id", shingle_hashes(F.col("sh")).alias("hs")
-        ),
-        "minhash_hashed",
-    ).filter(F.size("hs") > 0)
+    # the hashed sets feed the signature kernel AND both verify sides
+    # (three plan references), so they are pinned; the size filter sits
+    # above the pin (module docstring, stage 1)
+    hashed = _hashed_sets(_doc_shingles(spark, sf_dir, n), "minhash_hashed").filter(
+        F.size("hs") > 0
+    )
     members, reps, candidates = _lsh_group_candidates(
         hashed, num_hashes, num_bands, max_bucket_size
     )
@@ -506,15 +558,8 @@ def minhash_lsh_pairs(
     rep_pairs = candidates.join(
         reps.select(F.col("gid").alias("g1"), F.col("rep").alias("d1")), "g1"
     ).join(reps.select(F.col("gid").alias("g2"), F.col("rep").alias("d2")), "g2")
-    sh1 = hashed.select(F.col("doc_id").alias("d1"), F.col("hs").alias("sh1"))
-    sh2 = hashed.select(F.col("doc_id").alias("d2"), F.col("hs").alias("sh2"))
-    inter = F.size(F.array_intersect("sh1", "sh2"))
-    union = F.size("sh1") + F.size("sh2") - inter
-    verified = (
-        rep_pairs.join(sh1, "d1")
-        .join(sh2, "d2")
-        .select("g1", "g2", (inter / union).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    verified = _verify_jaccard(rep_pairs, hashed, "d1", "d2", threshold).select(
+        "g1", "g2", "jaccard"
     )
     # re-attach members: cross-group pairs inherit the verified jaccard ...
     m1 = members.select(F.col("gid").alias("g1"), F.col("doc_id").alias("x"))
@@ -555,9 +600,10 @@ def banded_hamming_pairs(
     """All id pairs with hamming(fp64) <= max_hamming over a
     (id, 64-bit fingerprint) table — EXACT under 4 x 16-bit band blocking
     (pigeonhole: <= 3 bit flips leave at least one of 4 bands untouched),
-    while the self-join only ever shuffles on 16-bit band keys. The shared
-    candidate generator behind simhash_pairs AND the perceptual media
-    near-dup (multimodal.near_dup_pairs). Output: (d1 < d2, hamming)."""
+    while the self-join only ever shuffles on 16-bit band keys. The one
+    hamming candidate generator (stage 3, module docstring): simhash_pairs,
+    simhash_portable_pairs and the perceptual media near-dup
+    (multimodal.near_dup_pairs) all call it. Output: (d1 < d2, hamming)."""
     bands = F.array(
         *[
             F.struct(
@@ -595,23 +641,13 @@ def banded_hamming_pairs(
 def simhash_pairs(
     spark: SparkSession, sf_dir: str, n: int = 3, max_hamming: int = 3
 ) -> DataFrame:
-    """All document pairs with hamming(simhash64) <= max_hamming.
-
-    4 x 16-bit band blocking is exhaustive for max_hamming <= 3 (pigeonhole:
-    with <= 3 bit flips at least one of 4 bands is untouched), so the result
-    is exact — not an approximation — while the join only shuffles on the
-    16-bit band keys.
-    """
-    # no size-filter: explode() drops empty-shingle docs anyway, and a
-    # deterministic filter would be pushed below the projection,
-    # re-inlining the interpreted shingle expression (2x the whole pass —
-    # see the minhash_lsh_pairs note)
-    docs = _doc_shingles(spark, sf_dir, n)
-    # bit votes via explode -> codegen'd hash aggregate (see minhash note)
+    """All document pairs with hamming(simhash64) <= max_hamming, exact
+    for max_hamming <= 3 (``banded_hamming_pairs``). The 64 bit votes are
+    a codegen'd hash aggregate over the shingle rows."""
     fps = (
-        docs.select("doc_id", F.explode(shingle_hashes(F.col("sh"))).alias("h"))
+        _shingle_rows(_doc_shingles(spark, sf_dir, n), drop_empty=True)
         .groupBy("doc_id")
-        .agg(*simhash_vote_aggs(F.col("h")))
+        .agg(*simhash_vote_aggs(F.col("s")))
         .select("doc_id", simhash_from_votes().alias("fp"))
     )
     return banded_hamming_pairs(fps, max_hamming=max_hamming)
@@ -1197,9 +1233,8 @@ def simhash_portable_pairs(
     vs md5's ~3x cost; THIS variant is the verification twin that makes the
     simhash family oracle-checkable end-to-end. Output: (d1, d2, hamming).
     """
-    # no size-filter: fp_kernel skips len(sh)==0 rows itself, and the
-    # pushed-down filter would double-evaluate the interpreted shingle
-    # expression (see the minhash_lsh_pairs note)
+    # no size filter (module docstring, stage 1): fp_kernel skips
+    # documents without shingles itself
     docs = _doc_shingles(spark, sf_dir, n)
 
     # Fingerprints via an Arrow kernel: the expression-tree formulation (64
@@ -1247,38 +1282,13 @@ def simhash_portable_pairs(
         ),
         "simhash_fps",
     )
-    mask = F.lit(0xFFFF).cast("long")
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.shiftright(F.col(c), s).bitwiseAND(mask).alias("bh"),
-            )
-            for i, (c, s) in enumerate(
-                [("fp_lo", 0), ("fp_lo", 16), ("fp_hi", 0), ("fp_hi", 16)]
-            )
-        ]
+    # the two unsigned 32-bit halves pack into one 64-bit fingerprint with
+    # the same four 16-bit band keys and the same popcount
+    packed = fps.select(
+        "doc_id", F.shiftleft("fp_hi", 32).bitwiseOR(F.col("fp_lo")).alias("fp")
     )
-    buckets = fps.select(
-        "doc_id", "fp_lo", "fp_hi", F.explode(bands).alias("bb")
-    ).select(
-        "doc_id", "fp_lo", "fp_hi",
-        F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"),
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    hamming = F.bit_count(
-        F.col("a.fp_lo").bitwiseXOR(F.col("b.fp_lo"))
-    ) + F.bit_count(F.col("a.fp_hi").bitwiseXOR(F.col("b.fp_hi")))
-    return (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("d1"),
-            F.col("b.doc_id").alias("d2"),
-            hamming.cast("bigint").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+    return banded_hamming_pairs(packed, max_hamming=max_hamming).select(
+        "d1", "d2", F.col("hamming").cast("bigint").alias("hamming")
     )
 
 
@@ -1309,38 +1319,27 @@ def incremental_dedup(
         .agg(F.min("c_doc").alias("exact_match"))
     )
 
-    sh = _doc_shingles(spark, sf_dir, n, persist=True).select(
-        "doc_id", F.explode(shingle_hashes(F.col("sh"))).alias("s")
+    # the set sizes ride the rows (max per pair, module docstring stage 1)
+    sh = _shingle_rows(_doc_shingles(spark, sf_dir, n, persist=True))
+    new_sh = sh.filter(is_new)
+    corpus_sh = sh.filter(~is_new).select(
+        F.col("doc_id").alias("c_doc"), F.col("n_sh").alias("n2"), "s"
     )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    new_sh = sh.filter(F.col("doc_id") % 10 == 0)
-    corpus_sh = sh.filter(F.col("doc_id") % 10 != 0).select(
-        F.col("doc_id").alias("c_doc"), "s"
-    )
-    inter = (
+    jac = (
         new_sh.join(corpus_sh.hint("shuffle_hash"), "s")
         .groupBy("doc_id", "c_doc")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    s1 = sizes.select(F.col("doc_id"), F.col("n_sh").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("c_doc"), F.col("n_sh").alias("n2"))
-    jac = (
-        inter.join(s1, "doc_id")
-        .join(s2, "c_doc")
-        .select(
-            "doc_id",
-            "c_doc",
-            (F.col("i") / (F.col("n1") + F.col("n2") - F.col("i"))).alias("jaccard"),
+        .agg(
+            F.count(F.lit(1)).alias("i"),
+            F.max("n_sh").alias("n1"),
+            F.max("n2").alias("n2"),
         )
+        .select("doc_id", "c_doc", _jaccard("i", "n1", "n2").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id").orderBy(F.desc("jaccard"), "c_doc")
-    near = (
-        jac.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("doc_id", F.col("c_doc").alias("near_match"), F.round("jaccard", 6).alias("best_jaccard"))
+    near = _best_match(jac, "doc_id", "c_doc").select(
+        "doc_id",
+        F.col("c_doc").alias("near_match"),
+        F.round("jaccard", 6).alias("best_jaccard"),
     )
     return (
         docs.filter(is_new)
@@ -1374,12 +1373,9 @@ def build_shingle_index(
     truly incremental: per-ingest cost is O(|batch| x avg posting length),
     with the 100 TB corpus touched only through its (much smaller) index.
     """
-    sh = _doc_shingles(spark, sf_dir, n).select(
-        "doc_id", F.explode(shingle_hashes(F.col("sh"))).alias("s")
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     (
-        sh.join(sizes, "doc_id")
+        _shingle_rows(_doc_shingles(spark, sf_dir, n), drop_empty=True)
+        .select("doc_id", "s", "n_sh")
         .write.mode("overwrite")
         .format("parquet")
         .bucketBy(n_buckets, "s")
@@ -1404,62 +1400,29 @@ def incremental_dedup_indexed(
     ``incremental_dedup``'s near-dup columns: (doc_id, near_match,
     best_jaccard) for batch docs with a corpus match >= threshold.
     """
-    from pyspark.sql import Window
-
-    words = new_docs.withColumn("words", F.split(F.col("text"), " "))
-    # pre-filter on the WORDS array, not the shingle array: a doc shorter
-    # than n words has no n-shingles, and size(split(...)) is a cheap
-    # codegen'd predicate Catalyst may push freely — filtering on
-    # size(sh) instead re-inlines the interpreted shingle HOF into the
-    # pushed Filter and runs the whole shingle pass twice per row (the
-    # round-9 minhash double-eval class; also NULL-text safe: the
-    # comparison is NULL -> row dropped)
-    batch_sh = words.filter(F.size("words") >= n).select(
-        "doc_id", shingles_from_words(F.col("words"), n=n).alias("sh")
-    )
-    # carry n1 through the explode so the batch side is referenced ONCE —
-    # the old separate batch_sizes projection re-ran the shingle pass
-    # (no persist here, unlike minhash) and cost an extra join shuffle
-    # coalesce makes n1 NON-NULLABLE (sh is never null past the words
-    # filter, so the -1 arm is unreachable): without it, the jaccard
-    # arithmetic filter downstream makes InferFiltersFromConstraints add
-    # isnotnull(n1), which pushes to the scan and re-inlines the shingle
-    # HOF into the Filter — the same double-eval class, arriving via
-    # constraint inference instead of a hand-written filter (caught by
-    # the assert_no_hof_in_filters gate)
-    batch_ex = batch_sh.select(
-        "doc_id",
-        F.coalesce(F.size("sh"), F.lit(-1)).alias("n1"),
-        F.explode(shingle_hashes(F.col("sh"))).alias("s"),
+    # the batch side is read once, so it is not pinned; a batch document
+    # without shingles keeps one null-s row, which no index row matches.
+    # n1 rides the rows, coalesced to a non-nullable key so the grouping
+    # on it infers no filter into the shingle projection (module
+    # docstring, stage 1); it is functionally dependent on doc_id, so it
+    # adds no groups
+    batch = _shingle_rows(_shingles_of(new_docs, n)).select(
+        "doc_id", F.coalesce("n_sh", F.lit(-1)).alias("n1"), "s"
     )
     idx = spark.table(index_table).select(
         F.col("doc_id").alias("c_doc"), "s", F.col("n_sh").alias("n2")
     )
-    # n1 is functionally dependent on doc_id — grouping on it adds no
-    # groups, and folding it into the aggregate key removes the
-    # batch_sizes re-join entirely
-    inter = (
-        batch_ex.join(idx, "s")
+    jac = (
+        batch.join(idx, "s")
         .groupBy("doc_id", "c_doc", "n1", "n2")
         .agg(F.count(F.lit(1)).alias("i"))
-    )
-    jac = (
-        inter.select(
-            "doc_id",
-            "c_doc",
-            (F.col("i") / (F.col("n1") + F.col("n2") - F.col("i"))).alias("jaccard"),
-        )
+        .select("doc_id", "c_doc", _jaccard("i", "n1", "n2").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("jaccard"), "c_doc")
-    return (
-        jac.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select(
-            "doc_id",
-            F.col("c_doc").alias("near_match"),
-            F.round("jaccard", 6).alias("best_jaccard"),
-        )
+    return _best_match(jac, "doc_id", "c_doc").select(
+        "doc_id",
+        F.col("c_doc").alias("near_match"),
+        F.round("jaccard", 6).alias("best_jaccard"),
     )
 
 
@@ -1537,9 +1500,7 @@ def _shingle_df_census(
             F.pmod(F.xxhash64("doc_id", F.lit(7)), F.lit(1_000_000))
             < F.lit(int(p * 1_000_000))
         )
-    sh = sample.withColumn("words", F.split(F.col("text"), " ")).select(
-        F.explode(shingle_hashes(shingles_from_words(F.col("words"), n=n))).alias("s")
-    )
+    sh = _shingle_rows(_shingles_of(sample, n), drop_empty=True)
     per_shingle = sh.groupBy("s").agg(F.count(F.lit(1)).alias("c")).persist()
     hot = (
         per_shingle.filter(F.col("c") >= max(2.0, cutoff * p * 0.5))
@@ -1682,13 +1643,8 @@ def prefix_filter_pairs(
         # this to keep the no-demotion canonical order covered): hash order,
         # built map-only per row — no exchange before the prefix join
         per_doc = pin(
-            _doc_shingles(spark, sf_dir, n)
-            .select(
-                "doc_id",
-                F.sort_array(F.array_distinct(shingle_hashes(F.col("sh")))).alias(
-                    "toks"
-                ),
-            )
+            _hashed_sets(_doc_shingles(spark, sf_dir, n))
+            .select("doc_id", F.sort_array(F.array_distinct("hs")).alias("toks"))
             .withColumn("n_sh", F.size("toks")),
             "prefix_per_doc",
         )
@@ -1696,9 +1652,7 @@ def prefix_filter_pairs(
         # demote boilerplate: order by (is_hot, s). The hot set is a capped
         # broadcast build side; the only full-data exchange is the
         # groupBy(doc_id) that reassembles the canonical arrays.
-        sh = _doc_shingles(spark, sf_dir, n).select(
-            "doc_id", F.explode(shingle_hashes(F.col("sh"))).alias("s")
-        )
+        sh = _shingle_rows(_doc_shingles(spark, sf_dir, n), drop_empty=True)
         hot_df = F.broadcast(
             local_frame(spark, [(s,) for s in hot], "s long").withColumn(
                 "hot", F.lit(1)
@@ -1767,22 +1721,12 @@ def prefix_filter_pairs(
         )
         .select("da", "db")
     )
-    left = per_doc.select(
-        F.col("doc_id").alias("da"), F.col("toks").alias("t1"), F.col("n_sh").alias("m1")
-    )
-    right = per_doc.select(
-        F.col("doc_id").alias("db"), F.col("toks").alias("t2"), F.col("n_sh").alias("m2")
-    )
-    verified = (
-        cands.join(left, "da")
-        .join(right, "db")
-        .withColumn("i", F.size(F.array_intersect("t1", "t2")))
-    )
-    return verified.select(
+    sets = per_doc.select("doc_id", F.col("toks").alias("hs"))
+    return _verify_jaccard(cands, sets, "da", "db", threshold).select(
         F.least("da", "db").alias("d1"),
         F.greatest("da", "db").alias("d2"),
-        (F.col("i") / (F.col("m1") + F.col("m2") - F.col("i"))).alias("jaccard"),
-    ).filter(F.col("jaccard") >= threshold)
+        "jaccard",
+    )
 
 
 def containment_pairs(

@@ -1376,13 +1376,9 @@ def ngram_novelty(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     Output: (doc_id, n_shingles, n_owned, novelty) for documents with
     >= 1 shingle.
     """
-    from symat_hbase_tools_spark.operators.dedup import _doc_shingles
+    from symat_hbase_tools_spark.operators.dedup import _doc_shingles, _shingle_rows
 
-    from symat_hbase_tools_spark.functions.text import shingle_hashes
-
-    sh = _doc_shingles(spark, sf_dir, n).select(
-        "doc_id", F.explode(shingle_hashes(F.col("sh"))).alias("s")
-    )
+    sh = _shingle_rows(_doc_shingles(spark, sf_dir, n), drop_empty=True)
     owner = sh.groupBy("s").agg(F.min("doc_id").alias("owner_doc"))
     per_doc = (
         sh.join(owner, "s")

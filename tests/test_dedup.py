@@ -317,9 +317,14 @@ def test_census_branch_equals_default_when_nothing_is_hot(
     nothing hot, and so returns exactly the default branch's output, schema
     included. The default branch (cap above the document count) runs no
     census. The census branch's self-join reads its pinned table, which is
-    already partitioned on the join key, with no exchange of its own."""
+    already partitioned on the join key, with no exchange of its own; the
+    default branch's two self-join sides read one exchange on the join key
+    (the pipeline's first stage runs once)."""
     cap = _max_shingle_df(spark)
     assert cap < documents.count()
+    # a shingle table pinned by an earlier test would stand in for the
+    # default branch's shingle stage, and AQE reuses no exchange above it
+    spark.catalog.clearCache()
     default = op(spark, SF_DIR, threshold=threshold)
     census = op(spark, SF_DIR, threshold=threshold, max_shingle_df=cap)
 
@@ -333,6 +338,10 @@ def test_census_branch_equals_default_when_nothing_is_hot(
     # both census self-join sides read the one exchange on s that built
     # the pinned shingle table: outside the pin nothing shuffles on s
     assert _exchanges_on_s(census) == []
+    # the default branch's sides share one exchange on s: the walk lists
+    # it once for the side that runs it and once under the other side's
+    # ReusedExchange
+    assert _exchanges_on_s(default) == ["Exchange", "Exchange", "ReusedExchange"]
     if op is dedup.containment_pairs:
         types = dict(census.dtypes)
         assert [types[c] for c in ("n1", "n2", "n_small")] == ["bigint"] * 3
@@ -1275,3 +1284,89 @@ def test_span_index_append_equals_full_rebuild(spark, tmp_path):
     import os
 
     assert sorted(os.listdir(idx_inc)) == ["meta", "span_hashes"]
+
+
+
+def _calls_by_function(module):
+    """(top-level function name, call node) for every call inside
+    ``module``'s functions, nested calls included."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(module))
+    for top in tree.body:
+        if isinstance(top, ast.FunctionDef):
+            for node in ast.walk(top):
+                if isinstance(node, ast.Call):
+                    yield top.name, node
+
+
+def _called(node) -> str | None:
+    import ast
+
+    if not isinstance(node, ast.Call):
+        return None
+    return getattr(node.func, "attr", getattr(node.func, "id", None))
+
+
+def _contains(node, match) -> bool:
+    import ast
+
+    return any(match(n) for n in ast.walk(node))
+
+
+def test_near_dup_pipeline_stages_are_not_copied():
+    """The near-dup operators share one hashed-set helper, one MinHash band
+    builder, one hamming band builder, one array-set Jaccard verify and
+    one best-match step (dedup module docstring). A stage written out again
+    in dedup.py, contamination.py or text_analysis.py means a copy came
+    back. ``minhash_signatures`` keeps its own explode of the shingle
+    hashes: it is the JVM reference path the Arrow kernel is tested
+    against."""
+    import ast
+
+    from symat_hbase_tools_spark.operators import contamination, text_analysis
+
+    def constant(value):
+        return lambda n: isinstance(n, ast.Constant) and n.value == value
+
+    def calls(name):
+        return lambda n: _called(n) == name
+
+    sites: dict[str, list[str]] = {
+        "shingle hashes": [],
+        "explode of shingle hashes": [],
+        "minhash band keys": [],
+        "hamming band keys": [],
+        "array-set jaccard": [],
+        "best match": [],
+    }
+    for module in (dedup, contamination, text_analysis):
+        for fn, call in _calls_by_function(module):
+            name = _called(call)
+            arg = call.args[0] if call.args else ast.Constant(None)
+            if name == "shingle_hashes":
+                sites["shingle hashes"].append(fn)
+            if name in ("explode", "explode_outer") and _contains(
+                arg, calls("shingle_hashes")
+            ):
+                sites["explode of shingle hashes"].append(fn)
+            if name == "slice" and _contains(arg, constant("sig")):
+                sites["minhash band keys"].append(fn)
+            if name == "lit" and _contains(arg, constant(0xFFFF)):
+                sites["hamming band keys"].append(fn)
+            if name == "array_intersect":
+                sites["array-set jaccard"].append(fn)
+            jaccard_key = _contains(arg, constant("jaccard"))
+            if jaccard_key and (
+                name == "desc" or (name == "max" and _called(arg) == "struct")
+            ):
+                sites["best match"].append(fn)
+    assert sites == {
+        "shingle hashes": ["_hashed_sets", "minhash_signatures"],
+        "explode of shingle hashes": ["minhash_signatures"],
+        "minhash band keys": ["_minhash_bands"],
+        "hamming band keys": ["banded_hamming_pairs"],
+        "array-set jaccard": ["_verify_jaccard"],
+        "best match": ["_best_match"],
+    }

@@ -460,7 +460,12 @@ def test_no_interpreted_hof_reinlined_into_filters(spark):
     (the shingle/token lambda expressions) that re-runs the whole per-row
     pass twice (minhash cold 19.3 -> 4.3 s once fixed). Every HOF-bearing
     document/dedup/contamination plan must keep lambdas OUT of Filter
-    nodes (and out of scan DataFilters)."""
+    nodes (and out of scan DataFilters).
+
+    Each plan is built fresh (``__wrapped__``, not the prepared-plan cache)
+    after ``clearCache``: a plan built earlier in the session, or a
+    persisted subplan an earlier test left behind, can hide a re-inlined
+    lambda behind an in-memory relation."""
     from symat_hbase_tools_spark.entry import QUERIES
     from symat_hbase_tools_spark.plans.explain import assert_no_hof_in_filters
 
@@ -508,7 +513,8 @@ def test_no_interpreted_hof_reinlined_into_filters(spark):
         "doc_dup_span_partners",
     ]
     for name in hof_queries:
-        assert_no_hof_in_filters(QUERIES[name](spark, SF_DIR))
+        spark.catalog.clearCache()
+        assert_no_hof_in_filters(QUERIES[name].__wrapped__(spark, SF_DIR))
 
 
 def test_range_bucket_join_no_cartesian_pushed_filter(spark):
