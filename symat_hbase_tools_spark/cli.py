@@ -902,28 +902,35 @@ def main(argv: list[str] | None = None) -> int:
             return 0
         if args.tool == "split-points":
             from symat_hbase_tools_spark.operators.kv import split_points
+            from symat_hbase_tools_spark.plans.serve_cache import released_after
 
             if args.targetBytes < 1:
                 print("error: --targetBytes must be >= 1", file=sys.stderr)
                 return 1
             cells = read_cells(spark, resolve_table(args.table))
-            report = split_points(cells, target_bytes=args.targetBytes).cache()
+            # one row per region: collected once, then counted, listed and
+            # written from the driver's copy; the prefix sum's pin is
+            # released after the collect
+            with released_after():
+                report = split_points(cells, target_bytes=args.targetBytes)
+                table = report.toArrow()
             # order by region_seq (the byte-tape order = HBase key order);
             # sorting the RENDERED strings would misplace escaped keys
             # (backslash 0x5C sorts before ']'..'~')
             splits = [
-                r["split_key"]
-                for r in sorted(
-                    report.filter("region_seq >= 1").collect(),
-                    key=lambda r: r["region_seq"],
+                k
+                for seq, k in sorted(
+                    zip(table["region_seq"].to_pylist(), table["split_key"].to_pylist())
                 )
+                if seq >= 1
             ]
-            n_regions = report.count()
-            print(f"REGIONS={n_regions} SPLITS={len(splits)} TARGET_BYTES={args.targetBytes}")
+            print(f"REGIONS={table.num_rows} SPLITS={len(splits)} TARGET_BYTES={args.targetBytes}")
             for k in splits:
                 print(f"SPLIT\t{k}")
             if args.output:
-                report.write.mode("overwrite").parquet(args.output)
+                spark.createDataFrame(table, report.schema).write.mode("overwrite").parquet(
+                    args.output
+                )
                 print(f"wrote {args.output}")
             return 0
         if args.tool == "query":

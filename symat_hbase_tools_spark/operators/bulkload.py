@@ -69,8 +69,10 @@ def bulk_load_cells(cells: DataFrame, path: str, num_regions: int = 16) -> None:
     the region manifest (module docstring).
 
     Each file carries a row-key bloom filter (the HFile bloom analog, see
-    sources/bloom.py): a Get reads only its region's file, and the bloom
-    adds ROW-GROUP pruning inside it."""
+    sources/bloom.py): a Get reads only its region's file. On the Spark
+    scan route the bloom adds ROW-GROUP pruning inside it; the driver route
+    (``io.region_get``) prunes row groups by ``row`` statistics only, as
+    pyarrow cannot read parquet bloom filters."""
     spark = cells.sparkSession
     # monotonically_increasing_id is (partition id << 33) + the row's index
     # in its partition; nondeterministic, so it cannot be evaluated inside

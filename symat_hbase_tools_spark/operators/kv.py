@@ -14,8 +14,14 @@ lookup): a Get opens one file however many regions there are, an empty
 range none. The row filter on top is the same; any other DataFrame keeps
 the plain filtered scan.
 
-Scale notes: point_get is a pushed-down binary-equality filter (parquet
-row-group stats prune; on the HBase connector it becomes a real GET).
+Scale notes: on such a table of the local file system point_get runs no
+file scan, like the reference's one-RPC Get: the driver reads the home
+region's row groups whose ``row`` statistics can hold the key
+(``io.region_get``) and hands the row to Spark as a ``LocalTableScan``.
+Above Spark's local-relation bound, on another file system, or on any
+other DataFrame it is a pushed-down binary-equality filter (parquet
+row-group stats and the row bloom prune; on the HBase connector it becomes
+a real GET).
 keyonly_scan prunes to the `row` column before the distinct — Catalyst's
 column pruning is the KeyOnlyFilter equivalent, and the single hash-distinct
 benefits from partial aggregation. latest_cells uses max_by aggregation
@@ -29,11 +35,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from symat_hbase_tools_spark.functions.bytes_binary import to_string_binary_expr
-from symat_hbase_tools_spark.sources.io import covering_cells
+from symat_hbase_tools_spark.sources.io import covering_cells, region_get
 
 
 def point_get(cells: DataFrame, row_key: bytes) -> DataFrame:
-    """Fetch all cells of one row by exact key (S1)."""
+    """Fetch all cells of one row by exact key (S1): every stored version
+    and Delete marker.
+
+    On a held manifest scan of a local table the row is read on the driver
+    (``io.region_get``) when ``point_get`` is called, not when the returned
+    DataFrame's action runs: collect it before the table changes. Otherwise
+    the Get is a Spark scan of the covering region files, read at the
+    action."""
+    got = region_get(cells, row_key)
+    if got is not None:
+        return got
     return covering_cells(cells, row_key, row_key, hi_inclusive=True).filter(
         F.col("row") == F.lit(row_key)
     )

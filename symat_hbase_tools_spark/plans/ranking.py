@@ -140,13 +140,14 @@ def ordered_prefix_sum(
     triangular per-partition offsets), summing a value instead of
     counting rows. ``inclusive=False`` gives the exclusive form (the tape
     START position — what packing/split-point binning wants). Fully lazy:
-    no jobs at plan-build time; the ranged table persists because three
-    stages of the same action reference it.
+    no jobs at plan-build time; the ranged table is pinned
+    (``serve_cache.pin``) because three stages of the same action
+    reference it.
 
     The order must be total (include a unique tie-break column); the
     value should be an exact integer type for cross-engine determinism.
     """
-    from pyspark import StorageLevel
+    from symat_hbase_tools_spark.plans.serve_cache import pin
 
     ranged = df.repartitionByRange(*order_cols).withColumn(
         "_pid", F.spark_partition_id()
@@ -156,9 +157,7 @@ def ordered_prefix_sum(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    local = ranged.withColumn("_cum", F.sum(value_col).over(w)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    local = pin(ranged.withColumn("_cum", F.sum(value_col).over(w)), "ordered_prefix_sum")
     totals = local.groupBy("_pid").agg(F.sum(value_col).alias("_t"))
     prior = totals.select(F.col("_pid").alias("_ppid"), F.col("_t").alias("_pt"))
     off = (

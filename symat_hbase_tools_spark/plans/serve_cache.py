@@ -24,6 +24,8 @@ unpersists it.
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
@@ -44,6 +46,15 @@ def pin(df: DataFrame, site: str) -> DataFrame:
     Refcount rule: sites that pin the same plan share one CacheManager
     entry, so releasing one site's pin leaves the entry cached while any
     other site holds a pin with the same ``semanticHash``."""
+    _release(site)
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _PINS[site] = (df, df.semanticHash())
+    return df
+
+
+def _release(site: str) -> None:
+    """Drop ``site``'s pin, unpersisting it unless another site holds the
+    same plan."""
     prev = _PINS.pop(site, None)
     # skip the unpersist while another site still holds the same plan
     if prev is not None and all(h != prev[1] for _, h in _PINS.values()):
@@ -54,9 +65,19 @@ def pin(df: DataFrame, site: str) -> DataFrame:
             # died with the context; a throw here would wedge the next pin
             # in the NEW session until process restart
             pass
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PINS[site] = (df, df.semanticHash())
-    return df
+
+
+@contextlib.contextmanager
+def released_after():
+    """Release, on exit, every pin made inside the block: for a one-shot
+    command whose action runs inside it, so it leaves no cache behind."""
+    before = dict(_PINS)
+    try:
+        yield
+    finally:
+        for site, entry in list(_PINS.items()):
+            if before.get(site) is not entry:
+                _release(site)
 
 
 def outstanding() -> dict[str, int]:

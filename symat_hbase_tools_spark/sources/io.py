@@ -22,7 +22,13 @@ data files, and holds it with the table's scan under a key of two Hadoop FS
 status calls (directory mtime; manifest mtime and length). While the key
 matches, ``read_cells`` returns the held scan without a footer read, and
 ``covering_cells`` narrows it to the region files a key range touches (the
-reads of ``kv.point_get``, ``kv.range_scan`` and ``copy_row``). Another
+reads of ``kv.range_scan`` and ``copy_row``). A Get (``kv.point_get``) on a
+held table of the local file system runs no file scan: ``region_get``
+reads, on the driver with pyarrow, the row groups of the home region's file
+whose ``row`` statistics can hold the key, and returns the row as a
+``LocalTableScan``. Only a Get whose row groups exceed Spark's local-relation
+bound, or a table on another file system, is a Spark scan of the home
+region's file. Another
 writer's file, an overwrite, a deleted manifest, or a crash between a
 region swap and its manifest write each change the key, and a manifest that
 is missing or no longer names the data files leaves the whole-table read.
@@ -211,8 +217,8 @@ class Region:
     cells: int
 
 
-#: (table key, regions, scan) of recently read manifest tables, by table
-#: path; bounded, the least recently read dropped first
+#: (table key, regions, scan, local directory) of recently read manifest
+#: tables, by table path; bounded, the least recently read dropped first
 _HELD: OrderedDict[str, tuple] = OrderedDict()
 _MAX_HELD = 8
 
@@ -221,6 +227,15 @@ def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem of ``path``, Hadoop ``Path`` constructor)."""
     Path = _jvm_classes(spark._jvm)[0]
     return Path(path).getFileSystem(spark._jsc.hadoopConfiguration()), Path
+
+
+def _local_dir(spark: SparkSession, path: str) -> str | None:
+    """The operating-system path of ``path`` when its Hadoop FS is the
+    local one (scheme ``file``); ``None`` for any other scheme."""
+    fs, Path = _hadoop_fs(spark, path)
+    if fs.getScheme() != "file":
+        return None
+    return fs.makeQualified(Path(path)).toUri().getPath()
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
@@ -319,15 +334,15 @@ def read_cells(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFram
     ORC keeps Spark's schema inference."""
     if fmt == "parquet":
         key = _table_key(spark, path)
-        held_key, regions, scan = _HELD.pop(path, (None, None, None))
+        held_key, regions, scan, local_dir = _HELD.pop(path, (None,) * 4)
         if key is not None and key == held_key and scan.sparkSession is spark:
-            _HELD[path] = (key, regions, scan)  # now the most recently read
+            _HELD[path] = (key, regions, scan, local_dir)  # now the most recently read
             return scan
         _check_cells_footer(spark, path)
         scan = spark.read.schema(CELLS_SCHEMA).parquet(path)
         regions = _manifest(spark, path) if key is not None else None
         if regions:
-            _HELD[path] = (key, regions, scan)
+            _HELD[path] = (key, regions, scan, _local_dir(spark, path))
             while len(_HELD) > _MAX_HELD:
                 _HELD.popitem(last=False)
         return scan
@@ -343,13 +358,20 @@ def read_cells(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFram
     raise ValueError(f"unsupported format: {fmt}")
 
 
+def _held(cells: DataFrame) -> tuple | None:
+    """(table path, regions, local directory) when ``cells`` is the scan
+    ``read_cells`` returned for a table whose manifest holds."""
+    for path, (_, regions, scan, local_dir) in _HELD.items():
+        if scan is cells:
+            return path, regions, local_dir
+    return None
+
+
 def held_regions(cells: DataFrame) -> tuple[str, tuple[Region, ...]] | None:
     """(table path, regions) when ``cells`` is the scan ``read_cells``
     returned for a table whose manifest holds; else ``None``."""
-    for path, (_, regions, scan) in _HELD.items():
-        if scan is cells:
-            return path, regions
-    return None
+    found = _held(cells)
+    return None if found is None else found[:2]
 
 
 def covering_cells(
@@ -375,8 +397,62 @@ def covering_cells(
         and (lo is None or nxt is None or nxt.start > lo)
     ]
     if not files:
-        return spark.createDataFrame([], CELLS_SCHEMA)
+        return local_frame(spark, [], CELLS_SCHEMA)
     return spark.read.schema(CELLS_SCHEMA).parquet(*files)
+
+
+def read_row_groups(file: str, row_key: bytes, max_bytes: int):
+    """The row groups of the local parquet ``file`` whose ``row`` min/max
+    statistics can hold ``row_key``, read with pyarrow as one Arrow table
+    in ``CELLS_SCHEMA`` column order; ``None``, reading no data, when their
+    uncompressed size exceeds ``max_bytes``. A row group without min/max
+    statistics is read."""
+    import pyarrow.parquet as pq
+
+    with pq.ParquetFile(file) as pf:
+        meta = pf.metadata
+        col = meta.schema.names.index("row")
+        groups, size = [], 0
+        for i in range(meta.num_row_groups):
+            group = meta.row_group(i)
+            stats = group.column(col).statistics
+            if stats is None or not stats.has_min_max or stats.min <= row_key <= stats.max:
+                groups.append(i)
+                size += group.total_byte_size
+        if size > max_bytes:
+            return None
+        return pf.read_row_groups(groups, columns=CELLS_SCHEMA.fieldNames())
+
+
+def region_get(cells: DataFrame, row_key: bytes) -> DataFrame | None:
+    """The cells of row ``row_key`` read on the driver, as a
+    ``LocalTableScan``, when ``cells`` is a held manifest scan on the local
+    file system: only the home region's file is opened, and only its row
+    groups that can hold the key (``read_row_groups``) are read. ``None``
+    when ``cells`` is not such a scan, or when those row groups exceed
+    ``spark.sql.execution.arrow.localRelationThreshold`` (Spark's own bound
+    for an Arrow table turned into a local relation): the caller then scans
+    with Spark. A key before the first region opens no file."""
+    found = _held(cells)
+    if found is None or found[2] is None:
+        return None
+    _, regions, local_dir = found
+    spark = cells.sparkSession
+    home = sum(r.start <= row_key for r in regions) - 1
+    if home < 0:
+        return local_frame(spark, [], CELLS_SCHEMA)
+    table = read_row_groups(
+        f"{local_dir}/{regions[home].file}",
+        row_key,
+        spark._jconf.arrowLocalRelationThreshold(),
+    )
+    if table is None:
+        return None
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rows = table.filter(pc.equal(table["row"], pa.scalar(row_key, pa.binary())))
+    return spark.createDataFrame(rows, cells.schema)
 
 
 # -- documents-table JSONL interchange ---------------------------------------

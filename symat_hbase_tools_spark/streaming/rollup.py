@@ -45,6 +45,7 @@ from symat_hbase_tools_spark.operators.timeseries import (
     merge_hourly_states,
     render_hourly_state,
 )
+from symat_hbase_tools_spark.sources.io import local_frame
 
 STATE_SCHEMA = "hour_epoch bigint, event_type string, n bigint, hi bigint, lo bigint"
 
@@ -94,7 +95,7 @@ def read_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """Latest complete state generation (empty state if none)."""
     gens = _gen_dirs(spark, state_dir)
     if not gens:
-        return spark.createDataFrame([], STATE_SCHEMA)
+        return local_frame(spark, [], STATE_SCHEMA)
     return spark.read.schema(STATE_SCHEMA).parquet(gens[-1][1])
 
 
@@ -106,7 +107,7 @@ def merge_batch(
     cur = (
         spark.read.schema(STATE_SCHEMA).parquet(prev[-1])
         if prev
-        else spark.createDataFrame([], STATE_SCHEMA)
+        else local_frame(spark, [], STATE_SCHEMA)
     )
     merged = merge_hourly_states(cur, hourly_partial_state(batch))
     out = state_dir.rstrip("/") + f"/gen={batch_id}"

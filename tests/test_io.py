@@ -250,3 +250,40 @@ def test_cli_rejects_non_cells_table(spark, wrong_tables, tmp_path, capsys, colu
         s for s in os.listdir(parent)
         if s.startswith((f"{name}.inflight-", f"{name}.replaced-"))
     ] == []
+
+
+def test_cli_split_points_collects_once_and_caches_nothing(spark, customer, tmp_path, capsys):
+    """split-points collects its report once and leaves no persisted RDD
+    behind (it cached the report and never unpersisted it); its stdout
+    lines are the ones it printed before, and --output holds the report."""
+    from symat_hbase_tools_spark.cli import main
+    from symat_hbase_tools_spark.operators import kv
+    from symat_hbase_tools_spark.operators.bulkload import bulk_load_cells
+    from symat_hbase_tools_spark.plans.serve_cache import released_after
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    table, out = str(tmp_path / "cells"), str(tmp_path / "splits")
+    bulk_load_cells(customer_cells(customer), table, 4)
+    before = persisted()
+    capsys.readouterr()
+    rc = main(["split-points", "--table", table, "--targetBytes", "5000", "--output", out])
+    assert rc == 0
+    assert persisted() <= before
+    assert capsys.readouterr().out.splitlines() == [
+        "REGIONS=5 SPLITS=4 TARGET_BYTES=5000",
+        "SPLIT\tcust#00000031",
+        "SPLIT\tcust#00000061",
+        "SPLIT\tcust#00000091",
+        "SPLIT\tcust#00000121",
+        f"wrote {out}",
+    ]
+    with released_after():
+        report = kv.split_points(cio.read_cells(spark, table), target_bytes=5000)
+        want = sorted(map(tuple, report.collect()))
+    written = spark.read.parquet(out)
+    assert [(f.name, f.dataType) for f in written.schema] == [
+        (f.name, f.dataType) for f in report.schema
+    ]
+    assert sorted(map(tuple, written.collect())) == want

@@ -6,10 +6,15 @@ while the table is unchanged, ``kv.point_get`` / ``kv.range_scan`` read
 only the covering region files, and an in-place ``cli copy-row`` rewrites
 only the key's home region. Any change the manifest does not describe
 falls back to the whole-table scan with the same results.
+
+A Get has two routes (``_on_route``): the driver reads the home region's
+row groups with pyarrow, or, above Spark's local-relation bound, a file
+scan of the home region runs. The Get tests run on both.
 """
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
@@ -64,6 +69,52 @@ def _scan(df) -> dict:
     return out
 
 
+#: "driver": the default; "spark": the file-scan route, forced by a zero
+#: local-relation bound
+ROUTES = ("driver", "spark")
+
+
+@contextlib.contextmanager
+def _on_route(spark, route):
+    """Run the block's Gets on ``route`` and yield the driver's region
+    reads: (file name, rows read, ``None`` when over the bound) per
+    ``read_row_groups`` call."""
+    reads = []
+    real = cio.read_row_groups
+
+    def spy(file, row_key, max_bytes):
+        table = real(file, row_key, max_bytes)
+        reads.append((os.path.basename(file), None if table is None else table.num_rows))
+        return table
+
+    bound = "spark.sql.execution.arrow.localRelationThreshold"
+    cio.read_row_groups = spy
+    if route == "spark":
+        spark.conf.set(bound, "0")
+    try:
+        yield reads
+    finally:
+        cio.read_row_groups = real
+        spark.conf.unset(bound)
+
+
+def _home(regions, key):
+    """The manifest entry of the region that holds ``key``."""
+    return [r for r in regions if bytes.fromhex(r["start"]) <= key][-1]
+
+
+def _assert_read_home(got, reads, route, home):
+    """The Get read one file, ``home``'s, and all of its cells: as the file
+    scan's metrics (Spark route), or as the rows the driver read from it."""
+    if route == "spark":
+        assert reads == [(home["file"], None)], reads
+        assert got["numFiles"] == 1
+        assert got["numOutputRows"] == home["cells"]
+    else:
+        assert reads == [(home["file"], home["cells"])], reads
+        assert got["numFiles"] == 0
+
+
 def _manifest(path):
     with open(os.path.join(path, cio.MANIFEST)) as f:
         return json.load(f)
@@ -116,10 +167,12 @@ def test_manifest_start_keys_are_file_minimums_for_binary_keys(spark, tmp_path):
         assert bytes.fromhex(r["start"]) == lo and r["cells"] == n
     table = cio.read_cells(spark, path)
     assert cio.held_regions(table) is not None
-    for k in (b"\x00", b"\xff", b"\x7f\xff", b"\x80\x00", b"\xff\xff\xff"):
-        got = _scan(kv.point_get(table, k))
-        assert got["rows"] == _rows(cells.filter(F.col("row") == k)), k
-        assert got["numFiles"] == 1
+    for route in ROUTES:
+        for k in (b"\x00", b"\xff", b"\x7f\xff", b"\x80\x00", b"\xff\xff\xff"):
+            with _on_route(spark, route) as reads:
+                got = _scan(kv.point_get(table, k))
+            assert got["rows"] == _rows(cells.filter(F.col("row") == k)), (route, k)
+            _assert_read_home(got, reads, route, _home(regions, k))
 
 
 def test_bulk_load_checks_the_cells_schema(spark, tmp_path):
@@ -133,31 +186,75 @@ def test_bulk_load_checks_the_cells_schema(spark, tmp_path):
 
 def test_get_cost_does_not_grow_with_regions(spark, customer, tmp_path):
     """A Get reads 1 file at 16 and at 64 regions, and scans only its
-    region's cells (the manifest's count for the home region)."""
+    region's cells (the manifest's count for the home region), on both
+    routes."""
     cells = customer_cells(customer)
     key = b"cust#00000077"
     for n in (16, 64):
         path = str(tmp_path / f"r{n}")
         bulk_load_cells(cells, path, n)
-        regions = _manifest(path)
-        home = [r for r in regions if bytes.fromhex(r["start"]) <= key][-1]
-        got = _scan(kv.point_get(cio.read_cells(spark, path), key))
-        assert got["rows"] == _rows(cells.filter(F.col("row") == key))
-        assert got["numFiles"] == 1, n
-        assert got["numOutputRows"] == home["cells"], n
+        home = _home(_manifest(path), key)
+        for route in ROUTES:
+            with _on_route(spark, route) as reads:
+                got = _scan(kv.point_get(cio.read_cells(spark, path), key))
+            assert got["rows"] == _rows(cells.filter(F.col("row") == key)), (route, n)
+            _assert_read_home(got, reads, route, home)
 
 
 def test_held_table_opens_without_jobs(spark, table):
     """read_cells on a manifest table runs 0 Spark jobs, first and again
-    (the held scan is reused), and the Get runs 1 over 1 file."""
+    (the held scan is reused), and the Get runs 1 over 1 file on both
+    routes."""
     first, jobs = jobs_run(spark, lambda: cio.read_cells(spark, table))
     assert jobs == 0
     again, jobs = jobs_run(spark, lambda: cio.read_cells(spark, table))
     assert jobs == 0 and again is first
-    get = kv.point_get(again, b"cust#00000007")
-    arrow, jobs = jobs_run(spark, get.toArrow)
-    assert jobs == 1 and arrow.num_rows == 4
-    assert _scan(kv.point_get(again, b"cust#00000007"))["numFiles"] == 1
+    key = b"cust#00000007"
+    home = _home(_manifest(table), key)
+    for route in ROUTES:
+        with _on_route(spark, route) as reads:
+            arrow, jobs = jobs_run(spark, lambda: kv.point_get(again, key).toArrow())
+        assert jobs == 1 and arrow.num_rows == 4, route
+        with _on_route(spark, route) as reads:
+            got = _scan(kv.point_get(again, key))
+        _assert_read_home(got, reads, route, home)
+
+
+def test_get_routes_return_equal_cells(spark, tmp_path):
+    """The driver route returns what the file scan returns: every stored
+    version, Delete markers and null values of a present key, nothing for
+    an absent key inside a region's range, and nothing, with no file
+    opened, for a key before the first region."""
+    keys = [b"k%02d" % i for i in range(0, 40, 2)]
+    cells = spark.createDataFrame(
+        [(k, "cf", b"a", 1, "Put", k) for k in keys]
+        + [
+            (b"k10", "cf", b"a", 2, "Put", b"v2"),
+            (b"k10", "cf", b"a", 3, "Delete", None),
+            (b"k10", "cf", b"b", 1, "Put", None),
+        ],
+        CELLS_SCHEMA,
+    )
+    path = str(tmp_path / "versions")
+    bulk_load_cells(cells, path, 4)
+    regions = _manifest(path)
+    assert len(regions) == 4
+    table = cio.read_cells(spark, path)
+    cases = {b"k10": 4, b"k11": 0, b"a": 0}
+    assert bytes.fromhex(regions[0]["start"]) <= b"k11" < bytes.fromhex(regions[-1]["start"])
+    for key, n in cases.items():
+        got = {}
+        for route in ROUTES:
+            with _on_route(spark, route) as reads:
+                df = kv.point_get(table, key)
+                got[route] = (df.schema, _rows(df))
+            if key == b"a":
+                assert reads == [], (route, reads)
+        assert got["driver"] == got["spark"], key
+        assert got["driver"][1] == _rows(cells.filter(F.col("row") == key)), key
+        assert len(got["driver"][1]) == n, key
+    plan = kv.point_get(table, b"a")._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
 
 
 def test_held_tables_stay_bounded(spark, table, tmp_path):
@@ -175,16 +272,30 @@ def test_held_tables_stay_bounded(spark, table, tmp_path):
 # -- in-place copy-row: one region rewritten -----------------------------------
 
 
-def test_copy_row_in_place_rewrites_one_region(spark, customer, table):
+def test_copy_row_in_place_rewrites_one_region(spark, table, tmp_path):
+    """On each route, in place on its own copy of the table."""
+    copies = [table]
+    for route in ROUTES[1:]:
+        copies.append(str(tmp_path / f"cells-{route}"))
+        shutil.copytree(table, copies[-1])
+    for route, path in zip(ROUTES, copies):
+        _copy_row_in_place_rewrites_one_region(spark, path, route)
+
+
+def _copy_row_in_place_rewrites_one_region(spark, table, route):
     before = _manifest(table)
     key, bumped = b"cust#00000042", 1786000000000
     home = max(i for i, r in enumerate(before) if bytes.fromhex(r["start"]) <= key)
-    rc = cli.main([
-        "copy-row", "--sourceTable", table, "--destTable", table,
-        "--rowKeyByteString", key.decode(), "--override", "true",
-        "--timestampToUse", str(bumped),
-    ])
+    with _on_route(spark, route) as reads:
+        rc = cli.main([
+            "copy-row", "--sourceTable", table, "--destTable", table,
+            "--rowKeyByteString", key.decode(), "--override", "true",
+            "--timestampToUse", str(bumped),
+        ])
     assert rc == 0
+    # the copy-row's Get read the home region's file only
+    read = before[home]["cells"] if route == "driver" else None
+    assert reads == [(before[home]["file"], read)], reads
     after = _manifest(table)
     ranges = _file_ranges(table)
     # N range-disjoint files, exactly the ones the manifest names
@@ -202,8 +313,9 @@ def test_copy_row_in_place_rewrites_one_region(spark, customer, table):
     # a Get of the copied row reads 1 file and sees both versions
     table_df = cio.read_cells(spark, table)
     assert cio.held_regions(table_df) is not None
-    got = _scan(kv.point_get(table_df, key))
-    assert got["numFiles"] == 1
+    with _on_route(spark, route) as reads:
+        got = _scan(kv.point_get(table_df, key))
+    _assert_read_home(got, reads, route, after[home])
     assert sorted(r[3] for r in got["rows"]) == [1704067200000] * 4 + [bumped] * 4
     siblings = [
         p for p in os.listdir(os.path.dirname(table))

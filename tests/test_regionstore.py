@@ -23,7 +23,15 @@ from symat_hbase_tools_spark.operators import kv
 from symat_hbase_tools_spark.operators.bulkload import bulk_load_cells
 from symat_hbase_tools_spark.sources import io as cio
 from symat_hbase_tools_spark.sources.cells import customer_cells
-from tests.test_regions import _manifest, _rows, _scan
+from tests.test_regions import (
+    ROUTES,
+    _assert_read_home,
+    _home,
+    _manifest,
+    _on_route,
+    _rows,
+    _scan,
+)
 
 N_REGIONS = 8
 
@@ -93,29 +101,37 @@ def test_range_pushdown_prunes_regions(spark, store):
 
 
 def test_point_get_touches_one_region(spark, store):
-    path, _, cells = store
+    """A Get reads its home region's file only, on both routes."""
+    path, meta, cells = store
     table = cio.read_cells(spark, path)
-    for key in (b"cust#00000000", b"cust#00000042", b"cust#00000149"):
-        got = _scan(kv.point_get(table, key))
-        assert got["rows"] == _rows(cells.filter(F.col("row") == key))
-        assert got["numFiles"] == 1
-    # below the first region's start: no region holds it, no file opens
-    got = _scan(kv.point_get(table, b"cust"))
-    assert got["rows"] == [] and got["numFiles"] == 0
+    for route in ROUTES:
+        for key in (b"cust#00000000", b"cust#00000042", b"cust#00000149"):
+            with _on_route(spark, route) as reads:
+                got = _scan(kv.point_get(table, key))
+            assert got["rows"] == _rows(cells.filter(F.col("row") == key)), route
+            _assert_read_home(got, reads, route, _home(meta, key))
+        # below the first region's start: no region holds it, no file opens
+        with _on_route(spark, route) as reads:
+            got = _scan(kv.point_get(table, b"cust"))
+        assert got["rows"] == [] and got["numFiles"] == 0 and reads == [], route
 
 
 def test_multi_get_in_filter(spark, store):
-    """3 Gets spread across the keyspace open at most 3 of the 8 regions."""
+    """3 Gets spread across the keyspace open at most 3 of the 8 regions,
+    on both routes."""
     path, _, cells = store
     table = cio.read_cells(spark, path)
     keys = [b"cust#00000001", b"cust#00000080", b"cust#00000149"]
-    got = _scan(
-        functools.reduce(
-            lambda a, b: a.unionByName(b), (kv.point_get(table, k) for k in keys)
-        )
-    )
-    assert got["numFiles"] <= 3
-    assert got["rows"] == _rows(cells.filter(F.col("row").isin(keys)))
+    for route in ROUTES:
+        with _on_route(spark, route) as reads:
+            got = _scan(
+                functools.reduce(
+                    lambda a, b: a.unionByName(b), (kv.point_get(table, k) for k in keys)
+                )
+            )
+        assert got["numFiles"] <= 3
+        assert len(reads) <= 3, reads
+        assert got["rows"] == _rows(cells.filter(F.col("row").isin(keys))), route
 
 
 def test_greater_than_excludes_boundary(spark, store):
@@ -142,6 +158,16 @@ def test_empty_range_reads_nothing(spark, store):
     for start, stop in ((b"cust#00000090", b"cust#00000030"), (b"cust#00000042",) * 2):
         got = _scan(kv.range_scan(table, start, stop))
         assert got["rows"] == [] and got["numFiles"] == 0
+
+
+def test_empty_range_plans_a_local_scan(spark, store):
+    """An empty range is a LocalTableScan: no file opens and no Python
+    worker starts (``createDataFrame([])`` scans a PythonRDD)."""
+    path, _, _ = store
+    got = kv.range_scan(cio.read_cells(spark, path), b"b", b"a")
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert got.collect() == []
 
 
 def test_non_key_filters_are_residual(spark, store):
